@@ -7,7 +7,7 @@ file:line in docstrings) as Catalyst-optimized DataFrame plans:
 
 - scan → parse → pair → filter → aggregate becomes
   Iceberg/parquet scan → window-lag deltas → predicate pushdown →
-  partial+final aggregation with mergeable sketches.
+  partial+final aggregation with mergeable histogram state.
 - one-bucket-per-run becomes per-minute/hour/day continuous aggregate
   tiers with gap-fill, Gorilla/delta-of-delta chunk compression,
   salted skew handling, and snapshot-checkpointed incremental refresh.

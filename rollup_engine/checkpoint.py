@@ -150,14 +150,24 @@ class SnapshotStore:
         removed_files = removed_rows = expired = 0
         for m in self.manifests():
             sid = m["snapshot_id"]
-            if sid > up_to or m.get("expired"):
+            if sid > up_to:
                 continue
-            # Commit order (round-6, r5 ADVICE): tombstone the manifest
-            # FIRST (atomic tmp+rename), THEN delete the data files.  A
-            # crash mid-loop then leaves only harmless orphan files that
-            # a re-run reclaims; the old order (delete, then commit)
-            # could leave a live manifest pointing at deleted parquet,
-            # turning valid-range reads into missing-file errors.
+            data_dir = os.path.join(self.root, "data", f"s{sid:08d}")
+            if m.get("expired"):
+                # Orphan sweep: a crash between the tombstone commit and
+                # the delete below leaves the data directory behind;
+                # reclaim it (and count its data files) on this re-run.
+                if os.path.isdir(data_dir):
+                    orphans = glob.glob(os.path.join(data_dir, "*.parquet"))
+                    removed_files += len(orphans)
+                    shutil.rmtree(data_dir, ignore_errors=True)
+                continue
+            # Commit order: tombstone the manifest FIRST (atomic
+            # tmp+rename), THEN delete the data files.  A crash mid-loop
+            # then leaves only orphan files that the sweep above
+            # reclaims; the opposite order (delete, then commit) could
+            # leave a live manifest pointing at deleted parquet, turning
+            # valid-range reads into missing-file errors.
             data_files = list(m["files"])
             removed_rows += sum(s["rows"] for s in m["lineage"].values())
             m["expired"] = True
@@ -174,10 +184,7 @@ class SnapshotStore:
                 if os.path.exists(p):
                     os.remove(p)
                 removed_files += 1
-            shutil.rmtree(
-                os.path.join(self.root, "data", f"s{sid:08d}"),
-                ignore_errors=True,
-            )
+            shutil.rmtree(data_dir, ignore_errors=True)
             expired += 1
         return {
             "expired_snapshots": expired,

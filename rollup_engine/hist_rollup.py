@@ -1,10 +1,11 @@
-"""All-JVM exact-tier rollup: histogram-as-array mergeable state.
+"""All-JVM exact-tier rollup: histogram-as-array mergeable state, the
+one engine every minute/hour/day tier runs on.
 
-The binary-sketch path (sketch_rollup.py) moves every delta row through
-the Arrow JVM↔Python boundary; measured, that transfer costs ~3.5 s per
-10M rows REGARDLESS of core count — a serial tax that caps scaling.
-This module keeps the mergeable per-bucket state inside the JVM as a
-sorted ``array<struct<v:long, c:long>>`` histogram column, so the whole
+A Python sketch path would move every delta row through the Arrow
+JVM↔Python boundary; measured, that transfer costs ~3.5 s per 10M rows
+REGARDLESS of core count — a serial tax that caps scaling.  This module
+keeps the mergeable per-bucket state inside the JVM as a sorted
+``array<struct<v:long, c:long>>`` histogram column, so the whole
 minute→hour→day cascade is expressible with built-in aggregates +
 ``explode`` and never leaves whole-stage codegen.
 
@@ -63,7 +64,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import sketches
 from .deltas import DELTA_COL
 from .rollup import ERR4, ERR5, error_flag
 from .schema import TIERS
@@ -92,14 +92,13 @@ HIST_ROLLUP_FIELDS = [
     T.StructField("err4xx_rate", T.DoubleType(), True),
     T.StructField("err5xx_rate", T.DoubleType(), True),
     T.StructField("hist", HIST_TYPE, True),
-    # Always NULL on this engine since round 3 (the quantized histogram
-    # IS the bounded overflow state); kept for schema compatibility with
-    # the binary-sketch engine and previously-written tier tables.
-    T.StructField("tdigest", T.BinaryType(), True),
 ]
-HIST_ROLLUP_SCHEMA = T.StructType(HIST_ROLLUP_FIELDS)
 
 _QS = {"lat_p50_ms": 0.5, "lat_p90_ms": 0.9, "lat_p99_ms": 0.99}
+
+# Distinct values a bucket may hold exactly; buckets above it switch to
+# the log-quantized histogram below.
+HIST_MAX_BINS = 100_000
 
 # Log-quantizer base: relative half-width (γ-1)/2 ≈ 0.1% per bin.
 DD_GAMMA = 1.002
@@ -242,7 +241,6 @@ def _finalize_exact(
             ),
             "err4xx_rate": F.round(F.col("err4xx_cnt") / F.col("turn_count"), 4),
             "err5xx_rate": F.round(F.col("err5xx_cnt") / F.col("turn_count"), 4),
-            "tdigest": F.lit(None).cast("binary"),
         }
     )
     return agg.select(
@@ -273,7 +271,7 @@ def hist_rollup(
     deltas: DataFrame,
     tier: str = "minute",
     delta_col: str = DELTA_COL,
-    max_bins: int = sketches.HIST_MAX_BINS,
+    max_bins: int = HIST_MAX_BINS,
     extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Exact-tier rollup with JVM-resident mergeable histogram state.
@@ -316,6 +314,81 @@ def hist_rollup(
     )
 
 
+def _merge_hist_state(
+    rollup_df: DataFrame, bucket: Column, keys: list[str], caller: str
+) -> DataFrame:
+    """Explode a hist tier's per-bucket state into (value, count) rows,
+    re-keyed on ``bucket`` (a ``date_trunc`` target or an ``F.window``
+    struct, aliased ``bucket_start``), and merge equal values per new
+    group: the shared front half of ``hist_cascade`` and
+    ``hist_sliding``.
+
+    Exact scalars ride along the exploded relation attached to each
+    source bucket's first hist element (position 0), like the error
+    counters, so a quantized source bucket still merges with exact
+    count/min/max/sum/avg.
+
+    Duplicate values collapse across source buckets BEFORE the
+    finalize's distinct-count window (its count must be over distinct
+    values).  This groupBy is a SECOND exchange on top of the finalize's
+    window exchange — deliberate: its map-side combine compresses the
+    exploded relation before any shuffle (a hot quantized bucket
+    collapses ~source-bucket-count : 1, e.g. 60:1 for hour←minute),
+    which beats the one-exchange alternative (repartition(bucket) then
+    window) that would shuffle the exploded rows uncombined (measured
+    equal at sf0.1; combine wins at scale).
+    """
+    first = F.col("_pos") == 0
+    # posexplode silently DROPS null-array rows, which would vanish a
+    # bucket's counts/min/max/sum without any error — fail fast instead.
+    # The guard is a lazy per-row expression: zero driver jobs at plan
+    # build.
+    guarded = rollup_df.withColumn(
+        "hist",
+        F.when(F.col("hist").isNotNull(), F.col("hist")).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"{caller}: input row has hist=NULL — every tier row "
+                    "must carry hist state"
+                )
+            )
+        ),
+    )
+    return (
+        guarded.select(
+            bucket.alias("bucket_start"),
+            *keys,
+            F.posexplode("hist").alias("_pos", "_e"),
+            "err4xx_cnt",
+            "err5xx_cnt",
+            "lat_min_ms",
+            "lat_max_ms",
+            "lat_sum_ms",
+        )
+        .select(
+            "bucket_start",
+            *keys,
+            F.col("_e.v").alias("_v"),
+            F.col("_e.c").alias("_c"),
+            # attribute the source bucket's exact carries once (pos 0)
+            F.when(first, F.col("err4xx_cnt")).otherwise(F.lit(0)).alias("_e4"),
+            F.when(first, F.col("err5xx_cnt")).otherwise(F.lit(0)).alias("_e5"),
+            F.when(first, F.col("lat_min_ms")).alias("_xmin"),
+            F.when(first, F.col("lat_max_ms")).alias("_xmax"),
+            F.when(first, F.col("lat_sum_ms")).otherwise(F.lit(0)).alias("_xsum"),
+        )
+        .groupBy("bucket_start", *keys, "_v")
+        .agg(
+            F.sum("_c").alias("_c"),
+            F.sum("_e4").alias("_e4"),
+            F.sum("_e5").alias("_e5"),
+            F.min("_xmin").alias("_xmin"),
+            F.max("_xmax").alias("_xmax"),
+            F.sum("_xsum").alias("_xsum"),
+        )
+    )
+
+
 def hist_sliding(
     rollup_df: DataFrame,
     length: str = "5 minutes",
@@ -337,68 +410,18 @@ def hist_sliding(
     minutes, refreshed every minute" at 100 TB reads the minute tier,
     not the events.
 
-    Exact carries (count/min/max/sum/avg, error counters) ride the
-    pos-0 attribution exactly as in the cascade; each source bucket
-    contributes its carries once to EVERY window that contains it.
-    Percentiles re-derive from the merged (value, count) rows — exact
-    while every contributing bucket is exact, within the documented γ
-    bound otherwise; windows whose merged distinct-value count exceeds
-    ``max_bins`` re-quantize, so per-window state stays bounded no
-    matter how many buckets a window spans.
+    Each source bucket contributes its exact carries once to EVERY
+    window that contains it.  Percentiles re-derive from the merged
+    (value, count) rows — exact while every contributing bucket is
+    exact, within the documented γ bound otherwise; windows whose merged
+    distinct-value count exceeds ``max_bins`` re-quantize, so per-window
+    state stays bounded no matter how many buckets a window spans.
     """
     keys = list(extra_keys or [])
-    first = F.col("_pos") == 0
-    guarded = rollup_df.withColumn(
-        "hist",
-        F.when(F.col("hist").isNotNull(), F.col("hist")).otherwise(
-            F.raise_error(
-                F.lit(
-                    "hist_sliding: input row has hist=NULL (sketch-tier "
-                    "row?) — sliding windows need hist-engine tiers"
-                )
-            )
-        ),
-    )
-    h = (
-        guarded.select(
-            "bucket_start",
-            *keys,
-            F.posexplode("hist").alias("_pos", "_e"),
-            "err4xx_cnt",
-            "err5xx_cnt",
-            "lat_min_ms",
-            "lat_max_ms",
-            "lat_sum_ms",
-        )
-        .select(
-            "bucket_start",
-            *keys,
-            F.col("_e.v").alias("_v"),
-            F.col("_e.c").alias("_c"),
-            F.when(first, F.col("err4xx_cnt")).otherwise(F.lit(0)).alias("_e4"),
-            F.when(first, F.col("err5xx_cnt")).otherwise(F.lit(0)).alias("_e5"),
-            F.when(first, F.col("lat_min_ms")).alias("_xmin"),
-            F.when(first, F.col("lat_max_ms")).alias("_xmax"),
-            F.when(first, F.col("lat_sum_ms")).otherwise(F.lit(0)).alias("_xsum"),
-        )
-        # Expand (one output row per containing window) happens HERE,
-        # then the map-side combine compresses duplicate values within
-        # each window before the shuffle — same two-exchange shape as
-        # the cascade.
-        .groupBy(F.window("bucket_start", length, hop).alias("_win"), *keys, "_v")
-        .agg(
-            F.sum("_c").alias("_c"),
-            F.sum("_e4").alias("_e4"),
-            F.sum("_e5").alias("_e5"),
-            F.min("_xmin").alias("_xmin"),
-            F.max("_xmax").alias("_xmax"),
-            F.sum("_xsum").alias("_xsum"),
-        )
-        .select(F.col("_win.start").alias("bucket_start"), *keys, "_v", "_c", "_e4", "_e5", "_xmin", "_xmax", "_xsum")
-    )
-    out = _finalize_from_hist_rows(
-        h, max_bins=sketches.HIST_MAX_BINS, extra_keys=keys
-    )
+    h = _merge_hist_state(
+        rollup_df, F.window("bucket_start", length, hop), keys, "hist_sliding"
+    ).withColumn("bucket_start", F.col("bucket_start.start"))
+    out = _finalize_from_hist_rows(h, max_bins=HIST_MAX_BINS, extra_keys=keys)
     return out.select(
         "bucket_start",
         *keys,
@@ -412,82 +435,20 @@ def hist_cascade(
     """Re-aggregate a finer hist-rollup tier into ``to_tier`` without
     touching raw data — one lazy plan, no driver actions.
 
-    Every input row must carry a non-null ``hist`` (the invariant this
-    engine maintains since round 3; binary-sketch rows belong to
-    sketch_rollup/retention).  Exact scalars ride along the exploded
-    relation attached to each source bucket's first hist element
-    (position 0), exactly like the error counters, so a quantized
-    source bucket still cascades with exact count/min/max/sum/avg.
-    Percentiles re-derive from the merged (value, count) rows —
+    Every input row must carry a non-null ``hist``; a NULL one fails the
+    job.  Percentiles re-derive from the merged (value, count) rows —
     exact when every contributing bucket was exact, within the
     documented γ bound otherwise.
     """
     t = TIERS[to_tier]
     keys = list(extra_keys or [])
-    target = F.date_trunc(t.duckdb_trunc, F.col("bucket_start"))
-    first = F.col("_pos") == 0
-    # posexplode silently DROPS null-array rows, which would vanish a
-    # bucket's counts/min/max/sum without any error — fail fast instead.
-    # Rows with hist=NULL (binary-sketch tiers) must go through
-    # sketch_rollup's cascade, never this one.  The guard is a lazy
-    # per-row expression: zero driver jobs at plan build.
-    guarded = rollup_df.withColumn(
-        "hist",
-        F.when(F.col("hist").isNotNull(), F.col("hist")).otherwise(
-            F.raise_error(
-                F.lit(
-                    "hist_cascade: input row has hist=NULL (sketch-tier "
-                    "row?) — cascade it with sketch_rollup instead"
-                )
-            )
-        ),
+    h = _merge_hist_state(
+        rollup_df,
+        F.date_trunc(t.duckdb_trunc, F.col("bucket_start")),
+        keys,
+        "hist_cascade",
     )
-    h = (
-        guarded.select(
-            target.alias("bucket_start"),
-            *keys,
-            F.posexplode("hist").alias("_pos", "_e"),
-            "err4xx_cnt",
-            "err5xx_cnt",
-            "lat_min_ms",
-            "lat_max_ms",
-            "lat_sum_ms",
-        )
-        .select(
-            "bucket_start",
-            *keys,
-            F.col("_e.v").alias("_v"),
-            F.col("_e.c").alias("_c"),
-            # attribute the source bucket's exact carries once (pos 0)
-            F.when(first, F.col("err4xx_cnt")).otherwise(F.lit(0)).alias("_e4"),
-            F.when(first, F.col("err5xx_cnt")).otherwise(F.lit(0)).alias("_e5"),
-            F.when(first, F.col("lat_min_ms")).alias("_xmin"),
-            F.when(first, F.col("lat_max_ms")).alias("_xmax"),
-            F.when(first, F.col("lat_sum_ms")).otherwise(F.lit(0)).alias("_xsum"),
-        )
-        # collapse duplicate values across source buckets BEFORE the
-        # distinct-count window (its count must be over distinct values).
-        # This groupBy is a SECOND exchange on top of the finalize's
-        # window exchange — deliberate: its map-side combine compresses
-        # the exploded relation before any shuffle (a hot quantized
-        # bucket collapses ~source-bucket-count : 1, e.g. 60:1 for
-        # hour←minute), which beats the one-exchange alternative
-        # (repartition(bucket) then window) that would shuffle the
-        # exploded rows uncombined (measured equal at sf0.1; combine
-        # wins at scale).
-        .groupBy("bucket_start", *keys, "_v")
-        .agg(
-            F.sum("_c").alias("_c"),
-            F.sum("_e4").alias("_e4"),
-            F.sum("_e5").alias("_e5"),
-            F.min("_xmin").alias("_xmin"),
-            F.max("_xmax").alias("_xmax"),
-            F.sum("_xsum").alias("_xsum"),
-        )
-    )
-    out = _finalize_from_hist_rows(
-        h, max_bins=sketches.HIST_MAX_BINS, extra_keys=keys
-    )
+    out = _finalize_from_hist_rows(h, max_bins=HIST_MAX_BINS, extra_keys=keys)
     return out.withColumn("tier", F.lit(to_tier)).select(
         "tier",
         "bucket_start",

@@ -31,11 +31,17 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .checkpoint import SnapshotStore
 from .deltas import DELTA_COL
-from .hist_rollup import HIST_ROLLUP_SCHEMA, hist_cascade, hist_rollup
+from .hist_rollup import HIST_ROLLUP_FIELDS, hist_cascade, hist_rollup
 from .transcripts import clean
+
+_TIER_SCHEMA = T.StructType(
+    [*HIST_ROLLUP_FIELDS, T.StructField("tier", T.StringType())]
+)
+_TIER_COLS = ["tier", *[f.name for f in HIST_ROLLUP_FIELDS]]
 
 
 class IncrementalRollup:
@@ -72,12 +78,14 @@ class IncrementalRollup:
         return os.path.join(self.workdir, f"conv_state_v{version:08d}")
 
     def read_rollup(self, spark: SparkSession, tier: str | None = None) -> DataFrame:
+        """The committed tier, projected to the current tier columns —
+        tier files written by older engine versions may carry extra
+        columns (e.g. a since-dropped sketch column)."""
         ck = self.checkpoint()
         if ck["version"] == 0:
-            return spark.createDataFrame(
-                [], HIST_ROLLUP_SCHEMA.add("tier", "string")
-            ).select("tier", *[f.name for f in HIST_ROLLUP_SCHEMA.fields])
-        return spark.read.parquet(self.rollup_path(ck["version"], tier))
+            return spark.createDataFrame([], _TIER_SCHEMA).select(*_TIER_COLS)
+        path = self.rollup_path(ck["version"], tier)
+        return spark.read.parquet(path).select(*_TIER_COLS)
 
     # -------------------------------------------------------------- run
 

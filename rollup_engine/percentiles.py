@@ -13,7 +13,7 @@ We mirror that contract:
 - ``exact_nearest_rank_global`` — two-pass distributed-sort exact path
   for arbitrarily large single groups (rank via row_number + count);
   used by the dedicated exact-percentile query and parity tests.
-- t-digest (sketches.py) — the mergeable path for the tier cascade.
+- ``hist_rollup`` — the mergeable histogram state for the tier cascade.
 """
 
 from __future__ import annotations
@@ -68,8 +68,8 @@ def exact_nearest_rank(
     values).  With keys=[] that is ONE task over the global distinct
     domain — fine for ms-valued latencies (≤ ~10⁷ distinct covers deltas
     up to ~3 hours; a single 10⁷-row sort task is ~1 s), NOT fine for
-    unbounded float measures.  For those, use hist_rollup (splits
-    overflow buckets onto distributed t-digests) or approx_nearest_rank;
+    unbounded float measures.  For those, use hist_rollup (log-quantizes
+    overflow buckets into a bounded histogram) or approx_nearest_rank;
     this function is the exact/audit tier by contract.
     """
     keys = keys or []

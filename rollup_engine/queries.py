@@ -161,11 +161,12 @@ _STD_COLS = [
 
 
 def q_rollup_sketch_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-vectorized sketch-carrying rollup — must equal the SQL
-    minute rollup exactly (histogram sketch is lossless)."""
-    from .sketch_rollup import sketch_rollup
+    """Minute tier carrying mergeable histogram state (all-JVM hist
+    engine) — must equal the SQL minute rollup exactly (the histogram is
+    lossless below ``HIST_MAX_BINS`` distinct values per bucket)."""
+    from .hist_rollup import hist_rollup
 
-    return sketch_rollup(_deltas(spark, sf_dir), "minute").select(*_STD_COLS)
+    return hist_rollup(_deltas(spark, sf_dir), "minute").select(*_STD_COLS)
 
 
 def q_rollup_hour_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,14 +180,12 @@ def q_rollup_hour_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rollup_day_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """minute→hour→day double cascade (Arrow sketch path this time —
-    the driver thereby verifies BOTH cascade engines) vs direct
-    day-rollup oracle."""
-    from .retention import cascade
-    from .sketch_rollup import sketch_rollup
+    """minute→hour→day double cascade by histogram-state merge vs a
+    direct day-rollup oracle: two merges of merged state stay exact."""
+    from .hist_rollup import hist_cascade, hist_rollup
 
-    minute = sketch_rollup(_deltas(spark, sf_dir), "minute")
-    return cascade(cascade(minute, "hour"), "day").select(*_STD_COLS)
+    minute = hist_rollup(_deltas(spark, sf_dir), "minute")
+    return hist_cascade(hist_cascade(minute, "hour"), "day").select(*_STD_COLS)
 
 
 def q_rollup_month_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,13 +222,12 @@ def q_rollup_by_role(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rollup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-defusing salted rollup (K=4 shards per bucket, merged) vs
-    the plain hour oracle — salting must not change results."""
-    from .sketch_rollup import sketch_rollup
+    """Hot-bucket-safe hour rollup vs the plain hour oracle.  The hist
+    engine's first exchange is keyed on (bucket, value), so one hot
+    bucket already spreads across tasks without bucket salting."""
+    from .hist_rollup import hist_rollup
 
-    return sketch_rollup(_deltas(spark, sf_dir), "hour", salt_buckets=4).select(
-        *_STD_COLS
-    )
+    return hist_rollup(_deltas(spark, sf_dir), "hour").select(*_STD_COLS)
 
 
 def q_rollup_textlen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,8 +1312,8 @@ _DRIVER_HEAD = [
     "embedding_pairs",
 ]
 _DRIVER_TAIL = [
-    "rollup_sketch_minute",  # same oracle/result as rollup_minute; t-digest engine pytest-pinned
-    "rollup_day_cascade",  # same hist-cascade engine as rollup_hour_cascade (day tier)
+    "rollup_sketch_minute",  # same oracle/result as rollup_minute; hist minute tier pytest-pinned
+    "rollup_day_cascade",  # hist_cascade as in rollup_hour_cascade, one level deeper; pytest-pinned
     "rollup_by_role_hist",  # reuses rollup_by_role's oracle; keyed hist engine pytest-pinned
     "ann_lsh_indexed",  # reuses ann_lsh's oracle; partition-pruned plan pytest-pinned
     "ann_ivf_indexed",  # reuses ann_ivf's oracle; plan pytest-pinned
@@ -1324,7 +1322,7 @@ _DRIVER_TAIL = [
     # round-5 additions, displaced by the five new unique gates
     # (time_weighted_avg, ohlc_minute, rollup_5min, corr_load_latency,
     # prom_histogram):
-    "rollup_salted",  # reuses rollup_hour's oracle verbatim (salting must not change results)
+    "rollup_salted",  # reuses rollup_hour's oracle verbatim; hot-bucket hist plan pytest-pinned
     "rollup_day",  # same rollup()/tier code path as the recorded minute+hour gates
     "topk_convs",  # global top-k; the recorded topk_convs_hourly exercises the rank machinery
     "token_stats",  # groupBy over the recorded text_features' fingerprint relation

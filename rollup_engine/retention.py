@@ -1,124 +1,28 @@
-"""Tier cascade + retention expiry.
+"""Retention: tier expiry, the stitched serving view and the
+resolution router over the hist tiers.
 
 The reference achieves "continuous monitoring" by re-running the whole
-pipeline per minute via cron (/root/reference/README.md:126-147) and its
-Prometheus mode recomputes everything per scrape
-(/root/reference/src/http_handler/mod.rs:16-29).  Our engine replaces
-recompute-per-read with a rollup cascade: the minute tier is the only
-pass over raw turns; hour and day tiers are *merges of the minute tier's
-mergeable state* (counters add, min/max fold, sketches merge) — at
-10^12 turns this is the difference between re-reading 100 TB and
-re-reading a few MB of sketches.
+pipeline per minute via cron, and its Prometheus mode recomputes
+everything per scrape.  Our engine replaces recompute-per-read with a
+rollup cascade: the minute tier is the only pass over raw turns; hour
+and day tiers are merges of the minute tier's mergeable histogram state
+(``hist_rollup.hist_cascade``: counters add, min/max fold, (value,
+count) rows re-aggregate) — at 10^12 turns this is the difference
+between re-reading 100 TB and re-reading a few MB of tier state.
 
-Exactness: with the sparse-histogram sketch the cascaded percentiles are
-bit-identical to a direct rollup at the coarser tier (pinned by the
-rollup_hour_cascade oracle query); once a bucket degrades to t-digest
-the cascade is approximate — the same contract as the reference's >10k
-reservoir (/root/reference/Cargo.toml:20-21).
+Exactness: cascaded percentiles are bit-identical to a direct rollup at
+the coarser tier while every bucket holds ≤ ``HIST_MAX_BINS`` distinct
+values (pinned by the rollup_hour_cascade and rollup_day_cascade oracle
+gates); above that the log-quantized histogram bounds the relative error
+(see ``hist_rollup``).
 """
 
 from __future__ import annotations
 
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import sketches
 from .schema import TIERS
-from .sketch_rollup import SKETCH_ROLLUP_FIELDS
-
-_QS = (0.5, 0.9, 0.99)
-
-
-_SKETCH_MERGE_SCHEMA = T.StructType(
-    [
-        T.StructField("_target", T.TimestampType(), False),
-        T.StructField("lat_p50_ms", T.LongType(), True),
-        T.StructField("lat_p90_ms", T.LongType(), True),
-        T.StructField("lat_p99_ms", T.LongType(), True),
-        T.StructField("sketch", T.BinaryType(), True),
-    ]
-)
-
-
-def _merge_sketch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    sk = sketches.merge([b for b in pdf["sketch"] if b is not None])
-    if sk is not None:
-        p50, p90, p99 = (int(q) for q in sketches.quantiles(sk, list(_QS)))
-    else:
-        p50 = p90 = p99 = None
-    return pd.DataFrame(
-        [
-            {
-                "_target": pdf["_target"].iloc[0],
-                "lat_p50_ms": p50,
-                "lat_p90_ms": p90,
-                "lat_p99_ms": p99,
-                "sketch": sk,
-            }
-        ]
-    )
-
-
-def merge_rollup_rows(df: DataFrame, bucket_expr: Column) -> DataFrame:
-    """Group sketch-rollup rows by a (re)computed bucket and merge.
-
-    Hybrid plan: counters/min/max/sum fold in a plain JVM hash aggregate
-    (whole-stage codegen); ONLY (bucket, sketch) rows cross into Python
-    for the sketch merge (applyInPandas), and the two tiny aggregates
-    join back on the bucket.  Measured ~6× faster than pushing whole
-    rows through applyInPandas.  Group size is bounded by the fan-in
-    (60 minutes → 1 hour, or K salt shards), so the full-group-in-memory
-    requirement of applyInPandas is safe.
-    """
-    keyed = df.withColumn("_target", bucket_expr)
-    jvm = keyed.groupBy("_target").agg(
-        F.sum("turn_count").alias("turn_count"),
-        F.min("lat_min_ms").alias("lat_min_ms"),
-        F.max("lat_max_ms").alias("lat_max_ms"),
-        F.sum("lat_sum_ms").alias("lat_sum_ms"),
-        F.sum("err4xx_cnt").alias("err4xx_cnt"),
-        F.sum("err5xx_cnt").alias("err5xx_cnt"),
-    )
-    nonzero = F.col("turn_count") > 0
-    jvm = jvm.withColumns(
-        {
-            "lat_avg_ms": F.when(
-                nonzero, F.floor(F.col("lat_sum_ms") / F.col("turn_count"))
-            ).cast("long"),
-            "err4xx_rate": F.when(
-                nonzero, F.round(F.col("err4xx_cnt") / F.col("turn_count"), 4)
-            ),
-            "err5xx_rate": F.when(
-                nonzero, F.round(F.col("err5xx_cnt") / F.col("turn_count"), 4)
-            ),
-        }
-    )
-    py = (
-        keyed.select("_target", "sketch")
-        .groupBy("_target")
-        .applyInPandas(_merge_sketch_group, _SKETCH_MERGE_SCHEMA)
-    )
-    return (
-        jvm.join(py, "_target")
-        .withColumnRenamed("_target", "bucket_start")
-        .select(*[f.name for f in SKETCH_ROLLUP_FIELDS])
-    )
-
-
-def cascade(rollup_df: DataFrame, to_tier: str) -> DataFrame:
-    """Re-aggregate a finer sketch-rollup tier into ``to_tier``."""
-    t = TIERS[to_tier]
-    merged = merge_rollup_rows(
-        rollup_df.drop("tier"),
-        F.date_trunc(t.duckdb_trunc, F.col("bucket_start")),
-    )
-    return merged.withColumn("tier", F.lit(to_tier)).select(
-        "tier", *[f.name for f in SKETCH_ROLLUP_FIELDS]
-    )
-
 
 _TIER_SECS = {
     "minute": 60,

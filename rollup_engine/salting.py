@@ -2,8 +2,9 @@
 
 Two different skew hazards, two mechanisms:
 
-- hot BUCKET in the aggregate → ``sketch_rollup(salt_buckets=K)``
-  (shard the bucket, merge sketches — associative, tested identical).
+- hot BUCKET in the aggregate → nothing to do: ``hist_rollup``'s first
+  exchange is keyed on (bucket, value), so a hot bucket's rows already
+  spread across tasks (pinned by tests/test_hist_rollup.py).
 - hot CONVERSATION in the window → this module.  A conversation with
   10^9 turns lands entirely in one task under
   ``Window.partitionBy(conv_id)`` — salting a *window* is harder than

@@ -28,29 +28,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
     ]
 )
 
-# One rollup row per (tier, bucket): the reference's single
-# RequestLogAnalyzerResult row (/root/reference/src/result/mod.rs:3-8)
-# generalized to a keyed continuous aggregate.  ``lat_sum_ms`` is kept so
-# higher tiers can recompute exact averages without raw data; ``tdigest``
-# carries the mergeable quantile sketch for the cascade.
-ROLLUP_SCHEMA = T.StructType(
-    [
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("bucket_start", T.TimestampType(), False),
-        T.StructField("turn_count", T.LongType(), False),
-        T.StructField("lat_min_ms", T.LongType(), True),
-        T.StructField("lat_max_ms", T.LongType(), True),
-        T.StructField("lat_avg_ms", T.LongType(), True),
-        T.StructField("lat_p50_ms", T.LongType(), True),
-        T.StructField("lat_p90_ms", T.LongType(), True),
-        T.StructField("lat_p99_ms", T.LongType(), True),
-        T.StructField("lat_sum_ms", T.LongType(), True),
-        T.StructField("err4xx_rate", T.DoubleType(), True),
-        T.StructField("err5xx_rate", T.DoubleType(), True),
-        T.StructField("tdigest", T.BinaryType(), True),
-    ]
-)
-
 
 @dataclass(frozen=True)
 class Tier:
@@ -62,7 +39,8 @@ class Tier:
 
 # Retention cascade: minute (hot) → hour → day (cold).  The scale knob:
 # at 10^12 turns, the minute tier is the only one touching raw data; hour
-# and day are sketch-merges over the tier below (retention.py).
+# and day merge the histogram state of the tier below
+# (hist_rollup.hist_cascade).
 TIERS: dict[str, Tier] = {
     "minute": Tier("minute", "1 minute", "minute", retention_buckets=7 * 24 * 60),
     "hour": Tier("hour", "1 hour", "hour", retention_buckets=90 * 24),

@@ -7,12 +7,13 @@ the budget have no official row.  This script is the committed
 completeness artifact: it executes every ``queries()`` entry at the
 given scale factor, compares it to its ``oracle_sql()`` entry with the
 same rows+schema+values semantics as the driver (see
-tests/oracle_harness.py), and writes ``GATES_FULL_r{N}.json`` at the
-repo root.
+tests/oracle_harness.py), and writes the record to ``--out`` (default
+``.gatework/GATES_FULL.json``, gitignored; pass ``--out
+GATES_FULL_r{N}.json`` to write a record meant for committing).
 
 Usage:
     python scripts/run_all_gates.py [--sf-dir /root/testdata/sf0.01] \
-        [--out GATES_FULL_r05.json] [--only name1,name2]
+        [--out GATES_FULL_r07.json] [--only name1,name2]
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=os.path.join(REPO, "GATES_FULL_r05.json"))
+    ap.add_argument("--out", default=os.path.join(REPO, ".gatework", "GATES_FULL.json"))
     ap.add_argument("--only", default=None, help="comma-separated gate names")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     args = ap.parse_args()
@@ -108,6 +109,7 @@ def main() -> int:
         "n_pass": n_pass,
         "elapsed_sec": round(time.time() - t0, 1),
     }
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(f"\n{n_pass}/{len(record)} gates pass -> {args.out}")

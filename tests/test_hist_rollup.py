@@ -4,10 +4,14 @@ contract — bounded state, exact scalars, ≤(γ-1)/2 percentile error."""
 
 from __future__ import annotations
 
+import datetime as dt
 import math
+import re
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from rollup_engine.deltas import with_deltas
 from rollup_engine.hist_rollup import hist_cascade, hist_rollup
@@ -37,6 +41,80 @@ def test_hist_rollup_matches_sql(spark):
     )
 
 
+def _nearest_rank(vals, q):
+    s = sorted(vals)
+    return s[max(1, math.ceil(q * len(s) - 1e-9)) - 1]
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.integers(min_value=0, max_value=10_000)
+            | st.integers(min_value=0, max_value=20),
+            min_size=1,
+            max_size=300,
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_hist_matches_nearest_rank(spark, buckets):
+    """Every random value list gets its own minute bucket, all in ONE
+    Spark job: each bucket's p50/p90/p99 is the nearest-rank value."""
+    from pyspark.sql import functions as F
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (t0 + dt.timedelta(minutes=i), v)
+        for i, vals in enumerate(buckets)
+        for v in vals
+    ]
+    d = spark.createDataFrame(rows, "ts timestamp, delta_ms long").withColumns(
+        {"_e4": F.lit(0).cast("long"), "_e5": F.lit(0).cast("long")}
+    )
+    got = {
+        r.bucket_start: (r.lat_p50_ms, r.lat_p90_ms, r.lat_p99_ms)
+        for r in hist_rollup(d, "minute").collect()
+    }
+    want = {
+        t0 + dt.timedelta(minutes=i): tuple(
+            _nearest_rank(vals, q) for q in (0.5, 0.9, 0.99)
+        )
+        for i, vals in enumerate(buckets)
+    }
+    assert got == want
+
+
+def test_hot_bucket_rollup_matches_sql(spark):
+    """One hour bucket holds 95% of the rows.  hist_rollup's first
+    exchange hash-partitions on (bucket_start, _v), so the hot bucket's
+    rows spread over tasks by value — no bucket salting needed — and
+    the result equals rollup()."""
+    from pyspark.sql import functions as F
+
+    from rollup_engine.rollup import rollup
+
+    i = F.col("id")
+    hour = F.when(i % 20 == 0, (i / 20).cast("long") % 24 + 1).otherwise(0)
+    d = spark.range(6000).select(
+        F.timestamp_seconds(F.lit(1_704_067_200) + hour * 3600 + i % 3600).alias("ts"),
+        (i * 7919 % 5000).alias("delta_ms"),
+        F.when(i % 13 == 0, "error:4xx")
+        .when(i % 17 == 0, "error:5xx")
+        .otherwise("ok")
+        .alias("tool"),
+    )
+    out = hist_rollup(d, "hour")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    # tree strings list the root first: the last exchange runs first
+    assert re.fullmatch(r"bucket_start#\d+, _v#\d+L?, \d+", exchanges[-1]), plan
+    pd.testing.assert_frame_equal(
+        _pdf(rollup(d, "hour")), _pdf(out), check_dtype=False
+    )
+
+
 def test_hist_cascade_exact(spark):
     d = _deltas(spark)
     minute = hist_rollup(d, "minute")
@@ -49,6 +127,23 @@ def test_hist_cascade_exact(spark):
         _pdf(hist_cascade(hist_cascade(minute, "hour"), "day")),
         check_dtype=False,
     )
+
+
+def test_hist_cascade_order_invariant(spark):
+    """Merging is independent of row order and partitioning: the hour
+    cascade of a reshuffled minute tier with quantized buckets equals
+    the one of the tier as built, hist included."""
+    from pyspark.sql import functions as F
+
+    minute = hist_rollup(_deltas(spark), "minute", max_bins=4)
+    a = hist_cascade(minute, "hour").collect()
+    b = hist_cascade(minute.repartition(7).orderBy(F.rand(3)), "hour").collect()
+    assert sorted(a) == sorted(b)
+
+
+def test_hist_cascade_empty_input(spark):
+    minute = hist_rollup(_deltas(spark), "minute").limit(0)
+    assert hist_cascade(minute, "hour").collect() == []
 
 
 def test_keyed_hist_rollup_and_cascade(spark):
@@ -104,7 +199,7 @@ def test_overflow_quantizes_hist(spark):
     """max_bins=4 forces every bucket with >4 distinct deltas onto the
     log-quantized histogram path: scalar metrics stay EXACT (mergeable
     carries), percentiles land within the γ bound, and the state stays
-    a non-null hist bounded by the fixed-γ bin count (tdigest unused)."""
+    a non-null hist bounded by the fixed-γ bin count."""
     from rollup_engine.hist_rollup import DD_GAMMA, DD_MAX_BINS
 
     d = _deltas(spark)
@@ -120,9 +215,7 @@ def test_overflow_quantizes_hist(spark):
     big = tiny.where("turn_count > 4").collect()
     assert big, "expected at least one overflowing day bucket"
     assert all(
-        r.hist is not None
-        and len(r.hist) <= 2 * DD_MAX_BINS + 1
-        and r.tdigest is None
+        r.hist is not None and len(r.hist) <= 2 * DD_MAX_BINS + 1
         for r in big
     )
 
@@ -177,12 +270,10 @@ def test_hot_bucket_overflow_is_bounded(spark):
     assert row.turn_count == n
     assert (row.lat_min_ms, row.lat_max_ms) == (1, n)
     assert row.lat_sum_ms == n * (n + 1) // 2
-    assert row.tdigest is None
     assert row.hist is not None
     # the 1..10⁶ domain needs ln(10⁶)/ln(γ) ≈ 6.9k log bins
     assert len(row.hist) <= math.ceil(math.log(n) / math.log(DD_GAMMA)) + 1
-    # fixed-γ quantizer bound: relative error ≤ (γ-1), far inside the
-    # old t-digest tolerances
+    # fixed-γ quantizer bound: relative error ≤ (γ-1)
     assert abs(row.lat_p50_ms - n // 2) <= (DD_GAMMA - 1) * n
     assert abs(row.lat_p90_ms - 0.9 * n) <= (DD_GAMMA - 1) * n
     assert abs(row.lat_p99_ms - 0.99 * n) <= (DD_GAMMA - 1) * n

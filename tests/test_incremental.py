@@ -284,13 +284,78 @@ def test_expire_crash_between_tombstone_and_delete_is_recoverable(
         store.read(spark, as_of=ck)
     # the orphaned data files are still on disk (nothing deleted)
     assert os.path.exists(os.path.join(store.root, "data", "s00000001"))
-    # re-run completes the reclaim (tombstoned manifests are skipped,
-    # their directories swept by the crash-recovery path or left as
-    # harmless orphans — subsequent refreshes are unaffected)
+    # re-run completes the reclaim: the tombstoned manifest's surviving
+    # directory is swept, and subsequent refreshes are unaffected
     res = store.expire_snapshots(up_to=ck, applied_watermark=ck)
     assert res["expired_snapshots"] == 0  # already tombstoned
+    assert res["removed_files"] > 0
+    assert not os.path.exists(os.path.join(store.root, "data", "s00000001"))
     again = job.refresh(spark)
     assert again == job.checkpoint()
+
+
+def test_expire_sweeps_orphaned_data_dir_of_tombstoned_manifest(data):
+    """A crash right after the tombstone commit leaves the snapshot's
+    data directory behind.  Tombstone a manifest by hand with its data
+    in place: the next expire_snapshots must remove the directory and
+    report its files in removed_files."""
+    _full, b1, _b2, store, _work = data
+    store.append(b1)
+    mpath = os.path.join(store.root, "_manifests", "v00000001.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    n_files = len(m["files"])
+    assert n_files > 0
+    m["expired"] = True
+    m["files"] = []
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    data_dir = os.path.join(store.root, "data", "s00000001")
+    assert os.path.isdir(data_dir)
+
+    res = store.expire_snapshots(up_to=1, applied_watermark=1)
+    assert not os.path.exists(data_dir)
+    assert res == {"expired_snapshots": 0, "removed_files": n_files, "removed_rows": 0}
+    # a second re-run finds nothing left to reclaim
+    res = store.expire_snapshots(up_to=1, applied_watermark=1)
+    assert res["removed_files"] == 0
+
+
+def test_refresh_over_tier_files_with_old_tdigest_column(spark, data):
+    """Tier files written before the always-NULL ``tdigest`` column was
+    dropped still carry it.  A refresh over such a store must merge
+    them (read_rollup projects to the current columns) and match a
+    one-shot rollup at every tier."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from rollup_engine.hist_rollup import hist_cascade
+
+    full, b1, b2, store, work = data
+    job = IncrementalRollup(store, work)
+    store.append(b1)
+    job.refresh(spark)
+    v = job.checkpoint()["version"]
+    for tier in ("minute", "hour", "day"):
+        path = job.rollup_path(v, tier)
+        spark.read.parquet(path).withColumn(
+            "tdigest", F.lit(None).cast("binary")
+        ).write.parquet(path + ".old")
+        shutil.rmtree(path)
+        os.rename(path + ".old", path)
+    assert "tdigest" in spark.read.parquet(job.rollup_path(v)).columns
+
+    store.append(b2)
+    job.refresh(spark)
+    minute = hist_rollup(with_deltas(clean(full)), "minute")
+    pd.testing.assert_frame_equal(
+        _pdf(job.read_rollup(spark)), _pdf(minute), check_dtype=False
+    )
+    pd.testing.assert_frame_equal(
+        _pdf(job.read_rollup(spark, "day")),
+        _pdf(hist_cascade(hist_cascade(minute, "hour"), "day")),
+        check_dtype=False,
+    )
 
 
 def test_lateness_profile_measures_cross_batch_lateness(spark, data):

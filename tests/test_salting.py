@@ -48,14 +48,14 @@ def test_salted_deltas_tiny_chunks(spark, skewed):
 def test_salted_rollup_identical(spark, skewed):
     a = (
         hist_rollup(with_deltas(skewed), "minute")
-        .drop("hist", "tdigest", "tier")
+        .drop("hist", "tier")
         .toPandas()
         .set_index("bucket_start")
         .sort_index()
     )
     b = (
         hist_rollup(salted_deltas(skewed, chunk_size=64), "minute")
-        .drop("hist", "tdigest", "tier")
+        .drop("hist", "tier")
         .toPandas()
         .set_index("bucket_start")
         .sort_index()
