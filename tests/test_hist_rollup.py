@@ -4,14 +4,11 @@ contract — bounded state, exact scalars, ≤(γ-1)/2 percentile error."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 import re
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from rollup_engine.deltas import with_deltas
 from rollup_engine.hist_rollup import hist_cascade, hist_rollup
@@ -39,51 +36,6 @@ def test_hist_rollup_matches_sql(spark):
     pd.testing.assert_frame_equal(
         _pdf(rollup(d, "minute")), _pdf(hist_rollup(d, "minute")), check_dtype=False
     )
-
-
-def _nearest_rank(vals, q):
-    s = sorted(vals)
-    return s[max(1, math.ceil(q * len(s) - 1e-9)) - 1]
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.lists(
-            st.integers(min_value=0, max_value=10_000)
-            | st.integers(min_value=0, max_value=20),
-            min_size=1,
-            max_size=300,
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_hist_matches_nearest_rank(spark, buckets):
-    """Every random value list gets its own minute bucket, all in ONE
-    Spark job: each bucket's p50/p90/p99 is the nearest-rank value."""
-    from pyspark.sql import functions as F
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (t0 + dt.timedelta(minutes=i), v)
-        for i, vals in enumerate(buckets)
-        for v in vals
-    ]
-    d = spark.createDataFrame(rows, "ts timestamp, delta_ms long").withColumns(
-        {"_e4": F.lit(0).cast("long"), "_e5": F.lit(0).cast("long")}
-    )
-    got = {
-        r.bucket_start: (r.lat_p50_ms, r.lat_p90_ms, r.lat_p99_ms)
-        for r in hist_rollup(d, "minute").collect()
-    }
-    want = {
-        t0 + dt.timedelta(minutes=i): tuple(
-            _nearest_rank(vals, q) for q in (0.5, 0.9, 0.99)
-        )
-        for i, vals in enumerate(buckets)
-    }
-    assert got == want
 
 
 def test_hot_bucket_rollup_matches_sql(spark):
@@ -127,23 +79,6 @@ def test_hist_cascade_exact(spark):
         _pdf(hist_cascade(hist_cascade(minute, "hour"), "day")),
         check_dtype=False,
     )
-
-
-def test_hist_cascade_order_invariant(spark):
-    """Merging is independent of row order and partitioning: the hour
-    cascade of a reshuffled minute tier with quantized buckets equals
-    the one of the tier as built, hist included."""
-    from pyspark.sql import functions as F
-
-    minute = hist_rollup(_deltas(spark), "minute", max_bins=4)
-    a = hist_cascade(minute, "hour").collect()
-    b = hist_cascade(minute.repartition(7).orderBy(F.rand(3)), "hour").collect()
-    assert sorted(a) == sorted(b)
-
-
-def test_hist_cascade_empty_input(spark):
-    minute = hist_rollup(_deltas(spark), "minute").limit(0)
-    assert hist_cascade(minute, "hour").collect() == []
 
 
 def test_keyed_hist_rollup_and_cascade(spark):
