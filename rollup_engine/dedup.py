@@ -179,34 +179,6 @@ def _perm_params(k: int = MINHASH_PERMS) -> list[tuple[int, int]]:
     return params
 
 
-def shingle_hashes(text: Column, n: int = 5) -> Column:
-    """Base 31-bit hash per shingle (md5-derived, oracle-reproducible).
-
-    Materialize this as a column BEFORE fanning out the K permutations:
-    each permutation expression references the stored array, so shingle
-    construction + md5 run once per row instead of K times (measured
-    ~50× on the sf0.1 bench before this split)."""
-    return F.transform(
-        shingles(text, n), lambda s: F.pmod(md5_long(s), F.lit(_MERSENNE31))
-    )
-
-
-def minhash_from_hashes(hs: Column, k: int = MINHASH_PERMS) -> Column:
-    """Array of K minhash values over a pre-materialized hash array:
-    (a·h + b) mod 2^31−1 min-folded per permutation."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hs,
-                    lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE31),
-                )
-            )
-            for a, b in _perm_params(k)
-        ]
-    )
-
-
 def _cap_postings(rel: DataFrame, keys: list[str], cap: int) -> DataFrame:
     """Bound a posting list to ``cap`` ids per join key (deterministic:
     lowest ids survive).  A degenerate bucket — empty/boilerplate texts

@@ -64,7 +64,13 @@ def tune_shuffle_for_input(spark: SparkSession, input_bytes: int) -> int:
     partition count with the data and let AQE coalesce to the advisory
     size at runtime.  Called at plan-build time by the table loaders;
     returns the chosen count.
+
+    An ``input_bytes`` of 0 means the size is unknown (``input_size_bytes``
+    cannot stat object-store paths): the session setting is left as it
+    is and returned, so a submit-time value survives every loader.
     """
+    if input_bytes <= 0:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     want = max(cores, math.ceil(input_bytes / TARGET_PARTITION_BYTES))
     want = min(want, MAX_SHUFFLE_PARTITIONS)
@@ -73,9 +79,9 @@ def tune_shuffle_for_input(spark: SparkSession, input_bytes: int) -> int:
 
 
 def input_size_bytes(*paths: str) -> int:
-    """Total on-disk bytes of the given files/directories (local FS —
-    the sandbox case; object-store deployments pass sizes from their
-    catalog instead)."""
+    """Total on-disk bytes of the given files/directories on the local
+    FS; paths it cannot stat (``s3a://…`` and other object stores)
+    count 0, which ``tune_shuffle_for_input`` reads as unknown."""
     total = 0
     for p in paths:
         if os.path.isdir(p):

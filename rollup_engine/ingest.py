@@ -186,19 +186,6 @@ def write_zorder_table(
             spark.conf.set(key, prev)
 
 
-def read_zorder(
-    spark: SparkSession, path: str, hash_col: str | None = ZORDER_HASH_COL
-) -> DataFrame:
-    """Plain scan of a z-ordered table, layout column dropped (pass the
-    same ``hash_col`` the table was written with; None = nothing to
-    drop).  Time pruning needs no helper — any ``ts`` range predicate
-    hits the sharpened footer stats directly."""
-    df = spark.read.parquet(path)
-    if hash_col and hash_col in df.columns:
-        df = df.drop(hash_col)
-    return df
-
-
 def read_zorder_convs(
     spark: SparkSession,
     path: str,

@@ -6,10 +6,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ann, dedup, multimodal, textops
+from . import ann, dedup, textops
 from .fanout import fan_out
 
 # --------------------------------------------------------------- loaders
@@ -407,10 +407,26 @@ def q_source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source")
 
 
+def media_meta(docs: DataFrame) -> DataFrame:
+    """Per-document media metadata as one JVM projection: UTF-8 byte
+    length, sha256 hex digest, and stand-in dimensions 64 + the digest's
+    first (width) and second (height) byte.  NULL text gives NULLs."""
+    sha = F.sha2(F.col("text"), 256)
+
+    def dim(pos: int) -> Column:
+        return F.conv(F.substring(sha, pos, 2), 16, 10).cast("int") + 64
+
+    return docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.octet_length("text").cast("long").alias("n_bytes"),
+        sha.alias("sha256"),
+        dim(1).alias("width"),
+        dim(3).alias("height"),
+    )
+
+
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = multimodal.media_from_documents(_docs(spark, sf_dir))
-    feats = multimodal.extract_features(media, fake=True)
-    return feats.select("media_id", "n_bytes", "sha256", "width", "height")
+    return media_meta(_docs(spark, sf_dir))
 
 
 DATA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -1,5 +1,6 @@
-"""Dump formatted physical plans of the flagship query paths into
-BENCH/PLANS.md — the plan-audit artifact behind the pytest plan pins:
+"""Dump formatted physical plans of the flagship query paths into one
+markdown page (committed as BENCH/PLANS.md) — the plan-audit artifact
+behind the pytest plan pins:
 what actually runs (pushdown, partial aggregation, exchange count,
 WholeStageCodegen spans) on one page, regenerable any round.
 
@@ -8,6 +9,9 @@ writes): building these plans runs zero to a handful of tiny setup
 jobs, so the script is cheap.
 
     python scripts/dump_plans.py [--sf /root/testdata/sf0.001]
+
+Writes ``.gatework/PLANS.md`` (gitignored) by default; pass ``--out
+BENCH/PLANS.md`` for a record meant to be committed.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument(
-        "--out", default=os.path.join(REPO, "BENCH", "PLANS.md")
+        "--out", default=os.path.join(REPO, ".gatework", "PLANS.md")
     )
     args = ap.parse_args()
 
@@ -55,7 +59,7 @@ def main() -> None:
         f"`spark.explain('formatted')` at {args.sf} (plan shapes are "
         "scale-independent; the pins in tests/test_plans.py assert the "
         "load-bearing properties).  Regenerate: "
-        "`python scripts/dump_plans.py`.",
+        "`python scripts/dump_plans.py --out BENCH/PLANS.md`.",
     ]
     for name in PLAN_QUERIES:
         df = QUERIES[name](spark, args.sf)
@@ -63,6 +67,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         lines += ["", f"## {name}", "", "```", plan.rstrip(), "```"]
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"{len(PLAN_QUERIES)} plans -> {args.out}")

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from rollup_engine import ann, dedup, multimodal, textops
+from rollup_engine import ann, dedup, textops
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -219,92 +219,38 @@ def test_pii_rule_order_email_digits_not_numbered(spark):
     assert got == "ping [EMAIL] now"
 
 
-def test_multimodal_stub_determinism(spark):
-    d = _docs(spark, [BASE, "short"])
-    media = multimodal.media_from_documents(
-        d.withColumn("doc_id", F.col("doc_id"))
+def test_multimodal_stub_determinism(spark, tmp_path):
+    """multimodal_meta equals its DuckDB oracle on texts that begin with
+    an image magic prefix ('BM', 'GIF8'), a plain sentence, an empty
+    string and NULL, and does not depend on the partitioning."""
+    import duckdb
+    import pandas as pd
+
+    from rollup_engine.queries import ORACLES
+    from rollup_engine.queries_data import q_multimodal_meta
+
+    from .oracle_harness import compare
+
+    texts = [
+        "BMW sells cars in many countries today",
+        "GIF89a is a file format name",
+        BASE,
+        "",
+        None,
+    ]
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet"
     )
-    f1 = multimodal.extract_features(media).orderBy("media_id").collect()
-    f2 = multimodal.extract_features(media.repartition(3)).orderBy("media_id").collect()
-    assert [r.sha256 for r in f1] == [r.sha256 for r in f2]
-    assert [r.feature for r in f1] == [r.feature for r in f2]
-    assert all(len(r.feature) == 8 for r in f1)
-    assert all(64 <= r.width <= 319 for r in f1)
-
-
-def test_multimodal_real_decode_unimplemented():
-    """Unrecognized containers still fail fast without fake=True (full
-    pixel decode needs an image library the sandbox lacks)."""
-    with pytest.raises(NotImplementedError):
-        multimodal._decode_image(b"bytes", fake=False)
-
-
-# Committed tiny real image containers — hand-assembled headers, the
-# same bytes an encoder would emit for the leading structures.
-_PNG_97x43 = (
-    b"\x89PNG\r\n\x1a\n"                      # magic
-    + (13).to_bytes(4, "big") + b"IHDR"        # IHDR chunk
-    + (97).to_bytes(4, "big") + (43).to_bytes(4, "big")
-    + b"\x08\x02\x00\x00\x00" + b"\x00" * 4    # bit depth/color + crc pad
-)
-_GIF_320x200 = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(
-    2, "little"
-) + b"\xf7\x00\x00"
-_BMP_12x8_TOPDOWN = (
-    b"BM" + (122).to_bytes(4, "little") + b"\x00" * 4
-    + (54).to_bytes(4, "little") + (40).to_bytes(4, "little")
-    + (12).to_bytes(4, "little")
-    + (-8).to_bytes(4, "little", signed=True)  # negative = top-down
-    + b"\x01\x00\x18\x00"
-)
-_JPEG_31x17 = (
-    b"\xff\xd8"                                # SOI
-    + b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-    + b"\xff\xdb" + (4).to_bytes(2, "big") + b"\x00\x00"  # DQT stub
-    + b"\xff\xc0" + (17).to_bytes(2, "big") + b"\x08"     # SOF0, precision
-    + (17).to_bytes(2, "big") + (31).to_bytes(2, "big")   # height, width
-    + b"\x03" + b"\x00" * 9
-)
-# Same frame, but with legal 0xFF fill/padding runs before the markers
-# (ITU T.81 §B.1.1.2) — the walk must skip the run, not read a fill
-# byte as a marker with a bogus length field (round-4 ADVICE finding).
-_JPEG_31x17_FILL = (
-    b"\xff\xd8"
-    + b"\xff\xff\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-    + b"\xff\xff\xff\xff\xc0" + (17).to_bytes(2, "big") + b"\x08"
-    + (17).to_bytes(2, "big") + (31).to_bytes(2, "big")
-    + b"\x03" + b"\x00" * 9
-)
-
-
-def test_jpeg_fill_bytes_skipped():
-    assert multimodal.parse_image_header(_JPEG_31x17_FILL) == (31, 17)
-
-
-def test_multimodal_real_header_decode(spark):
-    """Real stdlib header parsing: non-fake extract_features over
-    committed PNG/GIF/BMP/JPEG bytes yields the true dimensions."""
-    cases = {
-        1: (_PNG_97x43, 97, 43),
-        2: (_GIF_320x200, 320, 200),
-        3: (_BMP_12x8_TOPDOWN, 12, 8),
-        4: (_JPEG_31x17, 31, 17),
-    }
-    for payload, w, h in cases.values():
-        assert multimodal.parse_image_header(payload) == (w, h), payload[:8]
-    media = spark.createDataFrame(
-        [(mid, "image", bytearray(p), "image/x-test", len(p))
-         for mid, (p, _, _) in cases.items()],
-        multimodal.MEDIA_SCHEMA,
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
     )
-    rows = {
-        r.media_id: r
-        for r in multimodal.extract_features(media, fake=False).collect()
-    }
-    for mid, (payload, w, h) in cases.items():
-        assert (rows[mid].width, rows[mid].height) == (w, h)
-        assert rows[mid].n_bytes == len(payload)
-        assert len(rows[mid].feature) == 8
+    want = con.sql(ORACLES["multimodal_meta"]).df()
+
+    got = q_multimodal_meta(spark, str(tmp_path))
+    problems = compare(got, want)
+    assert not problems, problems
+    assert sorted(got.repartition(3).collect()) == sorted(got.collect())
 
 
 # ------------------------------------------------------- skew / scale caps
@@ -659,137 +605,6 @@ def test_dedup_clusters_random_vs_union_find(spark):
     assert got == want
 
 
-def _forward_filter(img: "np.ndarray", ftype: int) -> bytes:
-    """Apply a PNG forward filter row-wise (test-side reference,
-    independent of the decoder's inverse) and build the raw stream."""
-    import numpy as np
-
-    h, w, ch = img.shape
-    stride = w * ch
-    flat = img.reshape(h, stride).astype(np.int32)
-    out = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        row = flat[y]
-        left = np.concatenate([np.zeros(ch, np.int32), row[:-ch]])
-        upleft = np.concatenate([np.zeros(ch, np.int32), prev[:-ch]])
-        if ftype == 0:
-            enc = row
-        elif ftype == 1:
-            enc = row - left
-        elif ftype == 2:
-            enc = row - prev
-        elif ftype == 3:
-            enc = row - ((left + prev) >> 1)
-        elif ftype == 4:
-            p = left + prev - upleft
-            pa, pb, pc = (
-                np.abs(p - left), np.abs(p - prev), np.abs(p - upleft),
-            )
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft)
-            )
-            enc = row - pred
-        out.append(ftype)
-        out.extend((enc & 0xFF).astype(np.uint8).tobytes())
-        prev = row
-    return bytes(out)
-
-
-def test_png_roundtrip_exact():
-    """encode_png → decode_png is pixel-exact for gray/RGB/RGBA at
-    assorted sizes (the decoder is REAL: stdlib zlib + unfilters)."""
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    for shape in [(1, 1), (5, 3), (16, 16), (7, 31)]:
-        for ch in (None, 3, 4):
-            s = shape if ch is None else (*shape, ch)
-            img = rng.randint(0, 256, size=s, dtype=np.uint8).astype(np.uint8)
-            px = multimodal.decode_png(multimodal.encode_png(img))
-            want = img[:, :, None] if img.ndim == 2 else img
-            assert np.array_equal(px, want), (shape, ch)
-
-
-def test_png_decoder_all_filters():
-    """The decoder inverts every standard filter type (1 Sub, 2 Up,
-    3 Average, 4 Paeth), validated against an independent test-side
-    forward-filter implementation."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    rng = np.random.RandomState(9)
-    img = rng.randint(0, 256, size=(11, 6, 3), dtype=np.uint8)
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    for ftype in (0, 1, 2, 3, 4):
-        raw = _forward_filter(img, ftype)
-        payload = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 6, 11, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b"")
-        )
-        px = multimodal.decode_png(payload)
-        assert np.array_equal(px, img), f"filter {ftype}"
-
-
-def test_png_decoder_rejects_unsupported():
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    # palette PNG (ctype 3) → honest ValueError, and the pipeline falls
-    # back to header dims + digest feature rather than wrong pixels
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 2, 8, 3, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 10))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="unsupported PNG subset"):
-        multimodal.decode_png(payload)
-    w, h, feat = multimodal._decode_image(payload, fake=False)
-    assert (w, h) == (4, 2) and len(feat) == 8
-
-
-def test_multimodal_real_png_end_to_end(spark):
-    """Genuine PNG payloads through the full Spark path with
-    fake=False: dimensions AND content features come from a real pixel
-    decode, matching a local decode of the same bytes."""
-    import numpy as np
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    media = multimodal.media_real_png(docs.limit(20))
-    rows = {
-        r.media_id: r
-        for r in multimodal.extract_features(media, fake=False).collect()
-    }
-    local = {r.media_id: bytes(r.media) for r in media.collect()}
-    assert len(rows) == 20
-    for mid, payload in local.items():
-        px = multimodal.decode_png(payload)
-        want = multimodal.pixel_feature(px)
-        got = rows[mid]
-        assert (got.width, got.height) == (px.shape[1], px.shape[0])
-        assert np.allclose(got.feature, want, atol=1e-6)
-
-
 def _terms(spark, terms):
     return spark.createDataFrame([(t,) for t in terms], "term string")
 
@@ -921,484 +736,3 @@ def test_grouped_split_no_shuffle(spark):
         out._jdf.queryExecution(), "formatted"
     )
     assert "Exchange" not in plan, plan
-
-
-def test_gif_roundtrip_exact():
-    """encode_gif → decode_gif is pixel-exact (the decoder is REAL:
-    stdlib LZW + palette lookup), interlaced and not, across palette
-    sizes that exercise 2-, 4-, and 8-bit code widths."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    for (h, w), ncolors in [((1, 1), 2), ((5, 3), 4), ((16, 16), 16), ((13, 9), 250)]:
-        pal = rng.randint(0, 256, size=(ncolors, 3), dtype=np.uint8)
-        idx = rng.randint(0, ncolors, size=(h, w))
-        img = pal[idx]
-        for interlace in (False, True):
-            px = multimodal.decode_gif(
-                multimodal.encode_gif(img, interlace=interlace)
-            )
-            assert np.array_equal(px, img), ((h, w), ncolors, interlace)
-
-
-def test_gif_decoder_growing_dictionary():
-    """A real LZW stream (growing dictionary, widening codes — not the
-    encoder's reset-every-pixel shortcut) decodes correctly: compress
-    with an independent test-side LZW implementation and round-trip."""
-    import struct
-
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    h, w = 24, 40
-    idx = (rng.randint(0, 4, size=(h, w)) * rng.randint(0, 2, size=(h, w))).astype(np.uint8)
-    pal = np.array([[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8)
-    mcs = 2
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    # independent forward LZW (standard GIF algorithm, growing table)
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    width = mcs + 1
-    codes = [clear]
-    cur = b""
-    for px in idx.ravel():
-        nxt = cur + bytes([int(px)])
-        if nxt in table:
-            cur = nxt
-        else:
-            codes.append(table[cur])
-            table[nxt] = next_code
-            next_code += 1
-            cur = bytes([int(px)])
-    if cur:
-        codes.append(table[cur])
-    codes.append(end)
-    # pack LSB-first, mirroring the decoder's width rule exactly: the
-    # decoder's table grows on every code EXCEPT the first after a
-    # clear, and width bumps when the table length reaches 2^width
-    stream = bytearray()
-    acc = nbits = 0
-    table_len = end + 1
-    width = mcs + 1
-    first = True
-    for c in codes:
-        acc |= c << nbits
-        nbits += width
-        while nbits >= 8:
-            stream.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-        if c == clear:
-            table_len, width, first = end + 1, mcs + 1, True
-        elif c != end:
-            if first:
-                first = False
-            else:
-                table_len += 1
-                if table_len >= (1 << width) and width < 12:
-                    width += 1
-    if nbits:
-        stream.append(acc & 0xFF)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | 1, 0, 0)  # 4-entry GCT
-    out += pal.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out.append(mcs)
-    for i in range(0, len(stream), 255):
-        blk = stream[i : i + 255]
-        out.append(len(blk))
-        out += blk
-    out += b"\x00\x3b"
-    px = multimodal.decode_gif(bytes(out))
-    assert np.array_equal(px, pal[idx])
-
-
-def test_gif_feature_path_uses_real_pixels():
-    """_decode_image routes GIF payloads through the real pixel decode:
-    the feature equals pixel_feature(pixels), not the digest stand-in."""
-    import numpy as np
-
-    pal = np.array([[10, 20, 30], [200, 100, 50]], np.uint8)
-    idx = np.tile(np.array([[0, 1]]), (8, 8))[:8, :8]
-    img = pal[idx]
-    payload = multimodal.encode_gif(img)
-    w, h, feat = multimodal._decode_image(payload, fake=False)
-    assert (w, h) == (img.shape[1], img.shape[0])
-    assert np.allclose(feat, multimodal.pixel_feature(img))
-
-
-def test_bmp_roundtrip_and_variants():
-    """encode_bmp → decode_bmp is pixel-exact; hand-built 32-bit and
-    top-down variants decode correctly (BMP bytes are raw — every
-    value here is independently checkable, no shared codec bug)."""
-    import struct
-
-    import numpy as np
-
-    rng = np.random.RandomState(13)
-    for h, w in [(1, 1), (3, 5), (8, 7)]:
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert np.array_equal(multimodal.decode_bmp(multimodal.encode_bmp(img)), img)
-    # hand-built 2x1 top-down 32-bit: red pixel then green pixel
-    body = bytes([0, 0, 255, 0]) + bytes([0, 255, 0, 0])  # BGRA rows
-    info = struct.pack("<IiiHHIIiiII", 40, 2, -1, 1, 32, 0, len(body), 0, 0, 0, 0)
-    head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-    px = multimodal.decode_bmp(head + info + body)
-    assert px.shape == (1, 2, 3)
-    assert px[0, 0].tolist() == [255, 0, 0] and px[0, 1].tolist() == [0, 255, 0]
-    # bottom-up 24-bit with row padding: 1x2 column, white above black
-    body = bytes([0, 0, 0]) + b"\x00"  # bottom row (black), padded to 4
-    body += bytes([255, 255, 255]) + b"\x00"  # top row (white)
-    info = struct.pack("<IiiHHIIiiII", 40, 1, 2, 1, 24, 0, len(body), 0, 0, 0, 0)
-    head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-    px = multimodal.decode_bmp(head + info + body)
-    assert px[0, 0].tolist() == [255, 255, 255]
-    assert px[1, 0].tolist() == [0, 0, 0]
-
-
-def test_bmp_feature_path_uses_real_pixels():
-    import numpy as np
-
-    img = np.zeros((6, 4, 3), np.uint8)
-    img[:, :, 0] = 200
-    payload = multimodal.encode_bmp(img)
-    w, h, feat = multimodal._decode_image(payload, fake=False)
-    assert (w, h) == (4, 6)
-    assert np.allclose(feat, multimodal.pixel_feature(img))
-
-
-def test_jpeg_roundtrip_tolerance():
-    """encode_jpeg → decode_jpeg within DCT+colorspace rounding (the
-    quant table is all ones, so rounding is the ONLY loss): const
-    exact, structured/noise within ±3, odd sizes, gray replicated."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    img = np.full((16, 24, 3), 137, np.uint8)
-    assert np.array_equal(multimodal.decode_jpeg(multimodal.encode_jpeg(img)), img)
-    gx = np.linspace(0, 255, 37)
-    img = np.stack(
-        [
-            np.tile(gx, (21, 1)),
-            np.tile(np.linspace(0, 255, 21)[:, None], (1, 37)),
-            np.full((21, 37), 90.0),
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    px = multimodal.decode_jpeg(multimodal.encode_jpeg(img))
-    assert px.shape == img.shape
-    assert np.abs(px.astype(int) - img.astype(int)).max() <= 3
-    img = rng.randint(0, 256, size=(13, 9, 3), dtype=np.uint8)
-    px = multimodal.decode_jpeg(multimodal.encode_jpeg(img))
-    assert np.abs(px.astype(int) - img.astype(int)).max() <= 3
-    gray = rng.randint(0, 256, size=(8, 8), dtype=np.uint8)
-    px = multimodal.decode_jpeg(multimodal.encode_jpeg(gray))
-    assert px.shape == (8, 8, 3)
-    assert np.abs(px[:, :, 0].astype(int) - gray.astype(int)).max() <= 2
-
-
-def _handbuilt_420_jpeg(H, W, rgb):
-    """Independently hand-assembled 4:2:0 JPEG with DRI=1 and RSTn
-    between every MCU — exercises the sampling-factor MCU interleave,
-    chroma upsampling, and restart handling, none of which encode_jpeg
-    (4:4:4, no restarts) emits."""
-    import struct
-
-    import numpy as np  # noqa: F401
-
-    r, g, b = rgb
-    Y = 0.299 * r + 0.587 * g + 0.114 * b
-    Cb = 128 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    Cr = 128 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    # constant 8x8 block under the orthonormal DCT: DC = 8*(v-128)
-    dcs = {1: int(round(8 * (Y - 128))), 2: int(round(8 * (Cb - 128))),
-           3: int(round(8 * (Cr - 128)))}
-    mcux, mcuy = -(-W // 16), -(-H // 16)
-    dc_syms, ac_syms, mcus = [], [], []
-    for _ in range(mcux * mcuy):
-        ents = []
-        for cid, nblk in ((1, 4), (2, 1), (3, 1)):
-            for bi in range(nblk):
-                diff = dcs[cid] if bi == 0 else 0  # preds reset per MCU
-                t = int(abs(diff)).bit_length()
-                dc_syms.append(t)
-                ents.append(("dc", t, diff))
-                ac_syms.append(0x00)
-                ents.append(("ac", 0x00, None))
-        mcus.append(ents)
-    dc_bits, dc_vals, dc_map = multimodal._huff_canonical(dc_syms)
-    ac_bits, ac_vals, ac_map = multimodal._huff_canonical(ac_syms)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = (
-        struct.pack(">BHHB", 8, H, W, 3)
-        + bytes([1, 0x22, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0])
-    )
-    out += seg(0xC0, sof)
-    out += seg(0xC4, b"\x00" + bytes(dc_bits) + bytes(dc_vals))
-    out += seg(0xC4, b"\x10" + bytes(ac_bits) + bytes(ac_vals))
-    out += seg(0xDD, struct.pack(">H", 1))
-    out += seg(
-        0xDA,
-        bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + b"\x00\x3f\x00",
-    )
-    for m, ents in enumerate(mcus):
-        bw = multimodal._BitWriter()
-        for kind, sym, val in ents:
-            code, ln = (dc_map if kind == "dc" else ac_map)[sym]
-            bw.put(code, ln)
-            if kind == "dc" and sym:
-                bw.put(multimodal._extend_bits(val, sym) & ((1 << sym) - 1), sym)
-        out += bw.flush()
-        if m < len(mcus) - 1:
-            out += bytes([0xFF, 0xD0 + (m % 8)])
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_jpeg_420_with_restarts_decodes():
-    import numpy as np
-
-    rgb = (80, 160, 240)
-    px = multimodal.decode_jpeg(_handbuilt_420_jpeg(20, 28, rgb))
-    assert px.shape == (20, 28, 3)
-    assert np.abs(px.astype(int) - np.array(rgb)[None, None, :]).max() <= 1
-
-
-def test_jpeg_feature_path_uses_real_pixels():
-    import numpy as np
-
-    img = np.full((12, 10, 3), 64, np.uint8)
-    payload = multimodal.encode_jpeg(img)
-    w, h, feat = multimodal._decode_image(payload, fake=False)
-    assert (w, h) == (10, 12)
-    assert np.allclose(feat, multimodal.pixel_feature(img), atol=1e-4)
-
-
-def test_multimodal_all_formats_spark_path(spark):
-    """One payload of each container (PNG, GIF, BMP, JPEG) through the
-    DISTRIBUTED extract_features path with fake=False: every row comes
-    back with its real decoded dimensions and a pixel-derived feature —
-    the Spark plumbing handles all four codecs, not just the driver."""
-    import numpy as np
-
-    rng = np.random.RandomState(21)
-    imgs = {
-        1: ("png", rng.randint(0, 256, size=(9, 14, 3), dtype=np.uint8)),
-        2: ("gif", None),
-        3: ("bmp", rng.randint(0, 256, size=(11, 6, 3), dtype=np.uint8)),
-        4: ("jpg", np.full((16, 8, 3), 120, np.uint8)),
-    }
-    pal = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
-    imgs[2] = ("gif", pal[rng.randint(0, 8, size=(7, 13))])
-    payloads = {
-        1: multimodal.encode_png(imgs[1][1]),
-        2: multimodal.encode_gif(imgs[2][1]),
-        3: multimodal.encode_bmp(imgs[3][1]),
-        4: multimodal.encode_jpeg(imgs[4][1]),
-    }
-    df = spark.createDataFrame(
-        [
-            (mid, "image", bytearray(payloads[mid]), f"image/{imgs[mid][0]}",
-             len(payloads[mid]))
-            for mid in sorted(imgs)
-        ],
-        multimodal.MEDIA_SCHEMA,
-    ).repartition(4)
-    out = {
-        r.media_id: r
-        for r in multimodal.extract_features(df, fake=False).collect()
-    }
-    for mid, (_fmt, img) in imgs.items():
-        assert (out[mid].width, out[mid].height) == (
-            img.shape[1],
-            img.shape[0],
-        ), mid
-        assert len(out[mid].feature) == 8
-
-
-def test_wav_roundtrip_and_feature():
-    """encode_wav → decode_wav is sample-exact (PCM is raw);
-    audio_feature is deterministic and shaped like pixel_feature; the
-    distributed path routes RIFF payloads through the real decode
-    (width = samples, height = channels)."""
-    import numpy as np
-
-    rng = np.random.RandomState(17)
-    mono = (rng.normal(scale=8000, size=1600)).astype(np.int16)
-    rate, back = multimodal.decode_wav(multimodal.encode_wav(mono, 16000))
-    assert rate == 16000 and np.array_equal(back[:, 0], mono)
-    stereo = (rng.normal(scale=8000, size=(800, 2))).astype(np.int16)
-    rate, back = multimodal.decode_wav(multimodal.encode_wav(stereo, 8000))
-    assert rate == 8000 and np.array_equal(back, stereo)
-    feat = multimodal.audio_feature(rate, back)
-    assert feat.shape == (8,) and abs(feat[0] - 0.1) < 1e-6  # 800/8000 s
-    w, h, f = multimodal._decode_image(
-        multimodal.encode_wav(stereo, 8000), fake=False
-    )
-    assert (w, h) == (800, 2)
-    assert np.allclose(f, feat)
-
-
-def test_wav_8bit_and_junk_chunk():
-    """8-bit PCM upconverts to int16; a leading JUNK chunk before fmt
-    (common in the wild) is walked over."""
-    import struct
-
-    import numpy as np
-
-    raw = bytes([0, 128, 255, 64])  # 8-bit unsigned mono
-    fmt = struct.pack("<HHIIHH", 1, 1, 4000, 4000, 1, 8)
-    body = (
-        b"JUNK" + struct.pack("<I", 3) + b"abc\x00"  # odd len, padded
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(raw)) + raw
-    )
-    payload = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    rate, samples = multimodal.decode_wav(payload)
-    assert rate == 4000
-    assert samples[:, 0].tolist() == [-32768, 0, 32512, -16384]
-
-
-def _minimal_mp4(dur_ts=(90000, 270000), wh=(640, 360), v1=False):
-    """Hand-assembled minimal MP4: ftyp + moov(mvhd, trak(tkhd),
-    trak(tkhd audio 0x0)) — every byte laid out per ISO-BMFF, so the
-    parser is validated independently of any encoder."""
-    import struct
-
-    def box(typ, payload):
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    ts, dur = dur_ts
-    if v1:
-        mvhd = (
-            b"\x01\x00\x00\x00" + b"\x00" * 16
-            + struct.pack(">IQ", ts, dur) + b"\x00" * 80
-        )
-        tkhd = (
-            b"\x01\x00\x00\x00" + b"\x00" * 32 + b"\x00" * 16
-            + b"\x00" * 36
-            + struct.pack(">II", wh[0] << 16, wh[1] << 16)
-        )
-    else:
-        mvhd = (
-            b"\x00\x00\x00\x00" + b"\x00" * 8
-            + struct.pack(">II", ts, dur) + b"\x00" * 76
-        )
-        tkhd = (
-            b"\x00\x00\x00\x00" + b"\x00" * 20 + b"\x00" * 16
-            + b"\x00" * 36
-            + struct.pack(">II", wh[0] << 16, wh[1] << 16)
-        )
-        audio_tkhd = (
-            b"\x00\x00\x00\x00" + b"\x00" * 20 + b"\x00" * 16
-            + b"\x00" * 36 + struct.pack(">II", 0, 0)
-        )
-    traks = box(b"trak", box(b"tkhd", tkhd))
-    if not v1:
-        # audio track first: the parser must skip its 0x0 tkhd
-        traks = box(b"trak", box(b"tkhd", audio_tkhd)) + traks
-    moov = box(b"moov", box(b"mvhd", mvhd) + traks)
-    return box(b"ftyp", b"isom" + b"\x00\x00\x02\x00isomiso2") + moov
-
-
-def test_mp4_header_parse():
-    info = multimodal.parse_mp4_header(_minimal_mp4())
-    assert info["brand"] == "isom"
-    assert info["duration_sec"] == 3.0  # 270000 / 90000
-    assert (info["width"], info["height"]) == (640, 360)
-    assert info["n_tracks"] == 2  # audio track skipped for dims, counted
-    info1 = multimodal.parse_mp4_header(_minimal_mp4(v1=True))
-    assert info1["duration_sec"] == 3.0
-    assert (info1["width"], info1["height"]) == (640, 360)
-    assert multimodal.parse_mp4_header(b"notamp4file") is None
-    # truncated box must fail safe, not crash
-    assert multimodal.parse_mp4_header(_minimal_mp4()[:30] ) is None
-
-
-def test_corrupt_payloads_degrade_not_crash():
-    """Review finding: malformed payloads raised struct.error /
-    IndexError / ZeroDivisionError past the ValueError handlers and
-    killed the task.  Every corrupt variant must now fall back to the
-    header-dims/digest stand-in (or the fake path), never raise."""
-    import numpy as np
-
-    pal = np.array([[1, 2, 3], [4, 5, 6]], np.uint8)
-    gif = multimodal.encode_gif(pal[np.zeros((8, 8), int)])
-    jpg = multimodal.encode_jpeg(np.full((8, 8, 3), 50, np.uint8))
-    wav = multimodal.encode_wav(np.zeros(100, np.int16))
-    import struct as _s
-
-    zero_ch_wav = (
-        b"RIFF" + _s.pack("<I", 36) + b"WAVE"
-        + b"fmt " + _s.pack("<I", 16) + _s.pack("<HHIIHH", 1, 0, 8000, 0, 0, 16)
-        + b"data" + _s.pack("<I", 4) + b"\x00" * 4
-    )
-    for payload in (
-        gif[: len(gif) // 2],        # struct.error in image descriptor
-        jpg[:-20],                   # IndexError in the bit reader
-        wav[:20],                    # truncated fmt chunk
-        zero_ch_wav,                 # ZeroDivisionError guard
-    ):
-        w, h, feat = multimodal._decode_image(bytes(payload), fake=True)
-        assert len(feat) == 8  # stand-in feature, task alive
-
-
-# ------------------------- randomized codec properties (hypothesis)
-
-from hypothesis import given, settings  # noqa: E402
-from hypothesis import strategies as st  # noqa: E402
-
-
-@st.composite
-def _rgb_images(draw, max_side=12, max_colors=None):
-    h = draw(st.integers(1, max_side))
-    w = draw(st.integers(1, max_side))
-    seed = draw(st.integers(0, 2**31 - 1))
-    rng = np.random.RandomState(seed)
-    if max_colors:
-        pal = rng.randint(0, 256, size=(max_colors, 3), dtype=np.uint8)
-        return pal[rng.randint(0, max_colors, size=(h, w))]
-    return rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-
-@settings(max_examples=25, deadline=None)
-@given(_rgb_images())
-def test_prop_png_bmp_roundtrip_exact(img):
-    assert np.array_equal(multimodal.decode_png(multimodal.encode_png(img)), img)
-    assert np.array_equal(multimodal.decode_bmp(multimodal.encode_bmp(img)), img)
-
-
-@settings(max_examples=25, deadline=None)
-@given(_rgb_images(max_colors=17))
-def test_prop_gif_roundtrip_exact(img):
-    assert np.array_equal(multimodal.decode_gif(multimodal.encode_gif(img)), img)
-    assert np.array_equal(
-        multimodal.decode_gif(multimodal.encode_gif(img, interlace=True)), img
-    )
-
-
-@settings(max_examples=20, deadline=None)
-@given(_rgb_images(max_side=10))
-def test_prop_jpeg_roundtrip_tolerance(img):
-    px = multimodal.decode_jpeg(multimodal.encode_jpeg(img))
-    assert px.shape == img.shape
-    assert np.abs(px.astype(int) - img.astype(int)).max() <= 3
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(1, 400),
-    st.integers(1, 3),
-    st.integers(0, 2**31 - 1),
-    st.sampled_from([4000, 8000, 16000]),
-)
-def test_prop_wav_roundtrip_exact(n, ch, seed, rate):
-    rng = np.random.RandomState(seed)
-    pcm = rng.randint(-32768, 32768, size=(n, ch)).astype(np.int16)
-    got_rate, back = multimodal.decode_wav(multimodal.encode_wav(pcm, rate))
-    assert got_rate == rate and np.array_equal(back, pcm)

@@ -332,6 +332,24 @@ def test_fan_out_is_noop_on_multi_split_input(spark, tmp_path):
     assert fan_out(many, "doc_id") is many  # already-parallel: no-op
 
 
+def test_unknown_input_size_keeps_session_shuffle_partitions(spark):
+    """An object-store path cannot be stat'ed, so its size is unknown:
+    the loaders' sizing must leave a submit-time
+    spark.sql.shuffle.partitions alone, not clamp it to the cores."""
+    from rollup_engine.fanout import input_size_bytes, tune_shuffle_for_input
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "123")
+    try:
+        tune_shuffle_for_input(
+            spark, input_size_bytes("s3a://bucket/documents.parquet")
+        )
+        assert spark.conf.get(key) == "123"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_from_events_single_exchange(spark):
     """The events→transcripts mapping window and the downstream delta
     window must share ONE conv exchange (the gate/headline input path;
