@@ -1176,7 +1176,7 @@ def run_realtime_leg(turns: int | None = None) -> dict:
         ),
         tier_path,
     )
-    conv_state_at(narrow, split).drop("hr").write.mode("overwrite").parquet(
+    conv_state_at(narrow, split).write.mode("overwrite").parquet(
         state_path
     )
     state = spark.read.parquet(state_path)
@@ -1189,7 +1189,7 @@ def run_realtime_leg(turns: int | None = None) -> dict:
     rt_job = lambda: _force(
         realtime_rollup(
             spark, tier_path, tail, "minute", split,
-            conv_state=state.select(*tail.columns),
+            conv_state=state,
         )
     )
     hw = _hw_rate(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))

@@ -54,46 +54,17 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "fold",
 ) -> DataFrame:
     """Exact brute-force top-k by cosine (score rounded to 6dp for
-    cross-engine stability; ties broken by id).
-
-    ``method='fold'``: JVM left-fold expressions — deterministic
-    summation order, bit-reproducible by the DuckDB oracle; right for
-    gate-scale and modest N.
-    ``method='pandas'``: Arrow-batched numpy matrix product — the
-    scale path for 10^8+ vectors (SIMD/pairwise summation, so scores
-    can differ from the fold in the last ulp; equality within 1e-6 is
-    pinned by tests).
-    """
-    if method == "pandas":
-        scored = df.select(
-            F.col(id_col), _pandas_cosine_udf(query_vec)(F.col(vec_col)).alias("score")
-        )
-    else:
-        q = _lit_vec(query_vec)
-        scored = df.select(
-            F.col(id_col),
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), q), 6
-            ).alias("score"),
-        )
+    cross-engine stability; ties broken by id).  JVM left-fold
+    expressions — deterministic summation order, bit-reproducible by
+    the DuckDB oracle."""
+    q = _lit_vec(query_vec)
+    scored = df.select(
+        F.col(id_col),
+        F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("score"),
+    )
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-
-
-def _pandas_cosine_udf(query_vec):
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.sqrt((q * q).sum())
-
-    @F.pandas_udf(T.DoubleType())
-    def score(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)  # (batch, d)
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1))
-        return pd.Series(np.round(dots / (norms * qn), 6))
-
-    return score
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> np.ndarray:

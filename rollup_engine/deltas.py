@@ -9,6 +9,13 @@ no shuffle join, one exchange on ``conv_id``, deterministic regardless of
 input file order (fixing the reference's stream-order dependence,
 documented divergence per SURVEY.md §7.4).
 
+This module is the one definition of that decision: ``delta_ms`` is the
+arithmetic every Spark delta path uses (``with_deltas``, the fused
+events windows in ``transcripts.py``, ``salting.salted_deltas``), and
+``last_turns`` / ``seeded_turns`` are the conversation state and the
+boundary seed that ``incremental.py`` and ``realtime.py`` stitch
+batches with.  ``streaming.py`` runs the same rule in numpy.
+
 Scale note: the window shuffles on ``conv_id`` only.  Hot conversations
 (millions of turns in one conv) skew that exchange — ``salting.py``
 provides the chunked two-phase variant for the aggregate path; the raw
@@ -17,13 +24,21 @@ delta stream itself is naturally bounded per conv by retention chunking.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Milliseconds between a turn and the previous turn of the same
 # conversation; integer (floor) ms like the reference's Duration::
 # num_milliseconds (/root/reference/src/log_parser/log_events.rs:91-103).
 DELTA_COL = "delta_ms"
+
+
+def delta_ms(ts: Column, prev_ts: Column) -> Column:
+    """Floor milliseconds from ``prev_ts`` to ``ts`` (NULL when either
+    is NULL), in exact int64 micros before the one division."""
+    return F.floor(
+        (F.unix_micros(ts) - F.unix_micros(prev_ts)) / F.lit(1000)
+    ).cast("long")
 
 
 def with_deltas(df: DataFrame, keep_first_turn: bool = False) -> DataFrame:
@@ -34,22 +49,44 @@ def with_deltas(df: DataFrame, keep_first_turn: bool = False) -> DataFrame:
     inner pair-join) and is filtered out unless ``keep_first_turn``.
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = df.withColumn(
-        DELTA_COL,
-        F.floor(
-            (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w)))
-            / F.lit(1000)
-        ).cast("long"),
-    )
+    out = df.withColumn(DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w)))
     if keep_first_turn:
         return out
     return out.where(F.col(DELTA_COL).isNotNull())
 
 
-# Oracle-side equivalent (DuckDB), over a `t` relation in transcript shape.
-DELTAS_SQL = """
-    SELECT *,
-        (epoch_us(ts) - epoch_us(LAG(ts) OVER
-            (PARTITION BY conv_id ORDER BY turn_idx))) // 1000 AS delta_ms
-    FROM t
-"""
+def last_turns(df: DataFrame) -> DataFrame:
+    """``(conv_id, turn_idx, ts)`` of each conversation's highest
+    ``turn_idx`` — the conversation state a later batch is seeded with."""
+    return (
+        df.groupBy("conv_id")
+        .agg(F.max(F.struct("turn_idx", "ts")).alias("_m"))
+        .select("conv_id", "_m.turn_idx", "_m.ts")
+    )
+
+
+def seeded_turns(turns: DataFrame, state: DataFrame) -> DataFrame:
+    """``turns`` beyond each conversation's ``state`` row, plus the
+    state rows themselves as seeds (NULL in every other column).
+
+    ``with_deltas`` over the result gives the first new turn of a
+    conversation its delta across the batch boundary; a seed sorts
+    first in its conversation, so it has no predecessor and emits no
+    delta of its own.  Turns at or below the state ``turn_idx`` are
+    dropped first: under at-least-once delivery they were already
+    counted, and an equal ``turn_idx`` would tie with the seed in the
+    lag order.  ``last_turns`` over the result is the next state.
+    """
+    seeds = state.select("conv_id", "turn_idx", "ts")
+    fresh = (
+        turns.join(
+            seeds.select("conv_id", F.col("turn_idx").alias("_seen_idx")),
+            "conv_id",
+            "left",
+        )
+        .where(
+            F.col("_seen_idx").isNull() | (F.col("turn_idx") > F.col("_seen_idx"))
+        )
+        .drop("_seen_idx")
+    )
+    return fresh.unionByName(seeds, allowMissingColumns=True)

@@ -29,12 +29,12 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .checkpoint import SnapshotStore
-from .deltas import DELTA_COL
+from .deltas import last_turns, seeded_turns, with_deltas
 from .hist_rollup import HIST_ROLLUP_FIELDS, hist_cascade, hist_rollup
 from .transcripts import clean
 
@@ -97,70 +97,15 @@ class IncrementalRollup:
             return ck  # nothing new
         version = ck["version"] + 1
 
-        new_turns = clean(
-            self.store.incremental(spark, ck["snapshot_id"], current)
-        )
+        turns = clean(self.store.incremental(spark, ck["snapshot_id"], current))
 
-        # --- boundary stitch: prepend each conv's last known turn
+        # --- boundary stitch: seed each conv with its last known turn
+        # (and drop re-delivered turns at or below it)
         if ck["version"] > 0:
             state = spark.read.parquet(self.state_path(ck["version"]))
-            # At-least-once delivery guard: a snapshot may re-deliver
-            # turns already folded into the rollup.  Keep only turns
-            # STRICTLY beyond the checkpointed (conv_id, turn_idx) —
-            # re-delivered turns would double-count buckets, and a
-            # re-delivered turn_idx equal to the state row would tie in
-            # the lag window (nondeterministic boundary delta).
-            new_turns = (
-                new_turns.join(
-                    state.select(
-                        "conv_id", F.col("turn_idx").alias("_state_idx")
-                    ),
-                    "conv_id",
-                    "left",
-                )
-                .where(
-                    F.col("_state_idx").isNull()
-                    | (F.col("turn_idx") > F.col("_state_idx"))
-                )
-                .drop("_state_idx")
-            )
-            boundary = state.select(
-                "conv_id",
-                F.col("turn_idx"),
-                F.lit(None).cast("string").alias("role"),
-                F.lit(None).cast("string").alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.col("ts"),
-                F.lit(True).alias("_state"),
-            )
-            unioned = new_turns.withColumn("_state", F.lit(False)).unionByName(
-                boundary
-            )
-        else:
-            unioned = new_turns.withColumn("_state", F.lit(False))
+            turns = seeded_turns(turns, state)
 
-        # _state desc ⇒ at any residual turn_idx tie the state row sorts
-        # first and feeds the lag deterministically (belt-and-braces: the
-        # anti-join above already removes equal-turn_idx re-deliveries)
-        w = Window.partitionBy("conv_id").orderBy(
-            F.col("turn_idx").asc(), F.col("_state").desc()
-        )
-        deltas = (
-            unioned.withColumn(
-                DELTA_COL,
-                F.floor(
-                    (
-                        F.unix_micros(F.col("ts"))
-                        - F.unix_micros(F.lag("ts").over(w))
-                    )
-                    / F.lit(1000)
-                ).cast("long"),
-            )
-            .where(~F.col("_state"))  # state rows only feed the lag
-            .where(F.col(DELTA_COL).isNotNull())
-        )
-
-        new_rollup = hist_rollup(deltas, self.tier)
+        new_rollup = hist_rollup(with_deltas(turns), self.tier)
 
         # --- merge: only touched buckets re-merge
         old = self.read_rollup(spark) if ck["version"] > 0 else None
@@ -177,25 +122,8 @@ class IncrementalRollup:
         else:
             result = new_rollup
 
-        # --- new conv state = max(turn) per conv across old state + new
-        latest = new_turns.groupBy("conv_id").agg(
-            F.max(F.struct("turn_idx", "ts")).alias("m")
-        )
-        new_state = latest.select(
-            "conv_id", F.col("m.turn_idx").alias("turn_idx"), F.col("m.ts").alias("ts")
-        )
-        if ck["version"] > 0:
-            prev = spark.read.parquet(self.state_path(ck["version"]))
-            new_state = (
-                prev.unionByName(new_state)
-                .groupBy("conv_id")
-                .agg(F.max(F.struct("turn_idx", "ts")).alias("m"))
-                .select(
-                    "conv_id",
-                    F.col("m.turn_idx").alias("turn_idx"),
-                    F.col("m.ts").alias("ts"),
-                )
-            )
+        # --- new conv state: the seeds carry the old state forward
+        new_state = last_turns(turns)
 
         # --- versioned writes, checkpoint pointer flipped last
         result.write.mode("overwrite").parquet(self.rollup_path(version))

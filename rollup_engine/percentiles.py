@@ -7,9 +7,9 @@ median=10, p90=100, p99=100 — i.e. the ceil(q·n)-th order statistic
 We mirror that contract:
 
 - ``approx_nearest_rank`` — Spark's GK sketch (``percentile_approx``)
-  with accuracy 1e6: rank error ≤ n·1e-6, i.e. *exact* nearest-rank for
-  groups below ~500k values, smoothly approximate above.  All-JVM,
-  partial+final merge, whole-stage codegen.
+  with ``DEFAULT_ACCURACY`` = 10,000: rank error ≤ n/10,000, i.e.
+  *exact* nearest-rank for groups of up to ~10k values, approximate
+  above.  All-JVM, partial+final merge, whole-stage codegen.
 - ``exact_nearest_rank_global`` — two-pass distributed-sort exact path
   for arbitrarily large single groups (rank via row_number + count);
   used by the dedicated exact-percentile query and parity tests.
@@ -34,16 +34,15 @@ def qname(q: float) -> str:
     return f"q{str(q).replace('.', '_')}"
 
 
-def approx_nearest_rank(
-    col: str | Column, q: float, accuracy: int = DEFAULT_ACCURACY
-) -> Column:
+def approx_nearest_rank(col: str | Column, q: float) -> Column:
     """GK-sketch nearest-rank percentile, cast to long ms.
 
-    Exact for groups ≤ accuracy values (rank error < 1), approximate
-    above — the reference's contract, all-JVM, partial+final mergeable.
+    Exact for groups ≤ DEFAULT_ACCURACY values (rank error < 1),
+    approximate above — the reference's contract, all-JVM,
+    partial+final mergeable.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.percentile_approx(c, F.lit(q), F.lit(accuracy)).cast("long")
+    return F.percentile_approx(c, F.lit(q), F.lit(DEFAULT_ACCURACY)).cast("long")
 
 
 def exact_nearest_rank(

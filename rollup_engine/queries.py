@@ -1,8 +1,12 @@
 """Driver-contract query registry: every SURVEY.md §2 operator family as
 a (spark_query, oracle_sql) pair over the driver's parquet testdata.
 
-Spark side and DuckDB side share single-source SQL fragments
-(transcripts mapping, delta window) so they cannot drift.
+The two sides are independent implementations on purpose — the
+DuckDB SQL is the reference.  Within the oracles, one SQL text holds
+the events → transcripts mapping (``transcripts.EVENTS_TO_TRANSCRIPTS_SQL``)
+and one CTE the delta window (``_DELTAS_CTE``); within the Spark side,
+``deltas.delta_ms`` is the one delta expression.  The parity gates,
+not shared text, keep the two sides from drifting.
 """
 
 from __future__ import annotations

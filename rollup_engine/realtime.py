@@ -22,10 +22,11 @@ exactly the full rollup (driver-gated: ``realtime_rollup`` vs the
 direct minute-tier SQL oracle).
 
 The boundary seed is the same per-conversation state the incremental
-refresher checkpoints (``incremental.py`` keeps ``(conv_id, last_ts,
-last_turn_idx)`` per snapshot); production hands it in as
-``conv_state``.  When omitted, it is derived from the raw table with a
-``ts < split`` scan — correct but cold-scan-sized, so only for tests.
+refresher checkpoints (``deltas.last_turns``: ``(conv_id, turn_idx,
+ts)`` per snapshot); production hands it in as ``conv_state``, and
+``deltas.seeded_turns`` stitches it exactly as a refresh does.  When
+omitted, it is derived from the raw table with a ``ts < split`` scan —
+correct but cold-scan-sized, so only for tests.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .deltas import with_deltas
+from .deltas import last_turns, seeded_turns, with_deltas
 from .hist_rollup import hist_rollup
 from .schema import TIERS
 
@@ -62,21 +63,11 @@ def materialize_tier(rollup_df: DataFrame, path: str, mode: str = "overwrite") -
 
 
 def conv_state_at(raw_turns: DataFrame, split_ts) -> DataFrame:
-    """Each conversation's last turn strictly before ``split_ts`` —
+    """Each conversation's last turn strictly before ``split_ts``, in
+    the incremental checkpoint's ``(conv_id, turn_idx, ts)`` shape —
     the boundary seed for cross-split deltas.  Test-path helper; in
     production this relation comes from the incremental checkpoint."""
-    cols = raw_turns.columns
-    return (
-        raw_turns.where(F.col("ts") < F.lit(split_ts))
-        .groupBy("conv_id")
-        .agg(
-            F.max_by(F.struct(*[c for c in cols if c != "conv_id"]), "turn_idx").alias(
-                "_s"
-            )
-        )
-        .select("conv_id", "_s.*")
-        .select(*cols)
-    )
+    return last_turns(raw_turns.where(F.col("ts") < F.lit(split_ts)))
 
 
 def realtime_rollup(
@@ -134,10 +125,7 @@ def realtime_rollup(
     if conv_state is None:
         conv_state = conv_state_at(raw_turns, split_ts)
     tail = raw_turns.where(F.col("ts") >= F.lit(split_ts))
-    hot_turns = tail.unionByName(conv_state.select(*tail.columns))
-    # The seed turn's own delta belongs to a pre-split bucket the cold
-    # side already covers — drop it after bucketing.
-    hot = hist_rollup(with_deltas(hot_turns), tier).where(
-        F.col("bucket_start") >= F.lit(split_ts)
-    )
+    # seeds emit no delta, so every hot delta is timed by a turn at or
+    # after the split and lands in a bucket >= split
+    hot = hist_rollup(with_deltas(seeded_turns(tail, conv_state)), tier)
     return cold.select(*hot.columns).unionByName(hot)

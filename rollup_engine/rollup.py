@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .deltas import DELTA_COL
-from .percentiles import DEFAULT_ACCURACY, approx_nearest_rank, exact_nearest_rank
+from .percentiles import approx_nearest_rank, exact_nearest_rank
 from .schema import TIERS
 
 ERR4 = "error:4"
@@ -66,9 +66,7 @@ METRIC_COLS = [
 PERCENTILE_COLS = {"lat_p50_ms": 0.5, "lat_p90_ms": 0.9, "lat_p99_ms": 0.99}
 
 
-def metric_agg_map(
-    delta_col: str = DELTA_COL, accuracy: int = DEFAULT_ACCURACY
-) -> dict[str, Column]:
+def metric_agg_map(delta_col: str = DELTA_COL) -> dict[str, Column]:
     """The nine reference metrics + lat_sum_ms (kept for exact avg in
     the tier cascade) as named aggregate expressions."""
     d = F.col(delta_col)
@@ -77,28 +75,23 @@ def metric_agg_map(
         "lat_min_ms": F.min(d),
         "lat_max_ms": F.max(d),
         "lat_avg_ms": F.floor(F.avg(d)).cast("long"),
-        "lat_p50_ms": approx_nearest_rank(d, 0.5, accuracy),
-        "lat_p90_ms": approx_nearest_rank(d, 0.9, accuracy),
-        "lat_p99_ms": approx_nearest_rank(d, 0.99, accuracy),
+        "lat_p50_ms": approx_nearest_rank(d, 0.5),
+        "lat_p90_ms": approx_nearest_rank(d, 0.9),
+        "lat_p99_ms": approx_nearest_rank(d, 0.99),
         "lat_sum_ms": F.sum(d),
         "err4xx_rate": F.round(F.avg(error_flag(ERR4)), 4),
         "err5xx_rate": F.round(F.avg(error_flag(ERR5)), 4),
     }
 
 
-def metric_aggs(
-    delta_col: str = DELTA_COL, accuracy: int = DEFAULT_ACCURACY
-) -> list[Column]:
-    return [
-        c.alias(name) for name, c in metric_agg_map(delta_col, accuracy).items()
-    ]
+def metric_aggs(delta_col: str = DELTA_COL) -> list[Column]:
+    return [c.alias(name) for name, c in metric_agg_map(delta_col).items()]
 
 
 def rollup(
     deltas: DataFrame,
     tier: str = "minute",
     extra_keys: list[str] | None = None,
-    accuracy: int = DEFAULT_ACCURACY,
 ) -> DataFrame:
     """Tumbling-window rollup at the given tier.
 
@@ -111,7 +104,7 @@ def rollup(
     keys = [F.date_trunc(t.duckdb_trunc, F.col("ts")).alias("bucket_start")]
     for k in extra_keys or []:
         keys.append(F.col(k))
-    out = deltas.groupBy(*keys).agg(*metric_aggs(accuracy=accuracy))
+    out = deltas.groupBy(*keys).agg(*metric_aggs())
     return out.withColumn("tier", F.lit(tier)).select(
         "tier",
         "bucket_start",
@@ -123,7 +116,6 @@ def rollup_interval(
     deltas: DataFrame,
     width_seconds: int,
     extra_keys: list[str] | None = None,
-    accuracy: int = DEFAULT_ACCURACY,
 ) -> DataFrame:
     """Rollup at an ARBITRARY tumbling-bucket width (the TimescaleDB
     ``time_bucket(INTERVAL ...)`` analog) — the named minute/hour/day
@@ -142,7 +134,7 @@ def rollup_interval(
     keys = [bucket.alias("bucket_start")]
     for k in extra_keys or []:
         keys.append(F.col(k))
-    out = deltas.groupBy(*keys).agg(*metric_aggs(accuracy=accuracy))
+    out = deltas.groupBy(*keys).agg(*metric_aggs())
     return out.withColumn("tier", F.lit(f"{int(width_seconds)}s")).select(
         "tier",
         "bucket_start",
@@ -150,20 +142,16 @@ def rollup_interval(
     )
 
 
-def global_rollup(
-    deltas: DataFrame, delta_col: str = DELTA_COL, exact: bool = True
-) -> DataFrame:
+def global_rollup(deltas: DataFrame, delta_col: str = DELTA_COL) -> DataFrame:
     """The reference's exact shape: ONE aggregate row for the whole
     (filtered) input (/root/reference/src/main.rs:92-114).  count=0 with
     null metrics when empty — Spark's global agg emits exactly that row.
 
-    Percentiles use the exact counting-sort path by default (the single
-    global group can exceed the GK sketch's exactness ceiling); the base
+    Percentiles use the exact counting-sort path (the single global
+    group can exceed the GK sketch's exactness ceiling); the base
     aggregates stay one-pass.  The two branches share the scan and the
     1-row join is a broadcast nested loop — negligible.
     """
-    if not exact:
-        return deltas.agg(*metric_aggs(delta_col))
     agg_map = metric_agg_map(delta_col)
     base = deltas.agg(
         *[

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .deltas import DELTA_COL
+from .deltas import DELTA_COL, delta_ms
 
 DEFAULT_CHUNK = 100_000
 
@@ -43,11 +43,7 @@ def salted_deltas(
     )
     w = Window.partitionBy("conv_id", "_chunk").orderBy("turn_idx")
     local = chunked.withColumn(
-        DELTA_COL,
-        F.floor(
-            (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w)))
-            / F.lit(1000)
-        ).cast("long"),
+        DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w))
     ).withColumn("_rn", F.row_number().over(w))
 
     # chunk tails: last turn of every NON-EMPTY (conv, chunk).  The
@@ -71,10 +67,7 @@ def salted_deltas(
             DELTA_COL,
             F.when(
                 (F.col("_rn") == 1) & F.col("_prev_ts").isNotNull(),
-                F.floor(
-                    (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("_prev_ts")))
-                    / F.lit(1000)
-                ).cast("long"),
+                delta_ms(F.col("ts"), F.col("_prev_ts")),
             ).otherwise(F.col(DELTA_COL)),
         )
         .drop("_chunk", "_rn", "_prev_ts")

@@ -70,18 +70,7 @@ def trailing_result(
     merged = hist_cascade(one_key, "minute").collect()
     if not merged:
         return RollupResult(count=0)
-    row = merged[0].asDict()
-    return RollupResult(
-        count=row["turn_count"],
-        max=row["lat_max_ms"],
-        min=row["lat_min_ms"],
-        avg=row["lat_avg_ms"],
-        median=row["lat_p50_ms"],
-        percentile90=row["lat_p90_ms"],
-        percentile99=row["lat_p99_ms"],
-        client_error_4xx=row["err4xx_rate"],
-        server_error_5xx=row["err5xx_rate"],
-    )
+    return RollupResult.from_row(merged[0])
 
 
 def serve_prometheus(

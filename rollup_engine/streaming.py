@@ -6,9 +6,12 @@ memory (/root/reference/src/request_response_matcher/mod.rs:10-13).
 Here the same contract runs as a real stream:
 
   readStream (file source over the transcript dir)
+    → batch ``clean``'s row validity rule (``transcripts.valid_turn``)
     → stateful inter-turn delta extraction: applyInPandasWithState
       keyed by conv_id keeps ONE row of state per conversation (last
-      turn_idx + ts) — bounded state, unlike the reference's vectors
+      turn_idx + ts) — bounded state, unlike the reference's vectors;
+      ``_extend_deltas`` is the one numpy kernel the delta and the
+      alert operators share (the stream twin of ``deltas.py``)
     → watermark on ts (bounded lateness; late turns beyond it dropped,
       the streaming analog of the reference's trailing-window filter)
     → tumbling-window aggregate (count/min/max/avg + GK percentiles)
@@ -17,7 +20,7 @@ Here the same contract runs as a real stream:
 
 State survives restarts through the streaming checkpoint — the
 streaming twin of incremental.py's snapshot checkpoint (pinned by
-tests/test_streaming.py::test_restart_resumes_state).
+tests/test_streaming.py::test_stream_rollup_and_restart_state).
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .rollup import ERR4, ERR5, error_flag
 from .schema import TRANSCRIPT_SCHEMA
+from .transcripts import valid_turn
 
 _DELTA_OUT = T.StructType(
     [
@@ -53,68 +57,77 @@ _STATE = T.StructType(
 )
 
 
-def _delta_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Vectorized per-conversation delta extraction (no per-row Python
-    loop — round-2 verdict item 4): sort by turn_idx, drop re-delivered
-    / duplicate turn indexes, then delta = np.diff over the micros
-    column with the stored state row prepended as element 0."""
-    (conv_id,) = key
-    if state.exists:
-        last_idx, last_us = state.get
-    else:
-        last_idx, last_us = None, None
+def _extend_deltas(
+    pdfs: Iterator[pd.DataFrame], last_idx: int | None, last_us: int | None
+):
+    """The numpy twin of ``deltas.seeded_turns`` + ``with_deltas`` for
+    one conversation's microbatch (no per-row Python loop, no per-group
+    pandas frame operation — groups are typically tiny, so sort_values
+    / drop_duplicates frame copies would dominate the stateful stage).
+
+    Sorts by turn_idx, keeps the first row per turn_idx (a repeated idx
+    neither emits nor advances state), drops rows at or below the
+    checkpointed ``last_idx`` (at-least-once re-delivery), and diffs
+    the micros with the state row prepended.  Returns None when no row
+    survives, else ``(pdf, sel, delta_ms, has_delta, new_state)``:
+    ``pdf`` rows ``sel`` are the kept turns in order, ``has_delta`` is
+    False only for a conversation's first-ever turn, and ``new_state``
+    is the ``(turn_idx, ts_us)`` to checkpoint.
+    """
     batches = [p for p in pdfs if len(p.index)]
     if not batches:
-        return
-    # Pure-numpy fast path (round-6): groups are typically tiny (one
-    # conversation), so per-group pandas machinery (sort_values,
-    # drop_duplicates, assign — each a full frame copy) dominated the
-    # stateful stage.  argsort + boolean masks on raw arrays do the
-    # same dedup/filter/diff with one copy and no index bookkeeping.
+        return None
     pdf = batches[0] if len(batches) == 1 else pd.concat(batches, copy=False)
     idx = pdf["turn_idx"].to_numpy()
     order = np.argsort(idx, kind="stable")
     idx_s = idx[order]
-    # keep the first occurrence per turn_idx (a repeated idx neither
-    # emits nor advances state) and drop anything at or below the
-    # checkpointed index (at-least-once re-delivery)
     keep = np.ones(len(idx_s), dtype=bool)
     keep[1:] = idx_s[1:] != idx_s[:-1]
     if last_idx is not None:
         keep &= idx_s > last_idx
     if not keep.any():
-        return
+        return None
     sel = order[keep]
-    idx_k = idx[sel]
-    ts_vals = pdf["ts"].to_numpy()[sel]
-    ts_us = ts_vals.astype("datetime64[us]").astype("int64")
+    ts_us = pdf["ts"].to_numpy()[sel].astype("datetime64[us]").astype("int64")
     prev = np.empty_like(ts_us)
     prev[1:] = ts_us[:-1]
-    emit = np.ones(len(ts_us), dtype=bool)
-    if last_us is not None:
-        prev[0] = last_us
-    else:
-        prev[0] = 0
-        emit[0] = False  # a conversation's first-ever turn has no delta
-    state.update((int(idx_k[-1]), int(ts_us[-1])))
+    prev[0] = 0 if last_us is None else last_us
+    has_delta = np.ones(len(ts_us), dtype=bool)
+    has_delta[0] = last_us is not None
+    new_state = (int(idx[sel[-1]]), int(ts_us[-1]))
+    return pdf, sel, (ts_us - prev) // 1000, has_delta, new_state
+
+
+def _delta_state_fn(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Per-conversation delta extraction, state = last (turn_idx, ts µs)."""
+    (conv_id,) = key
+    ext = _extend_deltas(pdfs, *(state.get if state.exists else (None, None)))
+    if ext is None:
+        return
+    pdf, sel, delta, emit, new_state = ext
+    state.update(new_state)
     if emit.any():
+        rows = sel[emit]
         yield pd.DataFrame(
             {
                 "conv_id": conv_id,
-                "turn_idx": idx_k[emit],
-                "ts": ts_vals[emit],
-                "tool": pdf["tool"].to_numpy()[sel][emit],
-                "delta_ms": ((ts_us - prev) // 1000)[emit],
+                "turn_idx": pdf["turn_idx"].to_numpy()[rows],
+                "ts": pdf["ts"].to_numpy()[rows],
+                "tool": pdf["tool"].to_numpy()[rows],
+                "delta_ms": delta[emit],
             }
         )
 
 
 def stream_deltas(turns: DataFrame) -> DataFrame:
-    """Streaming inter-turn deltas with per-conversation state."""
+    """Streaming inter-turn deltas with per-conversation state; rows
+    failing ``transcripts.valid_turn`` are dropped, as batch ``clean``
+    drops them."""
     return (
-        turns.select("conv_id", "turn_idx", "ts", "tool")
+        turns.where(valid_turn())
+        .select("conv_id", "turn_idx", "ts", "tool")
         .groupBy("conv_id")
         .applyInPandasWithState(
             _delta_state_fn,
@@ -217,11 +230,17 @@ def stream_session_stats(
     )
 
 
-def _tune_stream_partitions(spark: SparkSession) -> None:
-    """Size state/shuffle partitions to the session's parallelism for
-    streaming queries (round-6).  Streaming has no AQE coalescing, the
-    partition count freezes into the checkpoint at first start, and
-    every state partition pays per-microbatch store open/commit I/O —
+def _sink_once(
+    spark: SparkSession, df: DataFrame, checkpoint_dir: str, out_dir: str
+) -> None:
+    """Run ``df`` as one availableNow pass into an append-mode parquet
+    sink, checkpointed at ``checkpoint_dir``: process every unseen
+    file, update state, append what is final, stop.
+
+    State/shuffle partitions are sized to the session's parallelism
+    first (round-6).  Streaming has no AQE coalescing, the partition
+    count freezes into the checkpoint when the query starts, and every
+    state partition pays per-microbatch store open/commit I/O —
     measured on the 1M-turn stream bench at local[8]: 32 partitions
     (the batch 4×cores default of older rounds) 8.0 s vs 8 partitions
     5.9 s.  On a real cluster this is the executor-core count — the
@@ -231,6 +250,15 @@ def _tune_stream_partitions(spark: SparkSession) -> None:
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         str(spark.sparkContext.defaultParallelism),
+    )
+    (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
 
 
@@ -247,22 +275,13 @@ def run_session_stream_once(
     """One availableNow sessionization pass over a file-source event
     stream; closed sessions append to the parquet sink, open-session
     state survives in the checkpoint for the next pass."""
-    _tune_stream_partitions(spark)
     events = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
     )
     sessions = stream_session_stats(events, gap_seconds=gap_seconds, by=by)
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_once(spark, sessions, checkpoint_dir, out_dir)
 
 
 def read_turn_stream(
@@ -288,18 +307,9 @@ def run_stream_once(
     resume conversation state and watermarks.  ``max_files=1`` forces
     one microbatch per file — watermarks then advance between files,
     letting a later file flush earlier windows in the same pass."""
-    _tune_stream_partitions(spark)
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
     rollup = stream_minute_rollup(stream_deltas(turns))
-    q = (
-        rollup.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_once(spark, rollup, checkpoint_dir, out_dir)
 
 
 def stream_sliding_rollup(
@@ -346,18 +356,9 @@ def run_sliding_stream_once(
 ) -> None:
     """One availableNow pass of the hopping-window stream (same file
     choreography as ``run_stream_once``)."""
-    _tune_stream_partitions(spark)
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
     rollup = stream_sliding_rollup(stream_deltas(turns), length, hop)
-    q = (
-        rollup.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_once(spark, rollup, checkpoint_dir, out_dir)
 
 
 def stream_minute_errors(
@@ -395,18 +396,9 @@ def run_burn_stream_once(
 ) -> None:
     """One availableNow pass materializing the per-minute error counts
     (same file choreography as ``run_stream_once``)."""
-    _tune_stream_partitions(spark)
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
     counts = stream_minute_errors(turns)
-    q = (
-        counts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_once(spark, counts, checkpoint_dir, out_dir)
 
 
 # ------------------------------------------------ stateful alerting
@@ -462,25 +454,10 @@ def stream_threshold_alerts(
             last_idx, last_us, alert = state.get
         else:
             last_idx, last_us, alert = None, None, 0
-        batches = [p for p in pdfs if not p.empty]
-        if not batches:
+        ext = _extend_deltas(pdfs, last_idx, last_us)
+        if ext is None:
             return
-        pdf = pd.concat(batches).sort_values("turn_idx", kind="stable")
-        pdf = pdf.drop_duplicates(subset=["turn_idx"], keep="first")
-        if last_idx is not None:
-            pdf = pdf[pdf["turn_idx"] > last_idx]
-        if pdf.empty:
-            return
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-        prev_us = np.empty_like(ts_us)
-        prev_us[1:] = ts_us[:-1]
-        have_delta = np.ones(len(ts_us), dtype=bool)
-        if last_us is not None:
-            prev_us[0] = last_us
-        else:
-            prev_us[0] = 0
-            have_delta[0] = False  # first-ever turn has no delta
-        delta = (ts_us - prev_us) // 1000
+        pdf, sel, delta, have_delta, (new_idx, new_us) = ext
         raw = np.where(delta >= enter_i, 1, np.where(delta < exit_i, 0, -1))
         raw = np.where(have_delta, raw, -1)  # no observation holds state
         s = (
@@ -495,13 +472,13 @@ def stream_threshold_alerts(
         prev_state[0] = alert
         prev_state[1:] = s[:-1]
         trans = s != prev_state
-        state.update((int(pdf["turn_idx"].iloc[-1]), int(ts_us[-1]), int(s[-1])))
+        state.update((new_idx, new_us, int(s[-1])))
         if not trans.any():
             return
         out = pd.DataFrame(
             {
                 "conv_id": conv_id,
-                "turn_idx": pdf["turn_idx"].to_numpy()[trans],
+                "turn_idx": pdf["turn_idx"].to_numpy()[sel][trans],
                 "delta_ms": delta[trans],
                 "state": s[trans],
                 "direction": np.where(s[trans] == 1, "rising", "clearing"),
@@ -510,7 +487,8 @@ def stream_threshold_alerts(
         yield out
 
     return (
-        turns.select("conv_id", "turn_idx", "ts")
+        turns.where(valid_turn())
+        .select("conv_id", "turn_idx", "ts")
         .groupBy("conv_id")
         .applyInPandasWithState(
             fn, _ALERT_OUT, _ALERT_STATE, "append", GroupStateTimeout.NoTimeout
@@ -531,15 +509,6 @@ def run_alert_stream_once(
     transitions append to the parquet sink, per-conversation alert
     state survives in the checkpoint for the next pass (no watermark:
     transitions are final on arrival)."""
-    _tune_stream_partitions(spark)
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
     alerts = stream_threshold_alerts(turns, enter=enter, exit=exit)
-    q = (
-        alerts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_once(spark, alerts, checkpoint_dir, out_dir)

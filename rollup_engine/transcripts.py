@@ -21,8 +21,10 @@ Mapping events → transcripts (kept SQL-expressible for the oracle):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .deltas import DELTA_COL, delta_ms
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,6 +35,50 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a constant 4×cores measured ~40% slower at sf1.0 — see fanout.py)
     tune_shuffle_for_input(spark, input_size_bytes(path))
     return spark.read.parquet(path)
+
+
+def _event_turns(
+    spark: SparkSession, sf_dir: str, lag_delta: bool = False
+) -> DataFrame:
+    """The events → transcripts mapping above, plus the ordering
+    columns ``_ord_ts`` / ``event_id`` (callers drop them) and, with
+    ``lag_delta``, ``delta_ms`` over the SAME window.
+
+    ``ts`` is aliased to ``_ord_ts`` ONCE, below the sort, and the
+    window keys on the alias: the sort then carries through this
+    projection (and any filter over it), so a second window ordered by
+    ``(_ord_ts, event_id)`` needs no second Sort node.
+    """
+    ev = load_events(spark, sf_dir)
+    base = ev.select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        F.col("ts").alias("_ord_ts"),
+        "event_id",
+        "event_type",
+        "props",
+    )
+    w = Window.partitionBy("conv_id").orderBy("_ord_ts", "event_id")
+    # parquet TIMESTAMP_NTZ → session-TZ (UTC) instant; shift-free
+    ts = F.col("_ord_ts").cast("timestamp")
+    delta = [delta_ms(ts, F.lag(ts).over(w)).alias(DELTA_COL)] if lag_delta else []
+    return base.select(
+        "conv_id",
+        (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
+        F.col("event_type").alias("role"),
+        F.col("props").alias("text"),
+        F.when(
+            F.col("event_type") == "error",
+            F.when(F.col("event_id") % 2 == 0, F.lit("error:4xx")).otherwise(
+                F.lit("error:5xx")
+            ),
+        )
+        .otherwise(F.col("event_type"))
+        .alias("tool"),
+        ts.alias("ts"),
+        *delta,
+        "_ord_ts",
+        "event_id",
+    )
 
 
 def from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,31 +96,7 @@ def from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by test_from_events_single_exchange).  The cast is
     injective, so the groups — and row_number — are identical.
     """
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        "ts",
-        "event_id",
-        "event_type",
-        "props",
-    )
-    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
-    return base.select(
-        "conv_id",
-        (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.when(
-            F.col("event_type") == "error",
-            F.when(F.col("event_id") % 2 == 0, F.lit("error:4xx")).otherwise(
-                F.lit("error:5xx")
-            ),
-        )
-        .otherwise(F.col("event_type"))
-        .alias("tool"),
-        # parquet TIMESTAMP_NTZ → session-TZ (UTC) instant; shift-free
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
+    return _event_turns(spark, sf_dir).drop("_ord_ts", "event_id")
 
 
 def events_deltas(
@@ -93,42 +115,10 @@ def events_deltas(
     identical to the composition (pinned by
     tests/test_plans.py::test_events_deltas_fused_matches_composition).
     """
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        "ts",
-        "event_id",
-        "event_type",
-        "props",
-    )
-    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
-    ts_cast = F.col("ts").cast("timestamp")
-    # delta arithmetic copied verbatim from deltas.with_deltas so the
-    # IEEE operation order (and hence the oracle hash) cannot drift
-    out = base.select(
-        "conv_id",
-        (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.when(
-            F.col("event_type") == "error",
-            F.when(F.col("event_id") % 2 == 0, F.lit("error:4xx")).otherwise(
-                F.lit("error:5xx")
-            ),
-        )
-        .otherwise(F.col("event_type"))
-        .alias("tool"),
-        ts_cast.alias("ts"),
-        F.floor(
-            (F.unix_micros(ts_cast) - F.unix_micros(F.lag(ts_cast).over(w)))
-            / F.lit(1000)
-        )
-        .cast("long")
-        .alias("delta_ms"),
-    )
+    out = _event_turns(spark, sf_dir, lag_delta=True).drop("_ord_ts", "event_id")
     if keep_first_turn:
         return out
-    return out.where(F.col("delta_ms").isNotNull())
+    return out.where(F.col(DELTA_COL).isNotNull())
 
 
 def events_deltas_filtered(
@@ -147,54 +137,16 @@ def events_deltas_filtered(
     the lag window needs NO second Sort node — one exchange, one sort,
     two Window passes (the second over only the filtered rows).
     """
-    ev = load_events(spark, sf_dir)
-    # alias the ordering column ONCE, below the first sort, and key BOTH
-    # window specs on the alias: the first window's sort then carries
-    # through the projection and the filter, and the lag window's
-    # required ordering matches it syntactically — no second Sort node
-    base = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("ts").alias("_ord_ts"),
-        "event_id",
-        "event_type",
-        "props",
-    )
+    f = _event_turns(spark, sf_dir).where(condition)
     w = Window.partitionBy("conv_id").orderBy("_ord_ts", "event_id")
-    ts_cast = F.col("_ord_ts").cast("timestamp")
-    t = base.select(
-        "conv_id",
-        (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.when(
-            F.col("event_type") == "error",
-            F.when(F.col("event_id") % 2 == 0, F.lit("error:4xx")).otherwise(
-                F.lit("error:5xx")
-            ),
-        )
-        .otherwise(F.col("event_type"))
-        .alias("tool"),
-        ts_cast.alias("ts"),
-        "_ord_ts",
-        "event_id",
-    )
-    f = t.where(condition)
-    w2 = Window.partitionBy("conv_id").orderBy("_ord_ts", "event_id")
-    out = (
-        f.withColumn(
-            "delta_ms",
-            F.floor(
-                (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w2)))
-                / F.lit(1000)
-            ).cast("long"),
-        )
-        .drop("_ord_ts", "event_id")
-    )
-    return out.where(F.col("delta_ms").isNotNull())
+    out = f.withColumn(
+        DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w))
+    ).drop("_ord_ts", "event_id")
+    return out.where(F.col(DELTA_COL).isNotNull())
 
 
-# The same mapping as ANSI SQL for the DuckDB oracle (single source of
-# truth — __spark_entry__.py embeds this as a CTE).
+# The same mapping as ANSI SQL for the DuckDB oracle (__spark_entry__.py
+# embeds this as a CTE).
 EVENTS_TO_TRANSCRIPTS_SQL = """
     SELECT
         CAST(user_id AS VARCHAR) AS conv_id,
@@ -211,18 +163,24 @@ EVENTS_TO_TRANSCRIPTS_SQL = """
 """
 
 
-def clean(df: DataFrame) -> DataFrame:
-    """Malformed-row tolerance (reference drops unparseable lines
-    silently, /root/reference/src/main.rs:103-107): rows with null
-    ts / null conv_id / null-or-negative turn_idx are dropped; duplicate
-    (conv_id, turn_idx) keep the earliest-ts row (stable ordering).
-    """
-    valid = df.where(
+def valid_turn() -> Column:
+    """The row validity rule shared by batch ``clean`` and the stream
+    operators: non-NULL conv_id / turn_idx / ts and turn_idx ≥ 0."""
+    return (
         F.col("ts").isNotNull()
         & F.col("conv_id").isNotNull()
         & F.col("turn_idx").isNotNull()
         & (F.col("turn_idx") >= 0)
     )
+
+
+def clean(df: DataFrame) -> DataFrame:
+    """Malformed-row tolerance (reference drops unparseable lines
+    silently, /root/reference/src/main.rs:103-107): rows failing
+    ``valid_turn`` are dropped; duplicate (conv_id, turn_idx) keep the
+    earliest-ts row (stable ordering).
+    """
+    valid = df.where(valid_turn())
     # Dedupe with the SAME window partitioning the downstream lag uses
     # (conv_id), ordered by (turn_idx, ts): a row survives iff it is the
     # first row of its turn_idx.  Catalyst then reuses one exchange and

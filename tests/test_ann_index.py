@@ -110,7 +110,7 @@ def _clustered_fixture(spark, n_clusters=8, per_cluster=250, dim=16, seed=7):
 
 def _recall(spark, df, path, qv, k=10, nprobe=2):
     truth = {
-        r.vec_id for r in ann.cosine_topk(df, qv, k=k, method="fold").collect()
+        r.vec_id for r in ann.cosine_topk(df, qv, k=k).collect()
     }
     got = {
         r.vec_id

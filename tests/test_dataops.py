@@ -104,19 +104,6 @@ def test_ann_bruteforce_orders_by_cosine(spark):
     assert {r.vec_id for r in top} & {2} == set()  # opposite vector excluded
 
 
-def test_ann_pandas_path_matches_fold(spark):
-    """The Arrow/numpy scale path must agree with the JVM fold within
-    rounding (different summation order ⇒ last-ulp differences only)."""
-    rng = np.random.RandomState(5)
-    q = rng.normal(size=32)
-    d = _emb_df(spark, [rng.normal(size=32) for _ in range(50)])
-    fold = ann.cosine_topk(d, q.tolist(), k=10, method="fold").collect()
-    pand = ann.cosine_topk(d, q.tolist(), k=10, method="pandas").collect()
-    assert [r.vec_id for r in fold] == [r.vec_id for r in pand]
-    for a, b in zip(fold, pand):
-        assert abs(a.score - b.score) < 2e-6
-
-
 def test_ann_lsh_recall(spark):
     rng = np.random.RandomState(11)
     q = rng.normal(size=32)

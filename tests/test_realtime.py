@@ -91,3 +91,16 @@ def test_conv_state_is_last_pre_split_turn(spark, tier_setup):
     st = conv_state_at(t, split)
     assert st.where(f"ts >= timestamp'{split}'").count() == 0
     assert st.groupBy("conv_id").count().where("count > 1").count() == 0
+
+
+def test_realtime_accepts_checkpoint_shaped_state(spark, tier_setup):
+    """Production passes the incremental checkpoint's conversation
+    state, which carries only (conv_id, turn_idx, ts)."""
+    from rollup_engine.deltas import last_turns
+
+    t, split, path = tier_setup
+    state = last_turns(t.where(f"ts < timestamp'{split}'"))
+    assert state.columns == ["conv_id", "turn_idx", "ts"]
+    got = realtime_rollup(spark, path, t, "minute", split, conv_state=state)
+    want = hist_rollup(with_deltas(t), "minute")
+    pd.testing.assert_frame_equal(_pdf(want), _pdf(got), check_dtype=False)

@@ -196,3 +196,139 @@ def test_stream_alerts_first_observation_above(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "o")).collect()
     )
     assert got == [(1, 1, "rising"), (2, 0, "clearing")]
+
+
+# ------------------------------------------------ input validity
+
+def _conv_with_bad_turn(bad):
+    """conv a: turns 0, 1, 3 at +0/+7/+30 ms plus the ``bad`` row, and
+    a watermark conversation that closes a's minute bucket."""
+    t0 = dt.datetime(2024, 1, 1)
+    ms = dt.timedelta(milliseconds=1)
+    return [
+        ("a", 0, "user", "x", "", t0),
+        ("a", 1, "user", "x", "", t0 + 7 * ms),
+        bad,
+        ("a", 3, "user", "x", "", t0 + 30 * ms),
+    ] + _turns("wm", "2024-01-01T12:00:00", [5])
+
+
+def _minute_bucket(spark, out):
+    r = next(
+        r for r in spark.read.parquet(out).collect()
+        if r.bucket_start == dt.datetime(2024, 1, 1)
+    )
+    return (r.turn_count, r.lat_min_ms, r.lat_max_ms)
+
+
+def test_stream_drops_null_ts_turn_like_clean(spark, tmp_path):
+    """A turn with NULL ts is dropped before the stateful stage, as
+    batch ``clean`` drops it — it must not reach the numpy kernel as a
+    NaT and turn into a garbage delta."""
+    from rollup_engine.deltas import with_deltas
+    from rollup_engine.hist_rollup import hist_rollup
+    from rollup_engine.transcripts import clean
+
+    rows = _conv_with_bad_turn(("a", 2, "user", "x", "", None))
+    inp, out = str(tmp_path / "turns"), str(tmp_path / "out")
+    _write_batch(spark, inp, rows)
+    run_stream_once(spark, inp, str(tmp_path / "ckpt"), out)
+
+    batch = hist_rollup(
+        with_deltas(clean(spark.createDataFrame(rows, TRANSCRIPT_SCHEMA))),
+        "minute",
+    ).where("bucket_start = timestamp'2024-01-01 00:00:00'").first()
+    want = (batch.turn_count, batch.lat_min_ms, batch.lat_max_ms)
+    assert want == (2, 7, 23)
+    assert _minute_bucket(spark, out) == want
+
+
+def test_stream_null_turn_idx_does_not_fail_the_stream(spark, tmp_path):
+    """A turn with NULL turn_idx is dropped by both stateful stream
+    operators (the delta rollup and the alert stream) instead of
+    failing every pass on the same unprocessed file."""
+    from rollup_engine.streaming import run_alert_stream_once
+
+    rows = _conv_with_bad_turn(
+        ("a", None, "user", "x", "", dt.datetime(2024, 1, 1, 0, 0, 0, 20_000))
+    )
+    inp = str(tmp_path / "turns")
+    _write_batch(spark, inp, rows)
+
+    out = str(tmp_path / "out")
+    run_stream_once(spark, inp, str(tmp_path / "ckpt"), out)
+    assert _minute_bucket(spark, out) == (2, 7, 23)
+
+    alerts = str(tmp_path / "alerts")
+    run_alert_stream_once(
+        spark, inp, str(tmp_path / "ackpt"), alerts, enter=20, exit=10
+    )
+    got = sorted(
+        (r.conv_id, r.turn_idx, r.delta_ms, r.direction)
+        for r in spark.read.parquet(alerts).collect()
+    )
+    assert got == [("a", 3, 23, "rising")]
+
+
+# ------------------------------------------------ shared numpy kernel
+
+def _kernel(turn_idx, ts_ms, last_idx=None, last_us=None, split=None):
+    """Run ``_extend_deltas`` over one conversation's rows (optionally
+    split into two Arrow batches); returns (kept turn_idx, delta_ms,
+    has_delta, new_state) or None."""
+    import numpy as np
+    import pandas as pd
+
+    from rollup_engine.streaming import _extend_deltas
+
+    t0 = np.datetime64("2024-01-01T00:00:00", "ns")
+    pdf = pd.DataFrame(
+        {
+            "turn_idx": np.asarray(turn_idx, dtype=np.int32),
+            "ts": t0 + np.asarray(ts_ms, dtype="timedelta64[ms]"),
+        }
+    )
+    pdfs = [pdf] if split is None else [pdf.iloc[:split], pdf.iloc[split:]]
+    ext = _extend_deltas(iter(pdfs), last_idx, last_us)
+    if ext is None:
+        return None
+    out, sel, delta, has, new_state = ext
+    return (
+        out["turn_idx"].to_numpy()[sel].tolist(),
+        delta[has].tolist(),
+        has.tolist(),
+        new_state,
+    )
+
+
+def test_extend_deltas_kernel():
+    t0_us = 1_704_067_200_000_000  # 2024-01-01T00:00:00 in epoch µs
+
+    # first-ever turn of a conversation has no delta; an unsorted batch
+    # (split across two Arrow batches) is put in turn order
+    idx, delta, has, state = _kernel([2, 0, 1], [30, 0, 7], split=1)
+    assert idx == [0, 1, 2]
+    assert has == [False, True, True]
+    assert delta == [7, 23]
+    assert state == (2, t0_us + 30_000)
+
+    # a duplicate turn_idx keeps its first occurrence and advances the
+    # state once: the later copy (ts +500) neither emits nor moves ts
+    idx, delta, has, state = _kernel([0, 1, 1], [0, 7, 500])
+    assert idx == [0, 1]
+    assert delta == [7]
+    assert state == (1, t0_us + 7_000)
+
+    # seeded from checkpointed state: the first kept turn's delta is
+    # taken against the state ts; re-delivered turns at or below
+    # last_idx are dropped
+    idx, delta, has, state = _kernel(
+        [1, 2, 3], [7, 20, 30], last_idx=2, last_us=t0_us + 19_000
+    )
+    assert idx == [3]
+    assert has == [True]
+    assert delta == [11]
+    assert state == (3, t0_us + 30_000)
+
+    # a batch of nothing but re-deliveries emits nothing and keeps state
+    assert _kernel([0, 1], [0, 7], last_idx=1, last_us=t0_us) is None
