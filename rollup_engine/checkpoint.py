@@ -18,7 +18,12 @@ Layout:
 Manifests are deterministic (no wall clock): snapshot ids are dense
 integers; lineage records per-file row counts and ts min/max harvested
 from parquet footers (the analog of Iceberg's column stats, used for
-file skipping).
+file skipping), and ``schema`` records the appended DataFrame's schema
+so reads skip Spark's parquet schema inference (one Spark job per
+read).  Reads parse only the manifests of the requested range: the
+current id is the newest manifest's file name, and expiry always
+tombstones a prefix, so a range is expired exactly when its first
+manifest is a tombstone.
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -69,24 +75,34 @@ class SnapshotStore:
             os.path.relpath(p, self.root)
             for p in glob.glob(os.path.join(out_dir, "*.parquet"))
         )
-        manifest = {
-            "snapshot_id": sid,
-            "parent_id": sid - 1 if sid > 1 else None,
-            "files": files,
-            "lineage": self._file_stats(files),
-            "metrics": {
-                "added_files": len(files),
-                "added_rows": sum(
-                    s["rows"] for s in self._file_stats(files).values()
-                ),
-            },
-        }
+        lineage = self._file_stats(files)
+        self._commit(
+            {
+                "snapshot_id": sid,
+                "parent_id": sid - 1 if sid > 1 else None,
+                "files": files,
+                "schema": df.schema.jsonValue(),
+                "lineage": lineage,
+                "metrics": {
+                    "added_files": len(files),
+                    "added_rows": sum(s["rows"] for s in lineage.values()),
+                },
+            }
+        )
+        return sid
+
+    def _manifest_path(self, sid: int) -> str:
+        return os.path.join(self.root, "_manifests", f"v{sid:08d}.json")
+
+    def _commit(self, manifest: dict) -> None:
+        """Write a manifest atomically (tmp + rename): a crash before
+        the rename leaves the previous state."""
+        sid = manifest["snapshot_id"]
         tmp = os.path.join(self.root, "_manifests", f".v{sid:08d}.json.tmp")
-        final = os.path.join(self.root, "_manifests", f"v{sid:08d}.json")
+        final = self._manifest_path(sid)
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
-        os.rename(tmp, final)  # atomic commit — crash before this = no-op
-        return sid
+        os.rename(tmp, final)
 
     def _file_stats(self, files: list[str]) -> dict:
         import pyarrow.parquet as pq
@@ -118,15 +134,18 @@ class SnapshotStore:
                 out.append(json.load(f))
         return out
 
-    def current_snapshot_id(self) -> int:
-        ms = self.manifests()
-        return ms[-1]["snapshot_id"] if ms else 0
+    def _manifest(self, sid: int) -> dict:
+        with open(self._manifest_path(sid)) as f:
+            return json.load(f)
 
-    def max_expired_id(self) -> int:
-        return max(
-            (m["snapshot_id"] for m in self.manifests() if m.get("expired")),
-            default=0,
-        )
+    def current_snapshot_id(self) -> int:
+        """The newest manifest's id, from its file name (no parse)."""
+        names = [
+            n
+            for n in os.listdir(os.path.join(self.root, "_manifests"))
+            if n.startswith("v") and n.endswith(".json")
+        ]
+        return int(max(names)[1:-5]) if names else 0
 
     def expire_snapshots(self, up_to: int, applied_watermark: int) -> dict:
         """Iceberg ``expire_snapshots`` analog, gated on the refresh
@@ -148,10 +167,8 @@ class SnapshotStore:
                 f"is {applied_watermark} — unapplied raw data would be lost"
             )
         removed_files = removed_rows = expired = 0
-        for m in self.manifests():
-            sid = m["snapshot_id"]
-            if sid > up_to:
-                continue
+        for sid in range(1, min(up_to, self.current_snapshot_id()) + 1):
+            m = self._manifest(sid)
             data_dir = os.path.join(self.root, "data", f"s{sid:08d}")
             if m.get("expired"):
                 # Orphan sweep: a crash between the tombstone commit and
@@ -172,13 +189,7 @@ class SnapshotStore:
             removed_rows += sum(s["rows"] for s in m["lineage"].values())
             m["expired"] = True
             m["files"] = []
-            tmp = os.path.join(
-                self.root, "_manifests", f".v{sid:08d}.json.tmp"
-            )
-            final = os.path.join(self.root, "_manifests", f"v{sid:08d}.json")
-            with open(tmp, "w") as f:
-                json.dump(m, f, indent=1, sort_keys=True)
-            os.rename(tmp, final)
+            self._commit(m)
             for rel in data_files:
                 p = os.path.join(self.root, rel)
                 if os.path.exists(p):
@@ -192,37 +203,41 @@ class SnapshotStore:
             "removed_rows": removed_rows,
         }
 
-    def _files_between(self, since: int, until: int | None) -> list[str]:
-        exp = self.max_expired_id()
-        if since < exp:
+    def _manifests_between(self, since: int, until: int | None) -> list[dict]:
+        """Manifests of snapshots (since, until], parsing only those."""
+        current = self.current_snapshot_id()
+        until = current if until is None else min(until, current)
+        ms = [self._manifest(sid) for sid in range(since + 1, until + 1)]
+        if ms and ms[0].get("expired"):
             raise SnapshotExpiredError(
-                f"snapshots ≤ {exp} are expired; cannot read range "
+                f"snapshot {since + 1} is expired; cannot read range "
                 f"({since}, {until}] — the rollup tiers carry that "
                 "history"
             )
-        files = []
-        for m in self.manifests():
-            if m["snapshot_id"] > since and (
-                until is None or m["snapshot_id"] <= until
-            ):
-                files.extend(m["files"])
-        return files
+        return ms
 
     def read(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         """Full-table read (optionally time-traveled to a snapshot)."""
-        files = self._files_between(0, as_of)
-        return self._read_files(spark, files)
+        return self._read_files(spark, self._manifests_between(0, as_of))
 
     def incremental(
         self, spark: SparkSession, since: int, until: int | None = None
     ) -> DataFrame:
         """Rows appended in snapshots (since, until] — the Iceberg
         incremental-scan analog."""
-        return self._read_files(spark, self._files_between(since, until))
+        return self._read_files(spark, self._manifests_between(since, until))
 
-    def _read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
+    def _read_files(self, spark: SparkSession, manifests: list[dict]) -> DataFrame:
+        """Scan the manifests' files with their recorded schema; infer it
+        (one Spark job) when a manifest predates the ``schema`` key or
+        the range mixes schemas."""
+        files = [os.path.join(self.root, f) for m in manifests for f in m["files"]]
         if not files:
             from .schema import TRANSCRIPT_SCHEMA
 
             return spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+        schemas = [m.get("schema") for m in manifests if m["files"]]
+        reader = spark.read
+        if schemas[0] is not None and all(x == schemas[0] for x in schemas):
+            reader = reader.schema(T.StructType.fromJson(schemas[0]))
+        return reader.parquet(*files)

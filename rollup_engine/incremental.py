@@ -38,10 +38,19 @@ from .deltas import last_turns, seeded_turns, with_deltas
 from .hist_rollup import HIST_ROLLUP_FIELDS, hist_cascade, hist_rollup
 from .transcripts import clean
 
+# Tier files are read with this schema, never inferred: inference is a
+# Spark job per read, and the schema also drops columns that tier files
+# written by older engine versions still carry (a since-dropped sketch
+# column).
 _TIER_SCHEMA = T.StructType(
-    [*HIST_ROLLUP_FIELDS, T.StructField("tier", T.StringType())]
+    [T.StructField("tier", T.StringType()), *HIST_ROLLUP_FIELDS]
 )
-_TIER_COLS = ["tier", *[f.name for f in HIST_ROLLUP_FIELDS]]
+# the conversation state's columns; their types are the batch's
+_STATE_COLS = ("conv_id", "turn_idx", "ts")
+
+
+def _read_tier(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_TIER_SCHEMA).parquet(path)
 
 
 class IncrementalRollup:
@@ -78,14 +87,11 @@ class IncrementalRollup:
         return os.path.join(self.workdir, f"conv_state_v{version:08d}")
 
     def read_rollup(self, spark: SparkSession, tier: str | None = None) -> DataFrame:
-        """The committed tier, projected to the current tier columns —
-        tier files written by older engine versions may carry extra
-        columns (e.g. a since-dropped sketch column)."""
+        """The committed tier, in the current tier columns."""
         ck = self.checkpoint()
         if ck["version"] == 0:
-            return spark.createDataFrame([], _TIER_SCHEMA).select(*_TIER_COLS)
-        path = self.rollup_path(ck["version"], tier)
-        return spark.read.parquet(path).select(*_TIER_COLS)
+            return spark.createDataFrame([], _TIER_SCHEMA)
+        return _read_tier(spark, self.rollup_path(ck["version"], tier))
 
     # -------------------------------------------------------------- run
 
@@ -102,7 +108,9 @@ class IncrementalRollup:
         # --- boundary stitch: seed each conv with its last known turn
         # (and drop re-delivered turns at or below it)
         if ck["version"] > 0:
-            state = spark.read.parquet(self.state_path(ck["version"]))
+            state = spark.read.schema(
+                T.StructType([turns.schema[c] for c in _STATE_COLS])
+            ).parquet(self.state_path(ck["version"]))
             turns = seeded_turns(turns, state)
 
         new_rollup = hist_rollup(with_deltas(turns), self.tier)
@@ -126,15 +134,14 @@ class IncrementalRollup:
         new_state = last_turns(turns)
 
         # --- versioned writes, checkpoint pointer flipped last
-        result.write.mode("overwrite").parquet(self.rollup_path(version))
-        # coarser tiers cascade from the refreshed base tier (reading
-        # the just-written files — tiny, never raw data)
-        base = spark.read.parquet(self.rollup_path(version))
-        prev_tier = base
+        path = self.rollup_path(version)
+        result.write.mode("overwrite").parquet(path)
+        # each coarser tier cascades from the one just written below it
+        # (tiny tier files, never raw data)
         for ct in self.cascade_tiers:
-            casc = hist_cascade(prev_tier, ct)
-            casc.write.mode("overwrite").parquet(self.rollup_path(version, ct))
-            prev_tier = spark.read.parquet(self.rollup_path(version, ct))
+            casc = hist_cascade(_read_tier(spark, path), ct)
+            path = self.rollup_path(version, ct)
+            casc.write.mode("overwrite").parquet(path)
         new_state.write.mode("overwrite").parquet(self.state_path(version))
         # Commit metrics from the just-written parquet FOOTERS (pyarrow
         # metadata read, no Spark job) — the write itself already

@@ -63,10 +63,12 @@ def trailing_result(
         edge_rollup = hist_rollup(edge_rows, "minute")
         in_window = in_window.unionByName(edge_rollup)
     # collapse every in-window bucket onto one key, then same-tier
-    # cascade = merge-all (associative state merge)
-    one_key = in_window.withColumn(
-        "bucket_start", F.date_trunc("minute", F.lit(now).cast("timestamp"))
-    )
+    # cascade = merge-all (associative state merge).  The key is a fixed
+    # constant, not ``now``: Spark writes timestamp literals into the
+    # generated Java, so a ``now`` key would give every stage of the
+    # merge new code each minute; this way only the window filter does.
+    # The result never reads ``bucket_start``.
+    one_key = in_window.withColumn("bucket_start", F.timestamp_seconds(F.lit(0)))
     merged = hist_cascade(one_key, "minute").collect()
     if not merged:
         return RollupResult(count=0)

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import datetime as dt
+import itertools
+from typing import Any, NamedTuple
 
 import pytest
 
@@ -37,3 +39,37 @@ def ts_seq(base: str, deltas_ms: list[int]) -> list[str]:
         t = t + dt.timedelta(milliseconds=d)
         out.append(t.isoformat())
     return out
+
+
+class SparkWork(NamedTuple):
+    result: Any
+    jobs: list[int]  # ids of the Spark jobs the callable ran
+    compiles: int  # classes the code generator compiled meanwhile
+
+
+_probe_ids = itertools.count()
+
+
+def spark_work(spark, fn) -> SparkWork:
+    """Run ``fn()`` and report the Spark work it caused.
+
+    Jobs are the ones tagged with a job group set for the call (jobs
+    inherit the calling thread's group).  Compiles come from Spark's
+    JVM-wide codegen compilation counter, so nothing else may run
+    Spark code meanwhile — a compile is a generated class missing from
+    the codegen cache.
+    """
+    sc = spark.sparkContext
+    counter = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    group = f"spark-work-{next(_probe_ids)}"
+    before = counter.getCount()
+    sc.setJobGroup(group, "")
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup("idle", "")
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    return SparkWork(result, jobs, counter.getCount() - before)

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from rollup_engine import ann, dedup, textops
 
+from .conftest import spark_work
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from a warm window sill and the birds sing in the garden outside"
@@ -417,15 +419,14 @@ def test_knn_join_auto_shards_above_broadcast_threshold(spark):
             qs.select("vec_id", F.col("embedding").cast("array<double>"))
         )
         assert n > 1, "query side above 1KB must pick >1 shard"
-        sc = spark.sparkContext
-        sc.setJobGroup("auto-shard-probe", "auto shard count must be lazy")
-        try:
+
+        def build():
             auto = ann.knn_join(e, qs, k=5)  # no query_shards passed
             _ = auto.columns
-            jobs = sc.statusTracker().getJobIdsForGroup("auto-shard-probe")
-            assert list(jobs) == [], "auto-sharding ran a job at plan build"
-        finally:
-            sc.setJobGroup("", "")
+            return auto
+
+        auto, jobs, _ = spark_work(spark, build)
+        assert jobs == [], "auto-sharding ran a job at plan build"
         plan = auto._sc._jvm.PythonSQLUtils.explainString(
             auto._jdf.queryExecution(), "formatted"
         )
@@ -444,9 +445,8 @@ def test_ann_plan_build_runs_no_jobs(spark):
     e = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).withMetadata("embedding", {"dim": 64})
-    sc = spark.sparkContext
-    sc.setJobGroup("ann-plan-probe", "ann plan builds must be lazy")
-    try:
+
+    def build():
         a = ann.knn_join_lsh(e, e.where("vec_id < 4"), k=5, dim=64)
         b = ann.cosine_pairs(e, threshold=0.9, nbits=8)  # dim via metadata
         for df in (a, b):
@@ -454,10 +454,9 @@ def test_ann_plan_build_runs_no_jobs(spark):
             _ = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-    finally:
-        sc.setJobGroup("idle", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("ann-plan-probe")
-    assert list(jobs) == [], f"ANN plan build ran Spark jobs: {list(jobs)}"
+
+    jobs = spark_work(spark, build).jobs
+    assert jobs == [], f"ANN plan build ran Spark jobs: {jobs}"
 
 
 def test_zero_norm_vectors_park_in_first_list(spark):

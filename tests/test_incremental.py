@@ -16,6 +16,8 @@ from rollup_engine.hist_rollup import hist_rollup
 from rollup_engine.incremental import IncrementalRollup
 from rollup_engine.transcripts import clean
 
+from .conftest import make_transcript, spark_work
+
 METRICS = [
     "bucket_start", "turn_count", "lat_min_ms", "lat_max_ms", "lat_avg_ms",
     "lat_p50_ms", "lat_p90_ms", "lat_p99_ms", "lat_sum_ms",
@@ -168,6 +170,101 @@ def test_lineage_manifests(spark, data):
     # incremental read returns exactly batch-2 rows
     inc = store.incremental(spark, 1, 2)
     assert inc.count() == ms[1]["metrics"]["added_rows"]
+
+def test_third_refresh_compiles_no_code(spark, data):
+    """Append → refresh is the steady state: once a store has refreshed
+    warm, the next refresh reuses every generated class.  The session's
+    codegen cache holds the cycle's working set; Spark's default 100
+    entries made every warm refresh recompile about 120 classes."""
+    full, _b1, _b2, store, work = data
+    job = IncrementalRollup(store, work)
+    for lo, hi in ((0, 14), (14, 27), (27, 40)):
+        store.append(full.where(f"turn_idx >= {lo} AND turn_idx < {hi}"))
+        compiles = spark_work(spark, lambda: job.refresh(spark)).compiles
+    assert compiles == 0
+
+
+def test_reads_build_without_spark_jobs(spark, data):
+    """Snapshot and tier reads use the schema recorded at write time,
+    so building them runs no parquet schema-inference job."""
+    _full, b1, b2, store, work = data
+    job = IncrementalRollup(store, work)
+    store.append(b1)
+    store.append(b2)
+    job.refresh(spark)
+    for build in (
+        lambda: store.incremental(spark, 1, 2),
+        lambda: store.read(spark),
+        lambda: store.read(spark, as_of=1),
+        lambda: job.read_rollup(spark),
+        lambda: job.read_rollup(spark, "day"),
+    ):
+        jobs = spark_work(spark, build).jobs
+        assert jobs == [], f"read build ran Spark jobs: {jobs}"
+    assert store.manifests()[0]["schema"] == b1.schema.jsonValue()
+    assert store.incremental(spark, 1, 2).count() == b2.count()
+
+
+def test_reads_without_one_recorded_schema_infer_it(spark, data):
+    """A manifest written before manifests carried ``schema``, and a
+    range whose snapshots differ in schema, still read — through
+    parquet schema inference (one Spark job at build)."""
+    full, b1, b2, store, _work = data
+    store.append(b1)
+    store.append(b2.select(*reversed(b2.columns)))  # same columns, new order
+    mixed, jobs, _ = spark_work(spark, lambda: store.read(spark))
+    assert len(jobs) == 1
+    mixed = mixed.select(*full.columns)
+    assert mixed.exceptAll(full).count() == 0
+    assert full.exceptAll(mixed).count() == 0
+
+    mpath = os.path.join(store.root, "_manifests", "v00000001.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    old, jobs, _ = spark_work(spark, lambda: store.read(spark, as_of=1))
+    assert len(jobs) == 1
+    assert old.exceptAll(b1).count() == 0 and b1.exceptAll(old).count() == 0
+
+
+def test_range_read_parses_only_its_manifests(spark, tmp_path, monkeypatch):
+    """Manifest reads are O(range), not O(history): the current id
+    comes from the newest manifest's file name, and an incremental read
+    of the last snapshot parses that snapshot's manifest alone.  Reads
+    that start in an expired prefix still fail fast."""
+    from rollup_engine import checkpoint as ckpt_mod
+    from rollup_engine.checkpoint import SnapshotExpiredError
+
+    store = SnapshotStore(str(tmp_path / "store"))
+    n = 4
+    for i in range(n):
+        store.append(
+            make_transcript(
+                spark, [(f"c{i}", 0, "user", "x", "", "2024-01-01T00:00:00")]
+            )
+        )
+    real_load = json.load
+    parsed = []
+
+    def counting_load(f):
+        parsed.append(f.name)
+        return real_load(f)
+
+    monkeypatch.setattr(ckpt_mod.json, "load", counting_load)
+    assert store.current_snapshot_id() == n and parsed == []
+    inc = store.incremental(spark, n - 1, n)
+    assert len(parsed) <= 1
+    monkeypatch.setattr(ckpt_mod.json, "load", real_load)
+    assert [r.conv_id for r in inc.collect()] == [f"c{n - 1}"]
+
+    store.expire_snapshots(up_to=2, applied_watermark=2)
+    for since, until in ((0, 1), (1, n), (0, None)):
+        with pytest.raises(SnapshotExpiredError):
+            store.incremental(spark, since, until)
+    assert store.incremental(spark, 2, n).count() == 2
+
 
 def test_rollup_diff_statuses(spark):
     from rollup_engine.incremental import rollup_diff

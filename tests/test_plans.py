@@ -10,6 +10,8 @@ from rollup_engine.deltas import with_deltas
 from rollup_engine.rollup import rollup
 from rollup_engine.transcripts import from_events, load_events
 
+from .conftest import spark_work
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -174,26 +176,22 @@ def test_hist_plan_build_runs_no_jobs(spark):
     """Plan construction must be FREE: building the minute tier, both
     cascades, and a trailing-window merge runs zero Spark jobs (round-2
     verdict: the eager localCheckpoint + isEmpty/first probes made plan
-    build execute upstream jobs — the wrong default shape at 100×).
-    Jobs triggered while the probe job group is active would be tagged
-    with it; the group must stay empty."""
+    build execute upstream jobs — the wrong default shape at 100×)."""
     from rollup_engine.hist_rollup import hist_cascade, hist_rollup
     from rollup_engine.serve import trailing_result  # noqa: F401 (import ok)
 
-    sc = spark.sparkContext
     d = with_deltas(from_events(spark, SF))
-    sc.setJobGroup("plan-build-probe", "hist plans must be lazy")
-    try:
+
+    def build():
         minute = hist_rollup(d, "minute")
         hour = hist_cascade(minute, "hour")
         day = hist_cascade(hour, "day")
         for df in (minute, hour, day):
             _ = df.columns          # force analysis
             _ = _plan(df)           # force full physical planning
-    finally:
-        sc.setJobGroup("idle", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("plan-build-probe")
-    assert list(jobs) == [], f"plan build ran Spark jobs: {list(jobs)}"
+
+    jobs = spark_work(spark, build).jobs
+    assert jobs == [], f"plan build ran Spark jobs: {jobs}"
 
 
 def test_hist_rollup_no_python_no_lineage_truncation(spark):

@@ -13,7 +13,7 @@ from rollup_engine.deltas import with_deltas
 from rollup_engine.hist_rollup import hist_rollup
 from rollup_engine.serve import serve_prometheus, trailing_result
 
-from .conftest import make_transcript, ts_seq
+from .conftest import make_transcript, spark_work, ts_seq
 
 
 def _minute_tier(spark):
@@ -133,26 +133,57 @@ def test_cli_engine_prometheus_from_tier(spark, tmp_path):
 
 def test_scrape_is_single_action(spark):
     """O(1)-driver scrapes (round-2 verdict item 6): the first scrape
-    of a minute runs exactly one compute over the lazy tier-merge plan
-    (plan build runs zero jobs), and every further scrape within the
-    same minute runs ZERO Spark jobs (memoized)."""
+    of a minute runs exactly one collect action over the lazy tier-merge
+    plan (plan build runs zero jobs) — 3 Spark jobs under AQE, one per
+    query stage — and every further scrape within the same minute runs
+    ZERO Spark jobs (memoized)."""
     from rollup_engine.job import make_tier_scraper
 
     tier = _minute_tier(spark).persist()
     tier.count()  # warm the tier cache (the serving deployment state)
-    sc = spark.sparkContext
     compute = make_tier_scraper(
         tier, 120, lambda: dt.datetime(2024, 1, 1, 1, 0)
     )
-    sc.setJobGroup("scrape-1", "")
-    r1 = compute()
-    sc.setJobGroup("scrape-2", "")
-    r2 = compute()
-    sc.setJobGroup("idle", "")
+    r1, first, _ = spark_work(spark, compute)
+    r2, second, _ = spark_work(spark, compute)
     tier.unpersist()
     assert r1 is r2 and r1.count == 5
-    tracker = sc.statusTracker()
-    first = tracker.getJobIdsForGroup("scrape-1")
-    second = tracker.getJobIdsForGroup("scrape-2")
-    assert len(first) >= 1           # the one real compute
-    assert list(second) == [], f"memoized scrape ran jobs: {list(second)}"
+    assert len(first) == 3           # the one real compute
+    assert second == [], f"memoized scrape ran jobs: {second}"
+
+
+def test_next_minute_scrape_reuses_merge_code(spark, tmp_path):
+    """A scrape one minute after a warm one compiles only its window
+    filter: the merge-all key is a constant, not the scrape's ``now``
+    (a timestamp literal lands in the generated Java, so a ``now`` key
+    compiled 7 new classes per scrape minute).  The exposition is the
+    one the ``now``-keyed merge gives over the same tier."""
+    from pyspark.sql import functions as F
+
+    from rollup_engine.hist_rollup import hist_cascade
+    from rollup_engine.render import RollupResult, prometheus_exposition
+
+    path = str(tmp_path / "minute")
+    _minute_tier(spark).write.parquet(path)
+    tier = spark.read.parquet(path)
+    now = dt.datetime(2024, 1, 1, 1, 0)
+    trailing_result(tier, now, 120)  # warm
+    later = now + dt.timedelta(minutes=1)
+    got, _, compiles = spark_work(
+        spark, lambda: trailing_result(tier, later, 120)
+    )
+    assert compiles <= 2
+
+    ts_now = F.lit(later).cast("timestamp")
+    now_keyed = hist_cascade(
+        tier.where(
+            (F.col("bucket_start") >= F.date_trunc(
+                "minute", ts_now - F.expr("INTERVAL 120 MINUTES")))
+            & (F.col("bucket_start") <= ts_now)
+        ).withColumn("bucket_start", F.date_trunc("minute", ts_now)),
+        "minute",
+    ).collect()
+    assert got.count == 5
+    assert prometheus_exposition(got) == prometheus_exposition(
+        RollupResult.from_row(now_keyed[0])
+    )
