@@ -45,8 +45,6 @@ from .transcripts import clean
 _TIER_SCHEMA = T.StructType(
     [T.StructField("tier", T.StringType()), *HIST_ROLLUP_FIELDS]
 )
-# the conversation state's columns; their types are the batch's
-_STATE_COLS = ("conv_id", "turn_idx", "ts")
 
 
 def _read_tier(spark: SparkSession, path: str) -> DataFrame:
@@ -108,9 +106,13 @@ class IncrementalRollup:
         # --- boundary stitch: seed each conv with its last known turn
         # (and drop re-delivered turns at or below it)
         if ck["version"] > 0:
-            state = spark.read.schema(
-                T.StructType([turns.schema[c] for c in _STATE_COLS])
-            ).parquet(self.state_path(ck["version"]))
+            # the state holds the batch's own column types
+            state_schema = T.StructType(
+                [turns.schema[c] for c in ("conv_id", "turn_idx", "ts")]
+            )
+            state = spark.read.schema(state_schema).parquet(
+                self.state_path(ck["version"])
+            )
             turns = seeded_turns(turns, state)
 
         new_rollup = hist_rollup(with_deltas(turns), self.tier)

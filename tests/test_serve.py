@@ -148,7 +148,7 @@ def test_scrape_is_single_action(spark):
     r2, second, _ = spark_work(spark, compute)
     tier.unpersist()
     assert r1 is r2 and r1.count == 5
-    assert len(first) == 3           # the one real compute
+    assert len(first) == 3           # the one collect action under AQE
     assert second == [], f"memoized scrape ran jobs: {second}"
 
 
