@@ -128,11 +128,9 @@ class SnapshotStore:
     # ------------------------------------------------------------- read
 
     def manifests(self) -> list[dict]:
-        out = []
-        for p in sorted(glob.glob(os.path.join(self.root, "_manifests", "v*.json"))):
-            with open(p) as f:
-                out.append(json.load(f))
-        return out
+        return [
+            self._manifest(sid) for sid in range(1, self.current_snapshot_id() + 1)
+        ]
 
     def _manifest(self, sid: int) -> dict:
         with open(self._manifest_path(sid)) as f:
