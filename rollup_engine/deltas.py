@@ -10,8 +10,9 @@ input file order (fixing the reference's stream-order dependence,
 documented divergence per SURVEY.md §7.4).
 
 This module is the one definition of that decision: ``delta_ms`` is the
-arithmetic every Spark delta path uses (``with_deltas``, the fused
-events windows in ``transcripts.py``, ``salting.salted_deltas``), and
+arithmetic, as SQL text, that every Spark delta path uses
+(``with_deltas``, the fused events windows in ``transcripts.py``,
+``salting.salted_deltas``), and
 ``last_turns`` / ``seeded_turns`` are the conversation state and the
 boundary seed that ``incremental.py`` and ``realtime.py`` stitch
 batches with.  ``streaming.py`` runs the same rule in numpy.
@@ -24,7 +25,7 @@ delta stream itself is naturally bounded per conv by retention chunking.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Milliseconds between a turn and the previous turn of the same
@@ -33,12 +34,17 @@ from pyspark.sql import functions as F
 DELTA_COL = "delta_ms"
 
 
-def delta_ms(ts: Column, prev_ts: Column) -> Column:
-    """Floor milliseconds from ``prev_ts`` to ``ts`` (NULL when either
-    is NULL), in exact int64 micros before the one division."""
-    return F.floor(
-        (F.unix_micros(ts) - F.unix_micros(prev_ts)) / F.lit(1000)
-    ).cast("long")
+def delta_ms(ts: str, prev_ts: str) -> str:
+    """SQL text: floor milliseconds from ``prev_ts`` to ``ts`` (NULL
+    when either is NULL), in exact int64 micros before the one
+    division.  Both arguments are SQL expressions."""
+    return (
+        f"CAST(floor((unix_micros({ts}) - unix_micros({prev_ts})) / 1000)"
+        " AS BIGINT)"
+    )
+
+
+_DELTA = delta_ms("ts", "lag(ts) OVER (PARTITION BY conv_id ORDER BY turn_idx)")
 
 
 def with_deltas(df: DataFrame, keep_first_turn: bool = False) -> DataFrame:
@@ -48,11 +54,10 @@ def with_deltas(df: DataFrame, keep_first_turn: bool = False) -> DataFrame:
     (the analog of an unmatched request, dropped by the reference's
     inner pair-join) and is filtered out unless ``keep_first_turn``.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = df.withColumn(DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w)))
+    out = df.withColumn(DELTA_COL, F.expr(_DELTA))
     if keep_first_turn:
         return out
-    return out.where(F.col(DELTA_COL).isNotNull())
+    return out.where(f"{DELTA_COL} IS NOT NULL")
 
 
 def last_turns(df: DataFrame) -> DataFrame:
@@ -60,8 +65,8 @@ def last_turns(df: DataFrame) -> DataFrame:
     ``turn_idx`` — the conversation state a later batch is seeded with."""
     return (
         df.groupBy("conv_id")
-        .agg(F.max(F.struct("turn_idx", "ts")).alias("_m"))
-        .select("conv_id", "_m.turn_idx", "_m.ts")
+        .agg(F.expr("max(struct(turn_idx, ts)) AS _m"))
+        .selectExpr("conv_id", "_m.turn_idx", "_m.ts")
     )
 
 
@@ -77,16 +82,12 @@ def seeded_turns(turns: DataFrame, state: DataFrame) -> DataFrame:
     counted, and an equal ``turn_idx`` would tie with the seed in the
     lag order.  ``last_turns`` over the result is the next state.
     """
-    seeds = state.select("conv_id", "turn_idx", "ts")
+    seeds = state.selectExpr("conv_id", "turn_idx", "ts")
     fresh = (
         turns.join(
-            seeds.select("conv_id", F.col("turn_idx").alias("_seen_idx")),
-            "conv_id",
-            "left",
+            seeds.selectExpr("conv_id", "turn_idx AS _seen_idx"), "conv_id", "left"
         )
-        .where(
-            F.col("_seen_idx").isNull() | (F.col("turn_idx") > F.col("_seen_idx"))
-        )
+        .where("_seen_idx IS NULL OR turn_idx > _seen_idx")
         .drop("_seen_idx")
     )
     return fresh.unionByName(seeds, allowMissingColumns=True)

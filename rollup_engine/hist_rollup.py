@@ -26,6 +26,24 @@ actions — building the DataFrame never runs a job):
              hist                    sort_array(collect_list(struct(v, c)))
              err counters            summed alongside
 
+How the plan is built: every stage is one ``selectExpr``, one
+``withColumn`` or one ``groupBy().agg()`` over SQL text kept in module
+constants (``_MERGE_AGGS``, ``_FINISH_AGGS``, ``_DD_QUANTIZE``, …),
+not a tree of Column objects.  Each ``F.*`` call or Column operator is
+a Py4J round trip to the driver JVM, and PySpark 4 wraps each one in a
+call-site capture (``getActiveSession``, a conf ``get``,
+``PySparkCurrentOrigin.set``/``clear`` and a Python stack walk), while
+``F.expr`` of a whole aggregate is one call.  On the sf0.001 inputs of
+tests/test_plans.py::test_plan_builders_make_few_py4j_calls (4 cores,
+Spark 4.1) one build took, Column trees → SQL text: ``hist_cascade``
+874 → 123 Py4J calls, ``hist_rollup`` 807 → 109, ``hist_sliding``
+872 → 132, one ``serve.trailing_result`` 937 → 129.  The optimized
+and physical plans are the ones the Column trees gave (operator trees
+pinned by test_tier_plan_shapes_pinned).  Column names interpolated
+into the text go through ``sqltext.ident`` and string values through
+``sqltext.string``; double literals carry the ``D`` suffix, since a
+bare ``0.5`` is a DECIMAL in Spark SQL.
+
 Overflow contract (the reference's exact-≤threshold / approx-above,
 /root/reference/Cargo.toml:20-21, generalized): buckets whose
 distinct-value count exceeds ``max_bins`` store a DDSketch-style
@@ -60,12 +78,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sqltext
 from .deltas import DELTA_COL
-from .rollup import ERR4, ERR5, error_flag
+from .rollup import ERR4, ERR5, error_flag_sql
 from .schema import TIERS
 
 HIST_TYPE = T.ArrayType(
@@ -112,46 +131,110 @@ DD_MAX_BINS = int(math.ceil(math.log(2.0**63) / _DD_LOG_G))
 _LONG_CLAMP = 9.2e18
 
 
-def dd_quantize(v: Column) -> Column:
-    """DDSketch-style log quantizer as a pure Column expression.
+def _double(x: float) -> str:
+    # a bare 0.5 is a DECIMAL literal in Spark SQL
+    return f"{x!r}D"
+
+
+# bin(v) = ceil(log_γ |v|), representative = round(γ^(bin-1/2)) with the
+# sign restored; 0 → 0.  ``{v}`` is the (quoted) input column.
+_DD_REP = (
+    f"CAST(least(round(power({_double(DD_GAMMA)}, "
+    f"CAST(ceil(ln(abs(CAST({{v}} AS DOUBLE))) / {_double(_DD_LOG_G)}) AS DOUBLE))"
+    f" / {_double(math.sqrt(DD_GAMMA))}, 0), {_double(_LONG_CLAMP)}) AS BIGINT)"
+)
+_DD_QUANTIZE = (
+    f"CASE WHEN {{v}} > 0 THEN {_DD_REP} WHEN {{v}} < 0 THEN -{_DD_REP} "
+    "ELSE CAST(0 AS BIGINT) END"
+)
+
+
+def dd_quantize(col: str) -> Column:
+    """DDSketch-style log quantizer over column ``col``.
 
     bin(v) = ceil(log_γ |v|), representative = round(γ^(bin-1/2)) with
     the sign restored; 0 → 0.  round (not floor) makes small integers
     (|v| ≲ 1/(γ-1) ≈ 500) their own representative and re-quantization
-    idempotent.  Deterministic, mergeable, no state.
+    idempotent.  Deterministic, mergeable, no state.  The finalize
+    inlines the same SQL text.
     """
-    mag = F.abs(v.cast("double"))
-    i = F.ceil(F.log(mag) / F.lit(_DD_LOG_G)).cast("double")
-    rep = F.least(
-        F.round(F.pow(F.lit(DD_GAMMA), i) / F.lit(math.sqrt(DD_GAMMA)), 0),
-        F.lit(_LONG_CLAMP),
-    ).cast("long")
-    return (
-        F.when(v > 0, rep)
-        .when(v < 0, -rep)
-        .otherwise(F.lit(0).cast("long"))
-    )
+    return F.expr(_DD_QUANTIZE.format(v=sqltext.ident(col)))
 
 
-def _percentile_aggs() -> list[Column]:
-    return [
-        F.min(
-            F.when(
-                F.col("_cum")
-                >= F.greatest(F.lit(1), F.ceil(F.lit(q) * F.col("_n"))),
-                F.col("_v"),
-            )
-        ).alias(name)
+# Combine (value, count) rows that land on the same group and value:
+# counts and error counters add, exact carries keep min/max/sum.
+_MERGE_AGGS = [
+    "sum(_c) AS _c",
+    "sum(_e4) AS _e4",
+    "sum(_e5) AS _e5",
+    "min(_xmin) AS _xmin",
+    "max(_xmax) AS _xmax",
+    "sum(_xsum) AS _xsum",
+]
+
+# One finished row per group from its sorted (value, count) rows:
+# scalars from the exact carries, nearest-rank percentiles as the least
+# value whose running count reaches ceil(q·n).
+_FINISH_AGGS = [
+    "sum(_c) AS turn_count",
+    "min(_xmin) AS lat_min_ms",
+    "max(_xmax) AS lat_max_ms",
+    "sum(_xsum) AS lat_sum_ms",
+    *[
+        f"min(CASE WHEN _cum >= greatest(1, ceil({_double(q)} * _n)) THEN _v END)"
+        f" AS {name}"
         for name, q in _QS.items()
-    ]
+    ],
+    "sum(_e4) AS err4xx_cnt",
+    "sum(_e5) AS err5xx_cnt",
+    "sort_array(collect_list(struct(_v AS v, _c AS c))) AS hist",
+]
+
+# HIST_ROLLUP_FIELDS after bucket_start, in order
+_FINISHED_COLS = [
+    "turn_count",
+    "lat_min_ms",
+    "lat_max_ms",
+    "CAST(floor(lat_sum_ms / turn_count) AS BIGINT) AS lat_avg_ms",
+    "lat_p50_ms",
+    "lat_p90_ms",
+    "lat_p99_ms",
+    "lat_sum_ms",
+    "err4xx_cnt",
+    "err5xx_cnt",
+    "round(err4xx_cnt / turn_count, 4) AS err4xx_rate",
+    "round(err5xx_cnt / turn_count, 4) AS err5xx_rate",
+    "hist",
+]
+
+# A hist-state row exploded to (value, count) rows; the source bucket's
+# exact carries ride on its first element only.
+_EXPLODED_COLS = [
+    "_e.v AS _v",
+    "_e.c AS _c",
+    "CASE WHEN _pos = 0 THEN err4xx_cnt ELSE 0 END AS _e4",
+    "CASE WHEN _pos = 0 THEN err5xx_cnt ELSE 0 END AS _e5",
+    "CASE WHEN _pos = 0 THEN lat_min_ms END AS _xmin",
+    "CASE WHEN _pos = 0 THEN lat_max_ms END AS _xmax",
+    "CASE WHEN _pos = 0 THEN lat_sum_ms ELSE 0 END AS _xsum",
+]
+
+_HIST_ROW_COLS = ["_c", "_e4", "_e5", "_xmin", "_xmax", "_xsum"]
+
+
+def _aggs(exprs: list[str]) -> list[Column]:
+    return [F.expr(e) for e in exprs]
 
 
 def _finalize_from_hist_rows(
-    h: DataFrame, max_bins: int, extra_keys: list[str] | None = None
+    h: DataFrame,
+    max_bins: int,
+    extra_keys: list[str] | None = None,
+    tier: str | None = None,
 ) -> DataFrame:
     """(bucket_start, *extra_keys, _v, _c, _e4, _e5, _xmin, _xmax,
     _xsum) → one finished row per (bucket, keys) group, as ONE lazy
-    plan.
+    plan; with ``tier`` given, a leading ``tier`` column holds it.
 
     Input contract: one row per (bucket_start, _v); the _x* columns are
     the mergeable exact carries (min/max/sum-of-products contributions —
@@ -170,82 +253,50 @@ def _finalize_from_hist_rows(
     the returned DataFrame runs NO job (plan-pinned by
     tests/test_plans.py::test_hist_plan_build_runs_no_jobs).
     """
-    grp = ["bucket_start", *(extra_keys or [])]
-    w = Window.partitionBy(*grp)
-    h2 = h.withColumn("_nd", F.count(F.lit(1)).over(w))
-    qv = (
-        F.when(F.col("_nd") <= F.lit(max_bins), F.col("_v"))
-        .otherwise(dd_quantize(F.col("_v")))
-    )
+    grp = ["bucket_start", *map(sqltext.ident, extra_keys or [])]
+    by = ", ".join(grp)
+    quantized = _DD_QUANTIZE.format(v="_v")
     # Re-group on the (possibly quantized) value.  Data is already
     # hash-partitioned by the group keys from the window exchange, which
     # co-locates (keys, _v) — no further exchange.
     h3 = (
-        h2.select(
+        h.selectExpr("*", f"count(1) OVER (PARTITION BY {by}) AS _nd")
+        .selectExpr(
             *grp,
-            qv.alias("_v"),
-            "_c",
-            "_e4",
-            "_e5",
-            "_xmin",
-            "_xmax",
-            "_xsum",
+            f"CASE WHEN _nd <= {int(max_bins)} THEN _v ELSE {quantized} END AS _v",
+            *_HIST_ROW_COLS,
         )
         .groupBy(*grp, "_v")
-        .agg(
-            F.sum("_c").alias("_c"),
-            F.sum("_e4").alias("_e4"),
-            F.sum("_e5").alias("_e5"),
-            F.min("_xmin").alias("_xmin"),
-            F.max("_xmax").alias("_xmax"),
-            F.sum("_xsum").alias("_xsum"),
-        )
+        .agg(*_aggs(_MERGE_AGGS))
     )
-    return _finalize_exact(h3, extra_keys)
+    return _finalize_exact(h3, grp, tier)
 
 
-def _finalize_exact(
-    h: DataFrame, extra_keys: list[str] | None = None
-) -> DataFrame:
+def _finalize_exact(h: DataFrame, grp: list[str], tier: str | None) -> DataFrame:
     """Finalize hist rows whose per-bucket row count is already bounded:
     the cumsum window task is ≤ max(max_bins, 2·DD_MAX_BINS+1) rows per
     bucket.  Scalars come from the exact carries, percentiles from the
     (possibly quantized) values."""
-    grp = ["bucket_start", *(extra_keys or [])]
-    w_cum = (
-        Window.partitionBy(*grp)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    by = ", ".join(grp)
+    lead = [] if tier is None else [f"{sqltext.string(tier)} AS tier"]
+    # the cumsum window first, then the total: one sort serves both
+    return (
+        h.selectExpr(
+            "*",
+            f"sum(_c) OVER (PARTITION BY {by} ORDER BY _v"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cum",
+        )
+        .selectExpr("*", f"sum(_c) OVER (PARTITION BY {by}) AS _n")
+        .groupBy(*grp)
+        .agg(*_aggs(_FINISH_AGGS))
+        .selectExpr(*lead, *grp, *_FINISHED_COLS)
     )
-    w_all = Window.partitionBy(*grp)
-    h2 = h.withColumn("_cum", F.sum("_c").over(w_cum)).withColumn(
-        "_n", F.sum("_c").over(w_all)
-    )
-    pairs = F.sort_array(
-        F.collect_list(F.struct(F.col("_v").alias("v"), F.col("_c").alias("c")))
-    )
-    agg = h2.groupBy(*grp).agg(
-        F.sum("_c").alias("turn_count"),
-        F.min("_xmin").alias("lat_min_ms"),
-        F.max("_xmax").alias("lat_max_ms"),
-        F.sum("_xsum").alias("lat_sum_ms"),
-        *_percentile_aggs(),
-        F.sum("_e4").alias("err4xx_cnt"),
-        F.sum("_e5").alias("err5xx_cnt"),
-        pairs.alias("hist"),
-    )
-    agg = agg.withColumns(
-        {
-            "lat_avg_ms": F.floor(F.col("lat_sum_ms") / F.col("turn_count")).cast(
-                "long"
-            ),
-            "err4xx_rate": F.round(F.col("err4xx_cnt") / F.col("turn_count"), 4),
-            "err5xx_rate": F.round(F.col("err5xx_cnt") / F.col("turn_count"), 4),
-        }
-    )
-    return agg.select(
-        *grp, *[f.name for f in HIST_ROLLUP_FIELDS if f.name != "bucket_start"]
-    )
+
+
+_ERROR_FLAGS = [
+    f"CAST({error_flag_sql(ERR4)} AS BIGINT) AS _e4",
+    f"CAST({error_flag_sql(ERR5)} AS BIGINT) AS _e5",
+]
 
 
 def narrow_for_rollup(transcripts: DataFrame) -> DataFrame:
@@ -258,13 +309,7 @@ def narrow_for_rollup(transcripts: DataFrame) -> DataFrame:
     ahead of the shuffle — this helper does that explicitly for the
     ingest/bench hot path.  hist_rollup detects the precomputed flags.
     """
-    return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        error_flag(ERR4).cast("long").alias("_e4"),
-        error_flag(ERR5).cast("long").alias("_e5"),
-    )
+    return transcripts.selectExpr("conv_id", "turn_idx", "ts", *_ERROR_FLAGS)
 
 
 def hist_rollup(
@@ -279,49 +324,32 @@ def hist_rollup(
     ``extra_keys``: optional breakdown columns (e.g. ``["role"]``) —
     every stage groups/partitions by (bucket, keys); same plan shape,
     finer groups."""
-    t = TIERS[tier]
-    keys = list(extra_keys or [])
-    has_flags = "_e4" in deltas.columns
+    trunc = sqltext.string(TIERS[tier].duckdb_trunc)
+    keys = [sqltext.ident(k) for k in extra_keys or []]
+    flags = ["_e4", "_e5"] if "_e4" in deltas.columns else _ERROR_FLAGS
     h = (
-        deltas.select(
-            F.date_trunc(t.duckdb_trunc, F.col("ts")).alias("bucket_start"),
-            *[F.col(k) for k in keys],
-            F.col(delta_col).alias("_v"),
-            (F.col("_e4") if has_flags else error_flag(ERR4).cast("long")).alias("_e4"),
-            (F.col("_e5") if has_flags else error_flag(ERR5).cast("long")).alias("_e5"),
+        deltas.selectExpr(
+            f"date_trunc({trunc}, ts) AS bucket_start",
+            *keys,
+            f"{sqltext.ident(delta_col)} AS _v",
+            *flags,
         )
-        .where(F.col("_v").isNotNull())  # COUNT(measure) null-skip semantics
+        .where("_v IS NOT NULL")  # COUNT(measure) null-skip semantics
         .groupBy("bucket_start", *keys, "_v")
-        .agg(
-            F.count(F.lit(1)).alias("_c"),
-            F.sum("_e4").alias("_e4"),
-            F.sum("_e5").alias("_e5"),
-        )
-        .withColumns(
-            {
-                "_xmin": F.col("_v"),
-                "_xmax": F.col("_v"),
-                "_xsum": F.col("_v") * F.col("_c"),
-            }
-        )
+        .agg(*_aggs(["count(1) AS _c", "sum(_e4) AS _e4", "sum(_e5) AS _e5"]))
+        .selectExpr("*", "_v AS _xmin", "_v AS _xmax", "_v * _c AS _xsum")
     )
-    out = _finalize_from_hist_rows(h, max_bins, extra_keys=keys)
-    return out.withColumn("tier", F.lit(tier)).select(
-        "tier",
-        "bucket_start",
-        *keys,
-        *[f.name for f in HIST_ROLLUP_FIELDS if f.name != "bucket_start"],
-    )
+    return _finalize_from_hist_rows(h, max_bins, extra_keys, tier)
 
 
 def _merge_hist_state(
-    rollup_df: DataFrame, bucket: Column, keys: list[str], caller: str
+    rollup_df: DataFrame, bucket: str, keys: list[str], caller: str
 ) -> DataFrame:
     """Explode a hist tier's per-bucket state into (value, count) rows,
-    re-keyed on ``bucket`` (a ``date_trunc`` target or an ``F.window``
-    struct, aliased ``bucket_start``), and merge equal values per new
-    group: the shared front half of ``hist_cascade`` and
-    ``hist_sliding``.
+    re-keyed on the SQL expression ``bucket`` (a ``date_trunc`` target
+    or a ``window`` struct, aliased ``bucket_start``), and merge equal
+    values per new group: the shared front half of ``hist_cascade`` and
+    ``hist_sliding``.  ``keys`` are quoted identifiers.
 
     Exact scalars ride along the exploded relation attached to each
     source bucket's first hist element (position 0), like the error
@@ -338,54 +366,35 @@ def _merge_hist_state(
     window) that would shuffle the exploded rows uncombined (measured
     equal at sf0.1; combine wins at scale).
     """
-    first = F.col("_pos") == 0
     # posexplode silently DROPS null-array rows, which would vanish a
     # bucket's counts/min/max/sum without any error — fail fast instead.
     # The guard is a lazy per-row expression: zero driver jobs at plan
-    # build.
+    # build.  It is its own projection, below the explode: there the
+    # optimizer still infers the explode's non-empty-array filter.
+    null_hist = sqltext.string(
+        f"{caller}: input row has hist=NULL — every tier row must carry "
+        "hist state"
+    )
     guarded = rollup_df.withColumn(
         "hist",
-        F.when(F.col("hist").isNotNull(), F.col("hist")).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"{caller}: input row has hist=NULL — every tier row "
-                    "must carry hist state"
-                )
-            )
+        F.expr(
+            f"CASE WHEN hist IS NOT NULL THEN hist ELSE raise_error({null_hist}) END"
         ),
     )
     return (
-        guarded.select(
-            bucket.alias("bucket_start"),
+        guarded.selectExpr(
+            f"{bucket} AS bucket_start",
             *keys,
-            F.posexplode("hist").alias("_pos", "_e"),
+            "posexplode(hist) AS (_pos, _e)",
             "err4xx_cnt",
             "err5xx_cnt",
             "lat_min_ms",
             "lat_max_ms",
             "lat_sum_ms",
         )
-        .select(
-            "bucket_start",
-            *keys,
-            F.col("_e.v").alias("_v"),
-            F.col("_e.c").alias("_c"),
-            # attribute the source bucket's exact carries once (pos 0)
-            F.when(first, F.col("err4xx_cnt")).otherwise(F.lit(0)).alias("_e4"),
-            F.when(first, F.col("err5xx_cnt")).otherwise(F.lit(0)).alias("_e5"),
-            F.when(first, F.col("lat_min_ms")).alias("_xmin"),
-            F.when(first, F.col("lat_max_ms")).alias("_xmax"),
-            F.when(first, F.col("lat_sum_ms")).otherwise(F.lit(0)).alias("_xsum"),
-        )
+        .selectExpr("bucket_start", *keys, *_EXPLODED_COLS)
         .groupBy("bucket_start", *keys, "_v")
-        .agg(
-            F.sum("_c").alias("_c"),
-            F.sum("_e4").alias("_e4"),
-            F.sum("_e5").alias("_e5"),
-            F.min("_xmin").alias("_xmin"),
-            F.max("_xmax").alias("_xmax"),
-            F.sum("_xsum").alias("_xsum"),
-        )
+        .agg(*_aggs(_MERGE_AGGS))
     )
 
 
@@ -401,7 +410,7 @@ def hist_sliding(
     tier's per-bucket histogram state, never re-reading raw data.
 
     This is ``hist_cascade`` with the tumbling ``date_trunc`` target
-    swapped for Spark's native ``F.window(length, hop)`` grouping: the
+    swapped for Spark's native ``window(length, hop)`` grouping: the
     analyzer's TimeWindowing rule expands each tier bucket into its
     length/hop windows (an Expand node — map-side, no join, and the
     same rewrite Structured Streaming uses, so the plan is
@@ -417,16 +426,14 @@ def hist_sliding(
     distinct-value count exceeds ``max_bins`` re-quantize, so per-window
     state stays bounded no matter how many buckets a window spans.
     """
-    keys = list(extra_keys or [])
-    h = _merge_hist_state(
-        rollup_df, F.window("bucket_start", length, hop), keys, "hist_sliding"
-    ).withColumn("bucket_start", F.col("bucket_start.start"))
-    out = _finalize_from_hist_rows(h, max_bins=HIST_MAX_BINS, extra_keys=keys)
-    return out.select(
-        "bucket_start",
-        *keys,
-        *[f.name for f in HIST_ROLLUP_FIELDS if f.name != "bucket_start"],
+    keys = [sqltext.ident(k) for k in extra_keys or []]
+    window = (
+        f"window(bucket_start, {sqltext.string(length)}, {sqltext.string(hop)})"
     )
+    h = _merge_hist_state(rollup_df, window, keys, "hist_sliding").selectExpr(
+        "bucket_start.start AS bucket_start", *keys, "_v", *_HIST_ROW_COLS
+    )
+    return _finalize_from_hist_rows(h, HIST_MAX_BINS, extra_keys)
 
 
 def hist_cascade(
@@ -440,18 +447,9 @@ def hist_cascade(
     exact when every contributing bucket was exact, within the
     documented γ bound otherwise.
     """
-    t = TIERS[to_tier]
-    keys = list(extra_keys or [])
+    trunc = sqltext.string(TIERS[to_tier].duckdb_trunc)
+    keys = [sqltext.ident(k) for k in extra_keys or []]
     h = _merge_hist_state(
-        rollup_df,
-        F.date_trunc(t.duckdb_trunc, F.col("bucket_start")),
-        keys,
-        "hist_cascade",
+        rollup_df, f"date_trunc({trunc}, bucket_start)", keys, "hist_cascade"
     )
-    out = _finalize_from_hist_rows(h, max_bins=HIST_MAX_BINS, extra_keys=keys)
-    return out.withColumn("tier", F.lit(to_tier)).select(
-        "tier",
-        "bucket_start",
-        *keys,
-        *[f.name for f in HIST_ROLLUP_FIELDS if f.name != "bucket_start"],
-    )
+    return _finalize_from_hist_rows(h, HIST_MAX_BINS, extra_keys, to_tier)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import sqltext
 from .deltas import DELTA_COL
 from .percentiles import approx_nearest_rank, exact_nearest_rank
 from .schema import TIERS
@@ -40,14 +41,21 @@ ERR4 = "error:4"
 ERR5 = "error:5"
 
 
-def error_flag(prefix: str) -> Column:
+def error_flag_sql(prefix: str) -> str:
     """1.0 when the turn's tool outcome is in the given error class —
     the transcript analog of HttpError classification from the status
     token's first char (/root/reference/src/log_parser/log_events.rs:105-114).
+    SQL text, for the plan builders that assemble whole stages as text.
     """
-    return F.when(
-        F.coalesce(F.col("tool"), F.lit("")).startswith(prefix), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
+    return (
+        f"CASE WHEN startswith(coalesce(tool, ''), {sqltext.string(prefix)}) "
+        "THEN 1.0D ELSE 0.0D END"
+    )
+
+
+def error_flag(prefix: str) -> Column:
+    """``error_flag_sql`` as a Column."""
+    return F.expr(error_flag_sql(prefix))
 
 
 METRIC_COLS = [

@@ -43,7 +43,12 @@ def salted_deltas(
     )
     w = Window.partitionBy("conv_id", "_chunk").orderBy("turn_idx")
     local = chunked.withColumn(
-        DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w))
+        DELTA_COL,
+        F.expr(
+            delta_ms(
+                "ts", "lag(ts) OVER (PARTITION BY conv_id, _chunk ORDER BY turn_idx)"
+            )
+        ),
     ).withColumn("_rn", F.row_number().over(w))
 
     # chunk tails: last turn of every NON-EMPTY (conv, chunk).  The
@@ -67,7 +72,7 @@ def salted_deltas(
             DELTA_COL,
             F.when(
                 (F.col("_rn") == 1) & F.col("_prev_ts").isNotNull(),
-                delta_ms(F.col("ts"), F.col("_prev_ts")),
+                F.expr(delta_ms("ts", "_prev_ts")),
             ).otherwise(F.col(DELTA_COL)),
         )
         .drop("_chunk", "_rn", "_prev_ts")

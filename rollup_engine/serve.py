@@ -21,7 +21,9 @@ import datetime as dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from . import sqltext
 from .hist_rollup import hist_cascade
 from .render import RollupResult
 
@@ -40,13 +42,25 @@ def trailing_result(
     re-rolled from raw turns restricted to [cutoff, bucket_end) — one
     bucket of raw data, everything else still served from the tier.
     """
-    cutoff = F.lit(now).cast("timestamp") - F.expr(
-        f"INTERVAL {int(minutes)} MINUTES"
-    )
-    edge_bucket = F.date_trunc("minute", cutoff)
+    merged = trailing_merge(minute_tier, now, minutes, raw_turns).collect()
+    if not merged:
+        return RollupResult(count=0)
+    return RollupResult.from_row(merged[0])
+
+
+def trailing_merge(
+    minute_tier: DataFrame,
+    now: dt.datetime | str,
+    minutes: int,
+    raw_turns: DataFrame | None = None,
+) -> DataFrame:
+    """The lazy plan behind ``trailing_result``: at most one tier-shaped
+    row, the merge of every in-window bucket."""
+    now_ts = _timestamp(now)
+    cutoff = f"{now_ts} - INTERVAL {int(minutes)} MINUTES"
+    edge_bucket = f"date_trunc('minute', {cutoff})"
     in_window = minute_tier.where(
-        (F.col("bucket_start") >= edge_bucket)
-        & (F.col("bucket_start") <= F.lit(now).cast("timestamp"))
+        f"bucket_start >= {edge_bucket} AND bucket_start <= {now_ts}"
     )
     if raw_turns is not None:
         from .deltas import with_deltas
@@ -54,11 +68,10 @@ def trailing_result(
         from .transcripts import clean
 
         # drop the (possibly partial) edge bucket from the tier merge…
-        in_window = in_window.where(F.col("bucket_start") > edge_bucket)
+        in_window = in_window.where(f"bucket_start > {edge_bucket}")
         # …and rebuild exactly its in-window part from raw turns
         edge_rows = with_deltas(clean(raw_turns)).where(
-            (F.col("ts") >= cutoff)
-            & (F.date_trunc("minute", F.col("ts")) == edge_bucket)
+            f"ts >= {cutoff} AND date_trunc('minute', ts) = {edge_bucket}"
         )
         edge_rollup = hist_rollup(edge_rows, "minute")
         in_window = in_window.unionByName(edge_rollup)
@@ -68,11 +81,17 @@ def trailing_result(
     # generated Java, so a ``now`` key would give every stage of the
     # merge new code each minute; this way only the window filter does.
     # The result never reads ``bucket_start``.
-    one_key = in_window.withColumn("bucket_start", F.timestamp_seconds(F.lit(0)))
-    merged = hist_cascade(one_key, "minute").collect()
-    if not merged:
-        return RollupResult(count=0)
-    return RollupResult.from_row(merged[0])
+    one_key = in_window.withColumn("bucket_start", F.expr("timestamp_seconds(0)"))
+    return hist_cascade(one_key, "minute")
+
+
+def _timestamp(now: dt.datetime | str) -> str:
+    """``now`` as a SQL timestamp expression, the instant ``F.lit(now)``
+    would give: a naive datetime is local wall time, a string is cast
+    in the session time zone.  Both fold to one literal."""
+    if isinstance(now, dt.datetime):
+        return f"timestamp_micros({T.TimestampType().toInternal(now)})"
+    return f"CAST({sqltext.string(now)} AS TIMESTAMP)"
 
 
 def serve_prometheus(

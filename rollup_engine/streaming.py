@@ -6,7 +6,7 @@ memory (/root/reference/src/request_response_matcher/mod.rs:10-13).
 Here the same contract runs as a real stream:
 
   readStream (file source over the transcript dir)
-    → batch ``clean``'s row validity rule (``transcripts.valid_turn``)
+    → batch ``clean``'s row validity rule (``transcripts.VALID_TURN``)
     → stateful inter-turn delta extraction: applyInPandasWithState
       keyed by conv_id keeps ONE row of state per conversation (last
       turn_idx + ts) — bounded state, unlike the reference's vectors;
@@ -36,7 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .rollup import ERR4, ERR5, error_flag
 from .schema import TRANSCRIPT_SCHEMA
-from .transcripts import valid_turn
+from .transcripts import VALID_TURN
 
 _DELTA_OUT = T.StructType(
     [
@@ -123,10 +123,10 @@ def _delta_state_fn(
 
 def stream_deltas(turns: DataFrame) -> DataFrame:
     """Streaming inter-turn deltas with per-conversation state; rows
-    failing ``transcripts.valid_turn`` are dropped, as batch ``clean``
+    failing ``transcripts.VALID_TURN`` are dropped, as batch ``clean``
     drops them."""
     return (
-        turns.where(valid_turn())
+        turns.where(VALID_TURN)
         .select("conv_id", "turn_idx", "ts", "tool")
         .groupBy("conv_id")
         .applyInPandasWithState(
@@ -487,7 +487,7 @@ def stream_threshold_alerts(
         yield out
 
     return (
-        turns.where(valid_turn())
+        turns.where(VALID_TURN)
         .select("conv_id", "turn_idx", "ts")
         .groupBy("conv_id")
         .applyInPandasWithState(

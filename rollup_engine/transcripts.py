@@ -21,7 +21,7 @@ Mapping events → transcripts (kept SQL-expressible for the oracle):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .deltas import DELTA_COL, delta_ms
@@ -35,6 +35,13 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a constant 4×cores measured ~40% slower at sf1.0 — see fanout.py)
     tune_shuffle_for_input(spark, input_size_bytes(path))
     return spark.read.parquet(path)
+
+
+_EVENT_ORDER = "ORDER BY _ord_ts, event_id"
+_EVENT_DELTA = delta_ms(
+    "CAST(_ord_ts AS TIMESTAMP)",
+    f"lag(CAST(_ord_ts AS TIMESTAMP)) OVER (PARTITION BY conv_id {_EVENT_ORDER})",
+)
 
 
 def _event_turns(
@@ -60,7 +67,7 @@ def _event_turns(
     w = Window.partitionBy("conv_id").orderBy("_ord_ts", "event_id")
     # parquet TIMESTAMP_NTZ → session-TZ (UTC) instant; shift-free
     ts = F.col("_ord_ts").cast("timestamp")
-    delta = [delta_ms(ts, F.lag(ts).over(w)).alias(DELTA_COL)] if lag_delta else []
+    delta = [F.expr(f"{_EVENT_DELTA} AS {DELTA_COL}")] if lag_delta else []
     return base.select(
         "conv_id",
         (F.row_number().over(w) - F.lit(1)).cast("int").alias("turn_idx"),
@@ -138,9 +145,9 @@ def events_deltas_filtered(
     two Window passes (the second over only the filtered rows).
     """
     f = _event_turns(spark, sf_dir).where(condition)
-    w = Window.partitionBy("conv_id").orderBy("_ord_ts", "event_id")
     out = f.withColumn(
-        DELTA_COL, delta_ms(F.col("ts"), F.lag("ts").over(w))
+        DELTA_COL,
+        F.expr(delta_ms("ts", f"lag(ts) OVER (PARTITION BY conv_id {_EVENT_ORDER})")),
     ).drop("_ord_ts", "event_id")
     return out.where(F.col(DELTA_COL).isNotNull())
 
@@ -163,34 +170,32 @@ EVENTS_TO_TRANSCRIPTS_SQL = """
 """
 
 
-def valid_turn() -> Column:
-    """The row validity rule shared by batch ``clean`` and the stream
-    operators: non-NULL conv_id / turn_idx / ts and turn_idx ≥ 0."""
-    return (
-        F.col("ts").isNotNull()
-        & F.col("conv_id").isNotNull()
-        & F.col("turn_idx").isNotNull()
-        & (F.col("turn_idx") >= 0)
-    )
+# The row validity rule shared by batch ``clean`` and the stream
+# operators: non-NULL conv_id / turn_idx / ts and turn_idx ≥ 0.
+VALID_TURN = (
+    "ts IS NOT NULL AND conv_id IS NOT NULL AND turn_idx IS NOT NULL"
+    " AND turn_idx >= 0"
+)
+
+# Dedupe with the SAME window partitioning the downstream lag uses
+# (conv_id), ordered by (turn_idx, ts): a row survives iff it is the
+# first row of its turn_idx.  Catalyst then reuses one exchange and one
+# sort across clean → with_deltas (hash(conv_id) satisfies both
+# windows; the (turn_idx, ts) sort is a superset of the lag's turn_idx
+# ordering).
+_PREV_IDX = "lag(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx, ts)"
+_DUP = f"{_PREV_IDX} IS NOT NULL AND {_PREV_IDX} = turn_idx"
 
 
 def clean(df: DataFrame) -> DataFrame:
     """Malformed-row tolerance (reference drops unparseable lines
     silently, /root/reference/src/main.rs:103-107): rows failing
-    ``valid_turn`` are dropped; duplicate (conv_id, turn_idx) keep the
+    ``VALID_TURN`` are dropped; duplicate (conv_id, turn_idx) keep the
     earliest-ts row (stable ordering).
     """
-    valid = df.where(valid_turn())
-    # Dedupe with the SAME window partitioning the downstream lag uses
-    # (conv_id), ordered by (turn_idx, ts): a row survives iff it is the
-    # first row of its turn_idx.  Catalyst then reuses one exchange and
-    # one sort across clean → with_deltas (hash(conv_id) satisfies both
-    # windows; the (turn_idx, ts) sort is a superset of the lag's
-    # turn_idx ordering).
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", F.col("ts").asc())
-    prev_idx = F.lag("turn_idx").over(w)
     return (
-        valid.withColumn("_dup", prev_idx.isNotNull() & (prev_idx == F.col("turn_idx")))
-        .where(~F.col("_dup"))
+        df.where(VALID_TURN)
+        .withColumn("_dup", F.expr(_DUP))
+        .where("NOT _dup")
         .drop("_dup")
     )

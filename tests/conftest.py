@@ -5,6 +5,7 @@ import itertools
 from typing import Any, NamedTuple
 
 import pytest
+from py4j.java_gateway import JavaMember
 
 from rollup_engine.session import get_spark
 
@@ -45,6 +46,7 @@ class SparkWork(NamedTuple):
     result: Any
     jobs: list[int]  # ids of the Spark jobs the callable ran
     compiles: int  # classes the code generator compiled meanwhile
+    py4j_calls: int  # Python→JVM method calls the callable made
 
 
 _probe_ids = itertools.count()
@@ -57,7 +59,9 @@ def spark_work(spark, fn) -> SparkWork:
     inherit the calling thread's group).  Compiles come from Spark's
     JVM-wide codegen compilation counter, so nothing else may run
     Spark code meanwhile — a compile is a generated class missing from
-    the codegen cache.
+    the codegen cache.  Py4J calls are the ``JavaMember.__call__``
+    invocations ``fn`` makes, from any thread: each is one round trip
+    to the driver JVM.
     """
     sc = spark.sparkContext
     counter = (
@@ -67,9 +71,18 @@ def spark_work(spark, fn) -> SparkWork:
     group = f"spark-work-{next(_probe_ids)}"
     before = counter.getCount()
     sc.setJobGroup(group, "")
+    calls = itertools.count()
+    call_jvm = JavaMember.__call__
+
+    def counted(self, *args):
+        next(calls)
+        return call_jvm(self, *args)
+
+    JavaMember.__call__ = counted
     try:
         result = fn()
     finally:
+        JavaMember.__call__ = call_jvm
         sc.setJobGroup("idle", "")
     jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    return SparkWork(result, jobs, counter.getCount() - before)
+    return SparkWork(result, jobs, counter.getCount() - before, next(calls))

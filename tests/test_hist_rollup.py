@@ -257,7 +257,6 @@ def test_dd_quantizer_properties(spark):
     representative re-quantizes to (at worst) an adjacent representative
     within the same relative bound."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from rollup_engine.hist_rollup import DD_GAMMA, dd_quantize
 
@@ -271,8 +270,8 @@ def test_dd_quantizer_properties(spark):
     )
     df = spark.createDataFrame([(int(v),) for v in vals], "v: long")
     rows = (
-        df.select("v", dd_quantize(F.col("v")).alias("r"))
-        .withColumn("rr", dd_quantize(F.col("r")))
+        df.select("v", dd_quantize("v").alias("r"))
+        .withColumn("rr", dd_quantize("r"))
         .collect()
     )
     a = DD_GAMMA - 1
@@ -345,3 +344,45 @@ def test_calendar_tier_cascade_exact(spark):
                 assert b.weekday() == 0, f"week bucket {b} not a Monday"
             else:
                 assert b.day == 1, f"month bucket {b} not the 1st"
+
+
+def test_dd_quantizer_pinned_values(spark):
+    """The quantizer's outputs at the edges of its domain, recorded
+    from the Column-expression formula it replaced: the exact small
+    integers, the first quantized magnitudes, 2^53 (the last exact
+    double integer) and ±(2^63−1), clamped so the cast never
+    overflows."""
+    from rollup_engine.hist_rollup import dd_quantize
+
+    want = {
+        0: 0,
+        1: 1,
+        499: 499,
+        500: 500,
+        501: 501,
+        1000: 1000,
+        10**6: 999_679,
+        2**53: 9_002_475_205_227_997,
+        2**63 - 1: 9_200_000_000_000_000_000,
+    }
+    want.update({-v: -r for v, r in want.items()})
+    df = spark.createDataFrame([(v,) for v in want], "v: long")
+    got = {r.v: r.q for r in df.select("v", dd_quantize("v").alias("q")).collect()}
+    assert got == want
+
+
+def test_hist_rollup_quotes_column_names(spark):
+    """Breakdown keys and the delta column may be any column name:
+    a rollup over ``my key`` / ``lat ms`` equals the one over plainly
+    named columns."""
+    d = _deltas(spark)
+    plain = hist_rollup(d, "hour", extra_keys=["role"])
+    spaced = hist_rollup(
+        d.withColumnsRenamed({"role": "my key", "delta_ms": "lat ms"}),
+        "hour",
+        extra_keys=["my key"],
+        delta_col="lat ms",
+    ).withColumnRenamed("my key", "role")
+    assert spaced.columns == plain.columns
+    assert spaced.exceptAll(plain).count() == 0
+    assert plain.exceptAll(spaced).count() == 0

@@ -212,7 +212,7 @@ def test_reads_without_one_recorded_schema_infer_it(spark, data):
     full, b1, b2, store, _work = data
     store.append(b1)
     store.append(b2.select(*reversed(b2.columns)))  # same columns, new order
-    mixed, jobs, _ = spark_work(spark, lambda: store.read(spark))
+    mixed, jobs = spark_work(spark, lambda: store.read(spark))[:2]
     assert len(jobs) == 1
     mixed = mixed.select(*full.columns)
     assert mixed.exceptAll(full).count() == 0
@@ -224,7 +224,7 @@ def test_reads_without_one_recorded_schema_infer_it(spark, data):
     del m["schema"]
     with open(mpath, "w") as f:
         json.dump(m, f)
-    old, jobs, _ = spark_work(spark, lambda: store.read(spark, as_of=1))
+    old, jobs = spark_work(spark, lambda: store.read(spark, as_of=1))[:2]
     assert len(jobs) == 1
     assert old.exceptAll(b1).count() == 0 and b1.exceptAll(old).count() == 0
 

@@ -3,6 +3,9 @@ must actually appear in the plan, not just in docstrings."""
 
 from __future__ import annotations
 
+import datetime as dt
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -359,3 +362,139 @@ def test_from_events_single_exchange(spark):
     plan = _plan(d)
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
     assert "hashpartitioning(conv_id" in plan, plan
+
+
+def _operator_shape(df) -> str:
+    """Run ``df`` and return its executed (final adaptive) physical plan
+    as its operator names, root first: no expressions, attribute ids or
+    codegen stage ids, so two plans match iff their operator trees do."""
+    df.collect()
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    final = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = [
+        re.match(r"([ :+\-]*)(?:\*\(\d+\) )?([A-Za-z]+)", line)
+        for line in final.splitlines()
+    ]
+    nodes = [m for m in nodes if m]
+    # every case below is a single-child chain: one name per depth
+    assert [len(m.group(1)) for m in nodes] == [
+        3 * (i + 1) for i in range(len(nodes))
+    ], text
+    return " > ".join(m.group(2) for m in nodes)
+
+
+def _shape_cases(spark, tmp) -> dict:
+    from rollup_engine.hist_rollup import (
+        hist_cascade,
+        hist_rollup,
+        hist_sliding,
+        narrow_for_rollup,
+    )
+    from rollup_engine.serve import trailing_merge
+    from rollup_engine.transcripts import clean
+
+    turns = from_events(spark, SF)
+    d = with_deltas(clean(turns))
+    path = f"{tmp}/minute"
+    hist_rollup(d, "minute").write.parquet(path)
+    tier = spark.read.parquet(path)
+    return {
+        "rollup": hist_rollup(d, "minute"),
+        "rollup_role": hist_rollup(d, "minute", extra_keys=["role"]),
+        "rollup_flags": hist_rollup(
+            with_deltas(clean(narrow_for_rollup(turns))), "minute"
+        ),
+        "cascade": hist_cascade(tier, "hour"),
+        "sliding": hist_sliding(tier),
+        "scrape_merge": trailing_merge(tier, dt.datetime(2024, 1, 31), 43_200),
+    }
+
+
+# The finalize all six plans end in (root first): the finishing
+# aggregate over the cumsum windows, the re-group of the possibly
+# quantized values and the distinct-count window.
+_FINALIZE = (
+    "ResultQueryStage > Project > ObjectHashAggregate > ObjectHashAggregate"
+    " > Window > Window > Sort > HashAggregate > HashAggregate > Project"
+    " > Window"
+)
+# events → transcripts → clean → with_deltas → first hist group
+_RAW_ROLLUP = (
+    _FINALIZE + " > Sort > AQEShuffleRead > ShuffleQueryStage > Exchange"
+    " > Project > HashAggregate > AQEShuffleRead > ShuffleQueryStage"
+    " > Exchange > HashAggregate > Project > Filter > Window > Project"
+    " > Filter > Window > Sort > Project > Filter > Window > Sort"
+    " > AQEShuffleRead > ShuffleQueryStage > Exchange > Project > Filter"
+    " > ColumnarToRow > FileScan"
+)
+# hist-state merge over a tier file, ``{bucket}`` the re-keying nodes
+_MERGE = (
+    " > HashAggregate > AQEShuffleRead > ShuffleQueryStage > Exchange"
+    " > HashAggregate > Project > Generate{bucket} > Project > Filter"
+    " > ColumnarToRow > FileScan"
+)
+PLAN_SHAPES = {
+    "rollup": _RAW_ROLLUP,
+    "rollup_role": _RAW_ROLLUP,
+    "rollup_flags": _RAW_ROLLUP,
+    "cascade": _FINALIZE
+    + " > Sort > AQEShuffleRead > ShuffleQueryStage > Exchange"
+    + _MERGE.format(bucket=""),
+    "sliding": _FINALIZE
+    + " > Sort > AQEShuffleRead > ShuffleQueryStage > Exchange"
+    + _MERGE.format(bucket=" > Expand"),
+    # one output key: the first exchange is a single partition, which
+    # AQE neither coalesces nor needs sorted
+    "scrape_merge": _FINALIZE
+    + " > ShuffleQueryStage > Exchange"
+    + _MERGE.format(bucket=""),
+}
+
+
+def test_tier_plan_shapes_pinned(spark, tmp_path):
+    """The executed operator tree of every hist plan builder — the leaf
+    rollup (plain, with a breakdown key, over precomputed error flags),
+    the cascade, the hopping window and the scrape merge — is pinned:
+    how the plans are built may change, what Spark runs may not."""
+    cases = _shape_cases(spark, str(tmp_path))
+    assert cases.keys() == PLAN_SHAPES.keys()
+    for name, df in cases.items():
+        assert _operator_shape(df) == PLAN_SHAPES[name], name
+
+
+def test_plan_builders_make_few_py4j_calls(spark, tmp_path):
+    """Each tier plan builder costs a few dozen Python→JVM round trips:
+    every stage is one ``selectExpr`` or one ``groupBy().agg()`` over
+    SQL text.  Each must stay at or below a fifth of what the
+    Column-tree builders it replaced made on these inputs: 874 calls
+    for ``hist_cascade``, 807 for ``hist_rollup``, 195 for ``clean`` +
+    ``with_deltas``, 872 for ``hist_sliding`` and 937 for one
+    ``trailing_result`` (plan build plus its collect)."""
+    from rollup_engine.hist_rollup import hist_cascade, hist_rollup, hist_sliding
+    from rollup_engine.serve import trailing_result
+    from rollup_engine.transcripts import clean
+
+    turns = from_events(spark, SF)
+    d = with_deltas(clean(turns))
+    path = str(tmp_path / "minute")
+    hist_rollup(d, "minute").write.parquet(path)
+    tier = spark.read.parquet(path)
+    now = dt.datetime(2024, 1, 31)
+    builds = {
+        "hist_cascade": lambda: hist_cascade(tier, "hour"),
+        "hist_rollup": lambda: hist_rollup(d, "minute"),
+        "clean+with_deltas": lambda: with_deltas(clean(turns)),
+        "hist_sliding": lambda: hist_sliding(tier),
+        "trailing_result": lambda: trailing_result(tier, now, 43_200),
+    }
+    column_trees = {
+        "hist_cascade": 874,
+        "hist_rollup": 807,
+        "clean+with_deltas": 195,
+        "hist_sliding": 872,
+        "trailing_result": 937,
+    }
+    calls = {name: spark_work(spark, fn).py4j_calls for name, fn in builds.items()}
+    assert all(calls[k] * 5 <= column_trees[k] for k in builds), calls

@@ -144,8 +144,8 @@ def test_scrape_is_single_action(spark):
     compute = make_tier_scraper(
         tier, 120, lambda: dt.datetime(2024, 1, 1, 1, 0)
     )
-    r1, first, _ = spark_work(spark, compute)
-    r2, second, _ = spark_work(spark, compute)
+    r1, first = spark_work(spark, compute)[:2]
+    r2, second = spark_work(spark, compute)[:2]
     tier.unpersist()
     assert r1 is r2 and r1.count == 5
     assert len(first) == 3           # the one collect action under AQE
@@ -169,9 +169,8 @@ def test_next_minute_scrape_reuses_merge_code(spark, tmp_path):
     now = dt.datetime(2024, 1, 1, 1, 0)
     trailing_result(tier, now, 120)  # warm
     later = now + dt.timedelta(minutes=1)
-    got, _, compiles = spark_work(
-        spark, lambda: trailing_result(tier, later, 120)
-    )
+    work = spark_work(spark, lambda: trailing_result(tier, later, 120))
+    got, compiles = work.result, work.compiles
     assert compiles <= 2
 
     ts_now = F.lit(later).cast("timestamp")
