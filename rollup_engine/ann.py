@@ -7,7 +7,10 @@
 - ``rp_lsh_topk``      random-hyperplane LSH: H seeded hyperplanes →
   sign-bit signature → probe buckets within Hamming ≤ radius of the
   query signature → exact re-rank inside the probed buckets.  The scale
-  path: candidates shrink by ~2^H/(probed buckets).
+  path: candidates shrink by ~2^H/(probed buckets).  The signature
+  (``rp_signature``) is one higher-order SQL expression, so every
+  stage here runs in the JVM; ``query_signature`` is its numpy twin
+  for a driver-side query vector.
 - ``cosine_pairs``     embedding near-duplicate pairs (shared kernel
   with dedup): bucket join on LSH signature then exact cosine verify.
 
@@ -19,10 +22,11 @@ state.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from . import sqltext
+from .dedup import _cap_postings
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -102,53 +106,46 @@ def _resolve_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     return int(df.select(F.size(vec_col)).first()[0])
 
 
-# Above this many expression nodes (nbits × dim literal multiply-adds)
-# whole-stage codegen degrades; switch to one Arrow matmul instead.
-_EXPR_SIG_MAX_TERMS = 4096
+def _planes_sql(planes: np.ndarray) -> str:
+    """``planes`` as one nested ``array(array(<x>D, …), …)`` SQL
+    literal; ``repr`` of a float parses back to the same double."""
+    return "array(" + ", ".join(
+        "array(" + ", ".join(repr(float(x)) + "D" for x in p) + ")"
+        for p in planes
+    ) + ")"
 
 
-def _expr_signature(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit signature as pure Column expressions (small nbits×dim)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        sig = sig + F.when(_dot(vec, _lit_vec(p)) > 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
-        )
-    return sig
+def rp_signature(vec_col: str, planes: np.ndarray) -> Column:
+    """Sign-bit signature of column ``vec_col`` (cast to array<double>):
+    bit i set iff vec · plane_i > 0.
 
-
-def _pandas_signature_udf(planes: np.ndarray):
-    """Arrow-batched signature: one (batch, d) @ (d, nbits) matmul per
-    batch — the scale path for d≥128 / nbits≥32 where the literal
-    expression tree would hit ~nbits×dim codegen nodes."""
-    planes_t = np.ascontiguousarray(planes.T, dtype=np.float64)  # (d, nbits)
-    weights = (1 << np.arange(planes_t.shape[1], dtype=np.int64)).astype(
-        np.int64
-    )
-
-    @F.pandas_udf(T.LongType())
-    def sig(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)  # (batch, d)
-        bits = (m @ planes_t) > 0.0  # (batch, nbits)
-        return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
-
-    return sig
-
-
-def rp_signature(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit signature: bit i set iff vec · plane_i > 0.
-
-    Auto-selects JVM expressions (deterministic, codegen-friendly) for
-    small plane matrices and an Arrow matmul above _EXPR_SIG_MAX_TERMS —
-    both compute exactly the same bits (sign of a dot product is stable
-    across summation orders except exact-zero ties, which measure-zero
-    random hyperplanes don't produce on real data)."""
+    One ``F.expr`` over SQL text: the planes are one array literal
+    (``_planes_sql``) and a higher-order ``aggregate`` over the bit
+    indexes sums each dot product left to right (as ``_dot`` does), so
+    building it costs a few Py4J calls whatever the plane count.  The
+    per-row cost grows with nbits × dim: at 384 × 32 it measured ~5×
+    slower than an Arrow numpy matmul (2,000 vectors, local[4]), but
+    every caller in the engine, the registry and perfbench uses dim 64
+    with nbits ≤ 12."""
     nbits, dim = planes.shape
     if nbits >= 63:
         raise ValueError("nbits must fit a signed 64-bit signature (< 63)")
-    if nbits * dim <= _EXPR_SIG_MAX_TERMS:
-        return _expr_signature(vec, planes)
-    return _pandas_signature_udf(planes)(vec)
+    lit = _planes_sql(planes)
+    vec = f"CAST({sqltext.ident(vec_col)} AS array<double>)"
+    # the outer lambda's variables shadow same-named columns in its
+    # body, which reads the vector column: keep them unlike column names
+    return F.expr(
+        f"aggregate(sequence(0, {nbits - 1}), 0L, (_sig, _bit) -> _sig + IF("
+        f"aggregate(zip_with({vec}, element_at({lit}, _bit + 1), "
+        "(x, y) -> x * y), 0D, (a, v) -> a + v) > 0D, shiftleft(1L, _bit), 0L))"
+    )
+
+
+def query_signature(query_vec, nbits: int, seed: int, dim: int) -> int:
+    """``rp_signature`` of one driver-side vector, in numpy."""
+    planes = _hyperplanes(dim, nbits, seed)
+    q = np.asarray(query_vec, dtype=np.float64)
+    return int(sum((1 << i) for i, p in enumerate(planes) if float(q @ p) > 0))
 
 
 def rp_lsh_topk(
@@ -167,14 +164,10 @@ def rp_lsh_topk(
     dim = len(query_vec)
     planes = _hyperplanes(dim, nbits, seed)
     v = F.col(vec_col).cast("array<double>")
-    signed = df.select(F.col(id_col), v.alias("_v"), rp_signature(v, planes).alias("sig"))
-    qsig = int(
-        sum(
-            (1 << i)
-            for i, p in enumerate(planes)
-            if float(np.dot(np.asarray(query_vec, dtype=float), p)) > 0
-        )
+    signed = df.select(
+        F.col(id_col), v.alias("_v"), rp_signature(vec_col, planes).alias("sig")
     )
+    qsig = query_signature(query_vec, nbits, seed, dim)
     probed = signed.where(
         F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= hamming_radius
     )
@@ -402,7 +395,7 @@ def knn_join_lsh(
     masks = _xor_masks(nbits, hamming_radius)
     v = F.col(vec_col).cast("array<double>")
     c = corpus.select(
-        F.col(id_col), v.alias("_v"), rp_signature(v, planes).alias("sig")
+        F.col(id_col), v.alias("_v"), rp_signature(vec_col, planes).alias("sig")
     )
     # qsig computed ONCE per query in its own projection; the mask
     # fan-out references the stored column (CollapseProject keeps
@@ -411,7 +404,7 @@ def knn_join_lsh(
     qsigned = queries.select(
         F.col(id_col).alias("query_id"),
         v.alias("_qv"),
-        rp_signature(v, planes).alias("qsig"),
+        rp_signature(vec_col, planes).alias("qsig"),
     )
     probes = qsigned.select(
         "query_id",
@@ -484,21 +477,21 @@ def cosine_pairs(
     Precision is unaffected (exact verify).
 
     ``max_bucket`` bounds a degenerate signature bucket (e.g. zero or
-    constant vectors) to cap² candidates instead of p² — same df-cap
-    pattern as dedup._cap_postings.  Pass ``dim`` (or carry it in the
-    column metadata) so plan construction runs zero jobs."""
+    constant vectors) to cap² candidates instead of p², with the
+    dedup joins' posting cap (dedup._cap_postings).  Pass ``dim`` (or
+    carry it in the column metadata) so plan construction runs zero
+    jobs."""
     dim = _resolve_dim(df, vec_col, dim)
     planes = _hyperplanes(dim, nbits, seed)
     v = F.col(vec_col).cast("array<double>")
-    signed = df.select(
-        F.col(id_col).alias("id"), v.alias("_v"), rp_signature(v, planes).alias("sig")
-    )
-    signed = (
-        signed.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("sig").orderBy("id"))
-        )
-        .where(F.col("_rn") <= max_bucket)
-        .drop("_rn")
+    signed = _cap_postings(
+        df.select(
+            F.col(id_col).alias("id"),
+            v.alias("_v"),
+            rp_signature(vec_col, planes).alias("sig"),
+        ),
+        ["sig"],
+        max_bucket,
     )
     if probe_radius > 0:
         masks = _xor_masks(nbits, probe_radius)

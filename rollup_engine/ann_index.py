@@ -33,15 +33,21 @@ wrong quantizer.
 from __future__ import annotations
 
 import json
-import math
 import os
-from itertools import combinations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann import _hyperplanes, _lit_vec, cosine, rp_signature
+from .ann import (
+    _hyperplanes,
+    _lit_vec,
+    _resolve_dim,
+    _xor_masks,
+    cosine,
+    query_signature,
+    rp_signature,
+)
 
 META_FILE = "_meta.json"
 
@@ -72,12 +78,10 @@ def build_lsh_index(
 ) -> tuple[DataFrame, dict]:
     """(index DataFrame, meta) — one deterministic map pass adding the
     signature column; no shuffle."""
-    if dim is None:
-        dim = int(df.select(F.size(vec_col)).first()[0])
+    dim = _resolve_dim(df, vec_col, dim)
     planes = _hyperplanes(dim, nbits, seed)
-    v = F.col(vec_col).cast("array<double>")
     idx = df.select(
-        F.col(id_col), F.col(vec_col), rp_signature(v, planes).alias("sig")
+        F.col(id_col), F.col(vec_col), rp_signature(vec_col, planes).alias("sig")
     )
     return idx, {"kind": "rp_lsh", "nbits": nbits, "seed": seed, "dim": dim}
 
@@ -98,25 +102,6 @@ def write_lsh_index(
     return meta
 
 
-def _probe_sigs(qsig: int, nbits: int, radius: int) -> list[int]:
-    """All signatures within Hamming ``radius`` of ``qsig`` — driver-side
-    combinatorics (Σ C(nbits, r) values), never a Spark stage."""
-    sigs = [qsig]
-    for r in range(1, radius + 1):
-        for bits in combinations(range(nbits), r):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            sigs.append(qsig ^ m)
-    return sigs
-
-
-def query_signature(query_vec, nbits: int, seed: int, dim: int) -> int:
-    planes = _hyperplanes(dim, nbits, seed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    return int(sum((1 << i) for i, p in enumerate(planes) if float(q @ p) > 0))
-
-
 def lsh_topk_indexed(
     spark: SparkSession,
     path: str,
@@ -135,7 +120,7 @@ def lsh_topk_indexed(
     if len(query_vec) != meta["dim"]:
         raise ValueError(f"query dim {len(query_vec)} != index dim {meta['dim']}")
     qsig = query_signature(query_vec, meta["nbits"], meta["seed"], meta["dim"])
-    probe = _probe_sigs(qsig, meta["nbits"], hamming_radius)
+    probe = [qsig ^ m for m in _xor_masks(meta["nbits"], hamming_radius)]
     q = _lit_vec(query_vec)
     return (
         spark.read.parquet(path)

@@ -1,21 +1,25 @@
 """Frequent-items (heavy hitters) with bounded-memory mergeable
-summaries: batched Misra–Gries candidate generation + exact verify.
+summaries: JVM Misra–Gries candidate generation + exact verify.
 
 The one-pass exact ``groupBy(col).count()`` is fine when the key space
 fits a shuffle; at 10^12 turns with an unbounded token space the
 aggregate state itself is the problem.  This operator is the
 candidate-then-verify pattern the dedup/ANN stack uses everywhere:
 
-1. **Candidates** — one ``mapInPandas`` pass keeps a Misra–Gries
-   summary of at most ``m = floor(1/θ)+1`` counters per partition
-   (vectorized: pandas ``Series.add`` per Arrow batch, then one
-   ``nlargest(m+1)`` truncation that subtracts the (m+1)-th largest
-   count and drops the non-positive — the standard batched MG step;
-   cumulative subtraction ≤ N_p/(m+1) < θ·N_p, so every item with
-   partition frequency ≥ θ·N_p survives its partition's summary, and
-   any item with GLOBAL frequency ≥ θ·N beats θ on at least one
-   partition by pigeonhole).  Summary size is O(partitions · 1/θ) —
-   constant per partition, independent of cardinality.
+1. **Candidates** — ``DataFrame.freqItems([col], 1/m)`` with
+   ``m = den // num + 1``.  Spark plans it as one
+   ``collect_frequent_items(col, size)`` aggregate: a partial
+   ``ObjectHashAggregate`` per partition, then one final merge, all in
+   the JVM.  Its ``add`` is weighted Misra–Gries: when the map of
+   ``size`` counters is full, it subtracts min(incoming count, the
+   map's minimum) from all ``size + 1`` counters, and the merge replays
+   the same ``add``.  So in any merge order an item's count is low by
+   at most N/(size+1), and every item with count ≥ θ·N survives when
+   ``size ≥ den // num`` — ``m`` asks for one counter more, which
+   covers the float truncation in Spark's ``(1/support).toInt``.
+   The summary holds at most ``size`` counters per partition,
+   independent of cardinality.  Spark requires support ≥ 1e-4, so
+   θ must be above ~1/10,000.
 2. **Verify** — exact recount of the candidate set only (broadcast
    semi-join, map-side combinable count), filtered by the exact
    integer test ``cnt · den ≥ num · N``.  The output is therefore
@@ -29,39 +33,21 @@ is part of the training-data-pipeline surface this engine adds.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Truncation slack: shrink only when the summary exceeds slack·m, so
-# the O(n log m) nlargest runs once per ~(slack-1)·m new keys, not per
-# batch.  Pure performance knob — the MG bound only needs ≤ m counters
-# at shrink time, which the subtract-and-drop step guarantees.
-_MG_SLACK = 4
 
-
-def _mg_candidates(df: DataFrame, col: str, m: int) -> DataFrame:
-    out_schema = f"{col} string, cnt_lower long"
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = pd.Series(dtype="int64")
-        for pdf in batches:
-            # fill_value promotes to float64 — force back to exact int64
-            acc = acc.add(pdf[col].value_counts(), fill_value=0).astype("int64")
-            if len(acc) > _MG_SLACK * m:
-                d = acc.nlargest(m + 1).iloc[-1]
-                acc = acc[acc > d] - d
-        if len(acc) > m:
-            d = acc.nlargest(m + 1).iloc[-1]
-            acc = acc[acc > d] - d
-        yield pd.DataFrame(
-            {col: acc.index.astype(str), "cnt_lower": acc.values.astype("int64")}
-        )
-
-    return df.select(F.col(col).cast("string").alias(col)).mapInPandas(
-        summarize, out_schema
+def _candidates(keyed: DataFrame, col: str, num: int, den: int) -> DataFrame:
+    """Phase 1 of ``heavy_hitters``: Spark's frequent items of
+    ``keyed[col]`` at support 1/m, m = den // num + 1, one row per
+    item."""
+    m = den // num + 1
+    if m > 10_000:  # freqItems rejects a support below 1e-4
+        raise ValueError("threshold num/den needs den // num < 10000")
+    return (
+        keyed.freqItems([col], 1.0 / m)
+        .toDF("_items")
+        .select(F.explode("_items").alias(col))
     )
 
 
@@ -78,11 +64,10 @@ def heavy_hitters(
     """
     if not (0 < num < den):
         raise ValueError("threshold num/den must be in (0, 1)")
-    m = den // num + 1
     keyed = df.select(F.col(col).cast("string").alias(col)).where(
         F.col(col).isNotNull()
     )
-    cands = _mg_candidates(keyed, col, m).select(col).distinct()
+    cands = _candidates(keyed, col, num, den)
     counts = keyed.join(F.broadcast(cands), col).groupBy(col).agg(
         F.count(F.lit(1)).alias("cnt")
     )

@@ -357,15 +357,15 @@ def q_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-memory frequent-items (batched Misra-Gries candidates +
-    exact verify) over event user_ids at theta = 1/125: the 150-key
+    """Bounded-memory frequent-items (freqItems Misra-Gries candidates
+    + exact verify) over event user_ids at theta = 1/125: the 150-key
     space exceeds the m = 126 counter budget, so the per-partition
     truncation step actually fires, and the exact-recount phase must
     still reproduce the exact SQL answer."""
     from .heavyhitters import heavy_hitters
 
-    # fan out the single-split scan so the per-partition Misra-Gries
-    # pass parallelizes; the exact-recount phase makes the final answer
+    # fan out the single-split scan so the partial Misra-Gries
+    # aggregate parallelizes; the exact-recount phase makes the final answer
     # partitioning-independent, so this cannot change the result
     ev = fan_out(spark.read.parquet(f"{sf_dir}/events.parquet"), "user_id")
     return heavy_hitters(ev, "user_id", 1, 125)

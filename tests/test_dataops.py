@@ -270,20 +270,50 @@ def test_cosine_pairs_bucket_cap(spark):
     assert len(pairs) == 10  # C(5,2)
 
 
-def test_rp_signature_pandas_path_matches_expr(spark):
-    """Above _EXPR_SIG_MAX_TERMS rp_signature switches to the Arrow
-    matmul — both paths must produce identical sign bits."""
-    rng = np.random.RandomState(17)
-    vecs = [rng.normal(size=64) for _ in range(40)]
-    d = _emb_df(spark, vecs)
-    planes = ann._hyperplanes(64, 16, seed=42)
-    v = F.col("embedding").cast("array<double>")
-    both = d.select(
-        "vec_id",
-        ann._expr_signature(v, planes).alias("s_expr"),
-        ann._pandas_signature_udf(planes)(v).alias("s_pd"),
-    ).collect()
-    assert all(r.s_expr == r.s_pd for r in both)
+def test_rp_signature_matches_numpy(spark):
+    """The JVM signature equals the numpy ``query_signature`` bit for
+    bit: at the registry size (64 × 12) and at 384 × 32, the size that
+    once ran as a pandas matmul."""
+    for dim, nbits in [(64, 12), (384, 32)]:
+        rng = np.random.RandomState(17)
+        vecs = [rng.normal(size=dim).astype(np.float32) for _ in range(200)]
+        d = _emb_df(spark, vecs)
+        planes = ann._hyperplanes(dim, nbits, seed=42)
+        got = {
+            r.vec_id: r.sig
+            for r in d.select(
+                "vec_id", ann.rp_signature("embedding", planes).alias("sig")
+            ).collect()
+        }
+        want = {
+            i: ann.query_signature(v, nbits, 42, dim) for i, v in enumerate(vecs)
+        }
+        assert got == want, (dim, nbits)
+
+
+def test_plane_literal_round_trips(spark):
+    """Plane values in exponent form (``1e-05``, subnormals, large
+    magnitudes) parse back from the SQL literal to the same double."""
+    planes = np.array(
+        [
+            [1e-05, -2.5e-300, 1.2345678901234567e20, 5e-324],
+            [-0.1, 0.30000000000000004, -1.7976931348623157e308, 3e-08],
+        ]
+    )
+    got = spark.range(1).select(F.expr(ann._planes_sql(planes))).first()[0]
+    assert got == planes.tolist()
+
+
+def test_rp_signature_builds_with_few_py4j_calls(spark):
+    """Building the registry-size signature (64 × 12) is a handful of
+    Python→JVM calls; one Column per literal and multiply-add made
+    2,250."""
+    planes = ann._hyperplanes(64, 12, seed=42)
+    calls = spark_work(
+        spark, lambda: ann.rp_signature("embedding", planes)
+    ).py4j_calls
+    assert calls <= 50, calls
+
 
 def test_capped_sample_semantics_and_stability(spark):
     from rollup_engine.sampling import capped_per_group

@@ -23,11 +23,10 @@ def test_oracle_parity(spark, name):
     assert not problems, f"{name}: {problems}"
 
 
-# Queries whose physical plan holds a Python/Arrow stage: the Gorilla
-# chunk decode and the Misra-Gries candidate pass.  The streaming
-# queries' state functions run inside the stream, not in the relation
-# the query returns.
-PYTHON_STAGE_QUERIES = {"heavy_hitters", "rollup_compacted", "rollup_from_chunks"}
+# Queries whose physical plan holds a Python/Arrow stage: only the
+# Gorilla chunk decode.  The streaming queries' state functions run
+# inside the stream, not in the relation the query returns.
+PYTHON_STAGE_QUERIES = {"rollup_compacted", "rollup_from_chunks"}
 
 # MapInPandas, FlatMapGroupsInPandas(WithState), ArrowEvalPython,
 # BatchEvalPython and the other Python exec nodes
