@@ -21,10 +21,13 @@ candidate-then-verify pattern the dedup/ANN stack uses everywhere:
    independent of cardinality.  Spark requires support ≥ 1e-4, so
    θ must be above ~1/10,000.
 2. **Verify** — exact recount of the candidate set only (broadcast
-   semi-join, map-side combinable count), filtered by the exact
-   integer test ``cnt · den ≥ num · N``.  The output is therefore
-   EXACT and partitioning-independent: phase 1 only decides which keys
-   get recounted, and it provably never drops a true heavy hitter.
+   left join, map-side combinable count), filtered by the exact
+   integer test ``cnt · den ≥ num · N``.  Rows matching no candidate
+   collapse into one NULL group of the same count, so N is the sum over
+   all groups: two scans of the input in all, not a third for N.  The
+   output is therefore EXACT and partitioning-independent: phase 1 only
+   decides which keys get recounted, and it provably never drops a true
+   heavy hitter.
 
 Reference analog: none — request_log_analyzer has exactly one global
 group (src/analyzer/mod.rs); frequent-items over unbounded key spaces
@@ -67,16 +70,23 @@ def heavy_hitters(
     keyed = df.select(F.col(col).cast("string").alias(col)).where(
         F.col(col).isNotNull()
     )
-    cands = _candidates(keyed, col, num, den)
-    counts = keyed.join(F.broadcast(cands), col).groupBy(col).agg(
-        F.count(F.lit(1)).alias("cnt")
+    cands = _candidates(keyed, col, num, den).toDF("_hit")
+    # One pass counts every candidate and N: a row that matches no
+    # candidate lands in the single NULL group, and N is the sum of all
+    # groups, so the events are not scanned a third time for N.
+    counts = (
+        keyed.join(F.broadcast(cands), F.col(col) == F.col("_hit"), "left")
+        .groupBy("_hit")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .selectExpr("_hit", "cnt", "sum(cnt) OVER () AS _n")
     )
-    total = keyed.agg(F.count(F.lit(1)).alias("_n"))
     return (
-        counts.crossJoin(F.broadcast(total))
-        .where(F.col("cnt") * F.lit(den) >= F.lit(num) * F.col("_n"))
+        counts.where(
+            F.col("_hit").isNotNull()
+            & (F.col("cnt") * F.lit(den) >= F.lit(num) * F.col("_n"))
+        )
         .select(
-            col,
+            F.col("_hit").alias(col),
             "cnt",
             (F.col("cnt").cast("double") / F.col("_n").cast("double")).alias(
                 "share"

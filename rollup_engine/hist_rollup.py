@@ -78,7 +78,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -453,3 +453,31 @@ def hist_cascade(
         rollup_df, f"date_trunc({trunc}, bucket_start)", keys, "hist_cascade"
     )
     return _finalize_from_hist_rows(h, HIST_MAX_BINS, extra_keys, to_tier)
+
+
+# Tier files are read with this schema, never inferred: inference is a
+# Spark job per read, and the schema also drops columns that tier files
+# written by older engine versions still carry (a since-dropped sketch
+# column).
+TIER_SCHEMA = T.StructType(
+    [T.StructField("tier", T.StringType()), *HIST_ROLLUP_FIELDS]
+)
+
+
+def read_tier(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(TIER_SCHEMA).parquet(path)
+
+
+def write_tiers(spark: SparkSession, finest: DataFrame, paths: dict[str, str]) -> None:
+    """Write ``finest`` to the first of the ordered ``{tier: path}``
+    ``paths``, then each next tier as ``hist_cascade`` of the tier file
+    written just before it.
+
+    The hist state is mergeable, so a tier cascaded from the stored
+    finer tier is exact, and its plan reads a few small files instead of
+    recomputing or caching the finer tier's plan."""
+    prev = None
+    for tier, path in paths.items():
+        df = finest if prev is None else hist_cascade(read_tier(spark, prev), tier)
+        df.write.mode("overwrite").parquet(path)
+        prev = path

@@ -35,20 +35,14 @@ from pyspark.sql import types as T
 
 from .checkpoint import SnapshotStore
 from .deltas import last_turns, seeded_turns, with_deltas
-from .hist_rollup import HIST_ROLLUP_FIELDS, hist_cascade, hist_rollup
-from .transcripts import clean
-
-# Tier files are read with this schema, never inferred: inference is a
-# Spark job per read, and the schema also drops columns that tier files
-# written by older engine versions still carry (a since-dropped sketch
-# column).
-_TIER_SCHEMA = T.StructType(
-    [T.StructField("tier", T.StringType()), *HIST_ROLLUP_FIELDS]
+from .hist_rollup import (
+    TIER_SCHEMA,
+    hist_cascade,
+    hist_rollup,
+    read_tier,
+    write_tiers,
 )
-
-
-def _read_tier(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(_TIER_SCHEMA).parquet(path)
+from .transcripts import clean
 
 
 class IncrementalRollup:
@@ -88,8 +82,8 @@ class IncrementalRollup:
         """The committed tier, in the current tier columns."""
         ck = self.checkpoint()
         if ck["version"] == 0:
-            return spark.createDataFrame([], _TIER_SCHEMA)
-        return _read_tier(spark, self.rollup_path(ck["version"], tier))
+            return spark.createDataFrame([], TIER_SCHEMA)
+        return read_tier(spark, self.rollup_path(ck["version"], tier))
 
     # -------------------------------------------------------------- run
 
@@ -136,14 +130,10 @@ class IncrementalRollup:
         new_state = last_turns(turns)
 
         # --- versioned writes, checkpoint pointer flipped last
-        path = self.rollup_path(version)
-        result.write.mode("overwrite").parquet(path)
         # each coarser tier cascades from the one just written below it
         # (tiny tier files, never raw data)
-        for ct in self.cascade_tiers:
-            casc = hist_cascade(_read_tier(spark, path), ct)
-            path = self.rollup_path(version, ct)
-            casc.write.mode("overwrite").parquet(path)
+        tiers = (self.tier, *self.cascade_tiers)
+        write_tiers(spark, result, {t: self.rollup_path(version, t) for t in tiers})
         new_state.write.mode("overwrite").parquet(self.state_path(version))
         # Commit metrics from the just-written parquet FOOTERS (pyarrow
         # metadata read, no Spark job) — the write itself already

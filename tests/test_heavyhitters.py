@@ -88,6 +88,19 @@ def test_summary_size_bounded(spark):
         assert not re.search(r"InPandas|EvalPython|InArrow", plan), plan
 
 
+def test_input_scanned_twice(spark, tmp_path):
+    """Two scans of the input: the candidate aggregate and the exact
+    recount, which also counts N (rows matching no candidate fall into
+    one NULL group).  A separate count of N made it three."""
+    path = str(tmp_path / "keys")
+    _zipf_df(spark, n_heavy=3, n_tail=500, reps_heavy=200).write.parquet(path)
+    hh = heavy_hitters(spark.read.parquet(path), "k", 1, 10)
+    plan = _plan(hh)
+    assert len(re.findall(r"\bFileScan parquet\b", plan)) == 2, plan
+    got = {r["k"]: r["cnt"] for r in hh.collect()}
+    assert got == {"H0": 200, "H1": 200, "H2": 200}
+
+
 def test_bad_threshold_rejected(spark):
     df = _zipf_df(spark, n_heavy=1, n_tail=1, reps_heavy=2)
     with pytest.raises(ValueError):

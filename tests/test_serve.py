@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import urllib.request
+from urllib.parse import urlparse
 
 import pytest
 
@@ -96,12 +97,26 @@ def test_prometheus_endpoint(spark):
     finally:
         server.shutdown()
 
-def test_cli_engine_prometheus_from_tier(spark, tmp_path):
+def test_cli_engine_prometheus_from_tier(spark, tmp_path, monkeypatch):
     """Engine-mode --prometheus-listen serves trailing-window metrics
-    merged FROM THE MINUTE TIER (no raw re-read per scrape)."""
+    merged FROM THE MINUTE TIER (no raw re-read per scrape).  With
+    --out, the scrapes read the minute tier file just written, and no
+    cached relation is left behind."""
+    from rollup_engine import job
     from rollup_engine.generate import synthetic_transcripts
     from rollup_engine.job import build_parser, run_engine
+    from rollup_engine.serve import trailing_merge
 
+    served = []
+    make_tier_scraper = job.make_tier_scraper
+
+    def recording_scraper(minute_df, minutes, now_fn):
+        served.append(minute_df)
+        return make_tier_scraper(minute_df, minutes, now_fn)
+
+    monkeypatch.setattr(job, "make_tier_scraper", recording_scraper)
+
+    spark.catalog.clearCache()  # earlier tests may leave tiers cached
     t = synthetic_transcripts(spark, n_convs=20, turns_per_conv=20)
     t.write.mode("overwrite").parquet(str(tmp_path / "turns"))
     max_ts = t.agg({"ts": "max"}).first()[0]
@@ -127,6 +142,11 @@ def test_cli_engine_prometheus_from_tier(spark, tmp_path):
             .split()[1]
         )
         assert count > 0
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        minute_dir = f"{tmp_path}/rollups/minute/"
+        files = trailing_merge(served[0], max_ts, 100000).inputFiles()
+        assert files, files
+        assert all(urlparse(f).path.startswith(minute_dir) for f in files), files
     finally:
         server.shutdown()
 
