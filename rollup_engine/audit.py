@@ -7,8 +7,7 @@ drops unparseable lines silently and reports nothing,
 what was dropped, per reason, or corruption is invisible).
 
 Scale shape: every rule is a conditional sum inside ONE aggregate over
-one scan — adding a rule adds a column, not a pass.  The only two-phase
-term is the duplicate-key check (count_distinct).  The per-rule row
+one scan — adding a rule adds a column, not a pass.  The per-rule row
 output comes from unpivoting the 1-row aggregate (driver-side explode
 of one row, not a shuffle).
 """
@@ -68,17 +67,3 @@ def transcript_rules(now=None) -> dict[str, Column]:
         rules["future_ts"] = F.col("ts") > F.lit(now).cast("timestamp")
     return rules
 
-
-def duplicate_key_count(df: DataFrame) -> DataFrame:
-    """Companion check needing a distinct (two-phase, still one scan):
-    rows carrying an already-seen (conv_id, turn_idx)."""
-    # distinct over a STRUCT, not the bare columns: count_distinct of
-    # multiple columns drops any tuple containing a NULL (SQL DISTINCT
-    # tuple semantics), which would count every NULL-key row as a
-    # duplicate — and transcript_rules explicitly anticipates NULL keys
-    return df.agg(
-        (
-            F.count(F.lit(1))
-            - F.count_distinct(F.struct("conv_id", "turn_idx"))
-        ).alias("n_duplicate_keys")
-    )

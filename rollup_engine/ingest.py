@@ -1,17 +1,14 @@
-"""Partitioned transcript storage — the Iceberg layout analog.
+"""Transcript storage layouts — the Iceberg write-distribution analogs.
 
 FIXTURES.md §1 specifies Iceberg partitioning ``days(ts), bucket(16,
 conv_id)``.  Without an Iceberg runtime in this sandbox, the same
-physical layout (and the same pruning behavior) comes from parquet
-directory partitioning on derived columns:
+physical effects come from Spark-native layouts:
 
-    <root>/ds=YYYY-MM-DD/conv_bucket=K/part-*.parquet
-
-- ``ds`` partition column ⇒ a ``ts`` range predicate prunes whole date
-  directories (pinned by tests/test_plans.py::test_partition_pruning).
-- ``conv_bucket = pmod(xxhash64(conv_id), n_buckets)`` co-locates each
-  conversation's turns, so per-conversation windows read few files and
-  the conv_id exchange moves less data.
+- ``write_bucketed_table``: a conv_id-bucketed table, so the
+  per-conversation window in clean()/with_deltas() needs no exchange.
+- ``write_zorder_table``: a Morton-curve file order over (hour(ts),
+  conv-hash) with the hash persisted, so both time-range and
+  conversation probes prune row groups by footer stats.
 
 Swapping to real Iceberg = ``df.writeTo(table).partitionedBy(
 days(col("ts")), bucket(16, col("conv_id")))`` — readers unchanged.
@@ -21,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-DEFAULT_BUCKETS = 16
 
 # Persisted 16-bit conversation hash on z-ordered tables.  The Morton
 # layout localizes conv-hash per file, but parquet footers only carry
@@ -41,26 +36,6 @@ def zorder_hash(conv_col: str = "conv_id"):
     reader probes, and any bench baseline must all use this one
     definition or footer pruning silently stops matching."""
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(_ZORDER_HASH_MOD))
-
-
-def write_partitioned(
-    df: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "overwrite"
-) -> None:
-    out = df.withColumns(
-        {
-            "ds": F.date_format(F.col("ts"), "yyyy-MM-dd"),
-            "conv_bucket": F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)),
-        }
-    )
-    out.write.mode(mode).partitionBy("ds", "conv_bucket").parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back the canonical transcript columns (partition columns
-    dropped; they exist to prune, not to query)."""
-    return spark.read.parquet(path).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
 
 
 def write_bucketed_table(

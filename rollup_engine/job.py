@@ -158,11 +158,12 @@ def _serve_from_tier(spark, args, minute_df):
     pipeline per scrape).
 
     Scrape cost is O(1) driver-side: the merge plan is fully lazy (one
-    collect action per compute, which AQE runs as 3 Spark jobs, one per
-    query stage) and the result is memoized per minute bucket — the
-    trailing window is minute-quantized, so every scrape within the
-    same minute returns the cached result with ZERO Spark jobs (pinned
-    by tests/test_serve.py::test_scrape_is_single_action).
+    collect action per compute, run as one Spark job: the in-window rows
+    merge in a single partition, with no exchange) and the result is
+    memoized per minute bucket — the trailing window is
+    minute-quantized, so every scrape within the same minute returns
+    the cached result with ZERO Spark jobs (pinned by
+    tests/test_serve.py::test_scrape_is_single_action).
     """
     import datetime as dt
 

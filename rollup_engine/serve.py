@@ -81,7 +81,18 @@ def trailing_merge(
     # generated Java, so a ``now`` key would give every stage of the
     # merge new code each minute; this way only the window filter does.
     # The result never reads ``bucket_start``.
-    one_key = in_window.withColumn("bucket_start", F.expr("timestamp_seconds(0)"))
+    #
+    # One key means the merge's distinct-count window exchange already
+    # sends the whole window to one task, and ``write_tiers`` writes a
+    # tier as one file, one scan task.  ``coalesce(1)`` (after the edge
+    # union, so both branches land in the same task) makes that
+    # explicit: a single partition satisfies every aggregate's and
+    # window's distribution, the plan has no exchange, and the collect
+    # is one Spark job, not one per query stage.  The merge is
+    # order-free, so it is exact.
+    one_key = in_window.coalesce(1).withColumn(
+        "bucket_start", F.expr("timestamp_seconds(0)")
+    )
     return hist_cascade(one_key, "minute")
 
 

@@ -15,6 +15,12 @@ Defaults chosen for the 100 TB target, not just local tests:
   its own classes.  With 1,000 entries a warm refresh compiles none.
   The cache is per JVM and sized once, by the first session that
   generates code.
+- generated class names carry no whole-stage codegen id.  AQE numbers
+  codegen stages in the order it plans its query stages, which follows
+  which shuffle finished first, so the same refresh could get other
+  ids and, with the id in the class name, other code: 2 of 33 warm
+  refreshes recompiled 10 classes each (local[4]).  Without the id,
+  identical stages hit the cache whatever their id: 0 of 90.
 """
 
 from __future__ import annotations
@@ -86,6 +92,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # above the refresh + scrape working set (module docstring)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # codegen ids follow AQE's stage order (module docstring)
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,11 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from rollup_engine.audit import (
-    duplicate_key_count,
-    quality_audit,
-    transcript_rules,
-)
+from rollup_engine.audit import quality_audit, transcript_rules
 
 COLS = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -51,28 +47,6 @@ def test_quality_audit_single_aggregate_plan(spark):
     # one partial+final aggregate pair, no window, no join
     assert plan.count("HashAggregate") == 2, plan
     assert "Window" not in plan and "Join" not in plan
-
-
-def test_duplicate_key_count(spark):
-    rows = [
-        ("c1", 0, "u", "a", None, T0),
-        ("c1", 0, "u", "b", None, T0),
-        ("c1", 1, "u", "c", None, T0),
-        ("c2", 0, "u", "d", None, T0),
-    ]
-    df = spark.createDataFrame(rows, COLS)
-    assert duplicate_key_count(df).first().n_duplicate_keys == 1
-
-
-def test_duplicate_key_count_null_keys_not_duplicates(spark):
-    rows = [
-        (None, 0, "u", "a", None, T0),
-        ("c1", 0, "u", "b", None, T0),
-        ("c2", 1, "u", "c", None, T0),
-        (None, 0, "u", "d", None, T0),  # the only real duplicate pair
-    ]
-    df = spark.createDataFrame(rows, COLS)
-    assert duplicate_key_count(df).first().n_duplicate_keys == 1
 
 
 def test_quality_audit_rejects_non_identifier_rule_names(spark):

@@ -77,26 +77,6 @@ def test_gapfill_spine_join_is_small_side(spark):
     assert "Join" in plan  # spine left join exists
 
 
-def test_partition_pruning_on_ds(spark, tmp_path):
-    """The days(ts)-analog layout must prune date partitions for ts
-    range predicates — the 100 TB table's first line of defense."""
-    from rollup_engine.generate import synthetic_transcripts
-    from rollup_engine.ingest import read_partitioned, write_partitioned
-
-    t = synthetic_transcripts(spark, n_convs=40, turns_per_conv=30)
-    path = str(tmp_path / "part")
-    write_partitioned(t.where("ts is not null"), path, n_buckets=4)
-    df = spark.read.parquet(path).where(F.col("ds") == "2024-01-01")
-    plan = _plan(df)
-    # partition filter present, and the scan's file selection is pruned
-    assert "PartitionFilters" in plan and "ds" in plan
-    assert df.count() > 0
-    # round-trip columns intact
-    assert set(read_partitioned(spark, path).columns) == {
-        "conv_id", "turn_idx", "role", "text", "tool", "ts",
-    }
-
-
 def test_vectorized_scan_and_two_phase_agg(spark):
     """Parquet scan must be the vectorized (Batched) reader, and the
     percentile sketch aggregate must still split partial/final around
@@ -445,11 +425,11 @@ PLAN_SHAPES = {
     "sliding": _FINALIZE
     + " > Sort > AQEShuffleRead > ShuffleQueryStage > Exchange"
     + _MERGE.format(bucket=" > Expand"),
-    # one output key: the first exchange is a single partition, which
-    # AQE neither coalesces nor needs sorted
+    # one output key, merged in the one partition the in-window rows are
+    # coalesced to: no exchange, one stage
     "scrape_merge": _FINALIZE
-    + " > ShuffleQueryStage > Exchange"
-    + _MERGE.format(bucket=""),
+    + " > HashAggregate > HashAggregate > Project > Generate > Project"
+    " > Coalesce > Project > Filter > ColumnarToRow > FileScan",
 }
 
 

@@ -151,25 +151,119 @@ def test_cli_engine_prometheus_from_tier(spark, tmp_path, monkeypatch):
         server.shutdown()
 
 
-def test_scrape_is_single_action(spark):
+def test_scrape_is_single_action(spark, tmp_path):
     """O(1)-driver scrapes (round-2 verdict item 6): the first scrape
     of a minute runs exactly one collect action over the lazy tier-merge
-    plan (plan build runs zero jobs) — 3 Spark jobs under AQE, one per
-    query stage — and every further scrape within the same minute runs
-    ZERO Spark jobs (memoized)."""
+    plan (plan build runs zero jobs) — one Spark job, the merge running
+    in a single partition with no exchange — and every further scrape
+    within the same minute runs ZERO Spark jobs (memoized).  This holds
+    for a persisted tier and for a tier read from a parquet directory
+    (the ``--out`` and incremental-store deployment shape)."""
+    from rollup_engine.hist_rollup import read_tier
     from rollup_engine.job import make_tier_scraper
+    from rollup_engine.serve import trailing_merge
 
+    now = dt.datetime(2024, 1, 1, 1, 0)
     tier = _minute_tier(spark).persist()
     tier.count()  # warm the tier cache (the serving deployment state)
-    compute = make_tier_scraper(
-        tier, 120, lambda: dt.datetime(2024, 1, 1, 1, 0)
-    )
+    compute = make_tier_scraper(tier, 120, lambda: now)
     r1, first = spark_work(spark, compute)[:2]
     r2, second = spark_work(spark, compute)[:2]
+    path = str(tmp_path / "minute")
+    tier.repartition(3).write.parquet(path)
     tier.unpersist()
     assert r1 is r2 and r1.count == 5
-    assert len(first) == 3           # the one collect action under AQE
+    assert len(first) == 1           # the one collect action
     assert second == [], f"memoized scrape ran jobs: {second}"
+
+    stored = read_tier(spark, path)
+    r3, third = spark_work(spark, make_tier_scraper(stored, 120, lambda: now))[:2]
+    assert r3 == r1 and len(third) == 1
+    merge = trailing_merge(stored, now, 120)
+    merge.collect()
+    executed = merge._sc._jvm.PythonSQLUtils.explainString(
+        merge._jdf.queryExecution(), "simple"
+    )
+    assert "Exchange" not in executed, executed
+
+
+def _exchange_merge(tier, now, minutes, raw=None):
+    """The trailing-window merge-all as a plain same-tier
+    ``hist_cascade`` over the constant-keyed in-window rows, with no
+    single-partition step: the exchange plan the scrape merge replaced."""
+    from pyspark.sql import functions as F
+
+    from rollup_engine.hist_rollup import hist_cascade
+    from rollup_engine.transcripts import clean
+
+    ts = F.lit(now).cast("timestamp")
+    cutoff = ts - F.expr(f"INTERVAL {minutes} MINUTES")
+    edge = F.date_trunc("minute", cutoff)
+    bucket = F.col("bucket_start")
+    rows = tier.where((bucket >= edge) & (bucket <= ts))
+    if raw is not None:
+        edge_rows = with_deltas(clean(raw)).where(
+            (F.col("ts") >= cutoff) & (F.date_trunc("minute", "ts") == edge)
+        )
+        rows = rows.where(bucket > edge).unionByName(
+            hist_rollup(edge_rows, "minute")
+        )
+    one_key = rows.withColumn("bucket_start", F.expr("timestamp_seconds(0)"))
+    return hist_cascade(one_key, "minute")
+
+
+def test_single_partition_merge_equals_exchange_merge(spark, tmp_path):
+    """The scrape merge runs in one partition; the hist merge is
+    order-free, so it must give the exchange merge's row exactly,
+    ``hist`` included, and the same exposition bytes: over a tier
+    spread across several files, over quantized buckets (a
+    ``max_bins=4`` tier), for an empty window, 5, 60 and 1,440 minutes,
+    and with the exact edge re-rolled from raw turns."""
+    from rollup_engine.generate import BASE_TS, synthetic_transcripts
+    from rollup_engine.hist_rollup import HIST_MAX_BINS, read_tier
+    from rollup_engine.render import RollupResult, prometheus_exposition
+    from rollup_engine.serve import trailing_merge
+    from rollup_engine.transcripts import clean
+
+    raw = synthetic_transcripts(
+        spark, n_convs=1_600, turns_per_conv=8, error_rate=0.05
+    )
+    raw_path = str(tmp_path / "turns")
+    raw.write.parquet(raw_path)
+    raw = spark.read.parquet(raw_path)
+    deltas = with_deltas(clean(raw))
+    tiers = {}
+    for name, max_bins in (("exact", HIST_MAX_BINS), ("quantized", 4)):
+        path = str(tmp_path / name)
+        tier = hist_rollup(deltas, "minute", max_bins=max_bins)
+        tier.repartition(4).write.parquet(path)
+        tiers[name] = read_tier(spark, path)
+        assert len(tiers[name].inputFiles()) >= 4
+
+    start = dt.datetime.fromisoformat(BASE_TS)
+    now = start + dt.timedelta(minutes=1_500, seconds=23)
+    cases = [
+        (dt.datetime(2030, 1, 1), 5, None),  # empty window
+        (now, 5, None),
+        (now, 60, None),
+        (now, 1_440, None),
+        (now, 60, raw),  # exact edge
+    ]
+    for name, tier in tiers.items():
+        for at, minutes, turns in cases:
+            got = trailing_merge(tier, at, minutes, turns).collect()
+            want = _exchange_merge(tier, at, minutes, turns).collect()
+            assert got == want, (name, at, minutes, turns is not None)
+            if not want:
+                assert trailing_result(tier, at, minutes) == RollupResult(count=0)
+                continue
+            assert want[0]["turn_count"] > 0
+            assert prometheus_exposition(
+                RollupResult.from_row(got[0])
+            ) == prometheus_exposition(RollupResult.from_row(want[0]))
+    # the max_bins=4 tier holds quantized buckets
+    hists = [t.select("bucket_start", "hist") for t in tiers.values()]
+    assert hists[1].exceptAll(hists[0]).count() > 0
 
 
 def test_next_minute_scrape_reuses_merge_code(spark, tmp_path):
