@@ -181,6 +181,60 @@ def rp_lsh_topk(
     )
 
 
+def smallest_id_centroids(
+    df: DataFrame,
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[float]]:
+    """Degenerate deterministic quantizer (oracle-reproducible in plain
+    SQL): the n smallest-id vectors.  Recall on clustered data is luck —
+    prefer ann_index.kmeans_centroids anywhere a DuckDB oracle isn't
+    required."""
+    return [
+        [float(x) for x in r[0]]
+        for r in df.select(vec_col, id_col)
+        .orderBy(F.asc(id_col))
+        .limit(n_centroids)
+        .collect()
+    ]
+
+
+def assign_cid(vec_col_expr, centroids: list[list[float]]):
+    """Nearest-centroid index as a Column expression: argmax over an
+    array of per-centroid cosine scores, one independent score
+    expression per centroid (a when-fold would nest each score tree
+    inside the next condition AND branch: 2^n_centroids node blowup,
+    measured as a driver OOM at 16×64).  Scores are rounded to 9 dp so
+    oracle-side ties resolve identically; array_position returns the
+    FIRST max, i.e. the smallest index.  Zero-norm vectors park in
+    list 0: with try_divide their scores are all NULL, so
+    array_max/array_position yield NULL (not 0) — coalesce both NULL
+    and 0 to position 1 so the parking actually happens and no row
+    lands in a NULL-cid (__HIVE_DEFAULT_PARTITION__) directory."""
+    scores = F.array(
+        *[F.round(cosine(vec_col_expr, _lit_vec(c)), 9) for c in centroids]
+    )
+    pos = F.array_position(scores, F.array_max(scores)).cast("int")
+    return (
+        F.when(pos.isNull() | (pos == 0), F.lit(1)).otherwise(pos) - F.lit(1)
+    ).alias("cid")
+
+
+def rank_centroids(query_vec, centroids: list[list[float]]) -> list[int]:
+    """Centroid indexes by descending query cosine — driver-side numpy,
+    ties broken by index (matches the SQL oracle's ordering)."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    qn = np.linalg.norm(q)
+    scored = []
+    for i, c in enumerate(centroids):
+        cv = np.asarray(c, dtype=np.float64)
+        denom = np.linalg.norm(cv) * qn
+        s = float(cv @ q) / denom if denom > 0 else float("-inf")
+        scored.append((round(s, 9), i))
+    return [i for _, i in sorted(scored, key=lambda t: (-t[0], t[1]))]
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec,
@@ -193,64 +247,25 @@ def ivf_topk(
     """IVF (inverted-file) approximate top-k — the second scale path
     besides random-hyperplane LSH.
 
-    Coarse quantizer: the ``n_centroids`` vectors with the smallest ids
-    serve as centroids — deterministic, broadcastable, and (unlike
-    k-means) reproducible in the DuckDB oracle.  Build: each vector is
-    assigned to its nearest centroid by cosine (a JVM expression over
-    the broadcast centroid list — at scale this is one map stage, and
-    the assignment would be written as a partition column so queries
-    prune files).  Query: rank centroids by query-cosine, search only
-    the ``nprobe`` best inverted lists, exact re-rank inside.
+    Coarse quantizer: ``smallest_id_centroids`` — deterministic,
+    broadcastable, and (unlike k-means) reproducible in the DuckDB
+    oracle.  Build: ``assign_cid`` puts each vector in its nearest
+    centroid's list (a JVM expression over the broadcast centroid list
+    — one map stage; ``ann_index.write_ivf_index`` persists it as a
+    partition column so queries prune files).  Query:
+    ``rank_centroids`` orders the lists by query-cosine, only the
+    ``nprobe`` best are searched, exact re-rank inside.
 
     Candidates shrink ~n_centroids/nprobe; recall depends on cluster
     structure (pinned vs brute force in tests).
     """
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in df.select(id_col, vec_col)
-        .orderBy(F.asc(id_col))
-        .limit(n_centroids)
-        .collect()
-    ]
+    cents = smallest_id_centroids(df, n_centroids, id_col, vec_col)
+    probe = rank_centroids(query_vec, cents)[:nprobe]
     v = F.col(vec_col).cast("array<double>")
-    # nearest-centroid assignment via array argmax — one independent
-    # score expression per centroid (a when-fold would nest each score
-    # tree inside the next condition AND branch: 2^n_centroids node
-    # blowup, measured as a driver OOM at 16×64).  Scores rounded to
-    # 9 dp so oracle-side ties resolve identically; array_position
-    # returns the FIRST max, i.e. the smallest cid.
-    scores = F.array(
-        *[F.round(cosine(v, _lit_vec(cvec)), 9) for _, cvec in cents]
-    )
-    cid_arr = F.array(*[F.lit(cid) for cid, _ in cents])
-    # Degenerate guard: cosine uses try_divide, so a zero-norm vector
-    # scores NULL against every centroid → array_max is NULL →
-    # array_position(scores, NULL) is NULL (and 0 if a legacy NaN path
-    # ever produced an all-NaN row).  Coalesce both cases to list 1 so
-    # such vectors really are parked in the first list rather than
-    # landing in a NULL cid; the NULL-score predicate below still keeps
-    # them out of every re-rank.
-    pos = F.array_position(scores, F.array_max(scores)).cast("int")
-    best_cid = F.element_at(
-        cid_arr, F.when(pos.isNull() | (pos == 0), F.lit(1)).otherwise(pos)
-    )
-    q = np.asarray(query_vec, dtype=np.float64)
-
-    def _cos(c):
-        cv = np.asarray(c, dtype=np.float64)
-        return round(
-            float(
-                (cv @ q) / (np.sqrt((cv * cv).sum()) * np.sqrt((q * q).sum()))
-            ),
-            9,
-        )
-
-    probed = sorted(cents, key=lambda c: (-_cos(c[1]), c[0]))[:nprobe]
-    probe_ids = [cid for cid, _ in probed]
     qlit = _lit_vec(query_vec)
     return (
-        df.select(F.col(id_col), v.alias("_v"), best_cid.alias("_cid"))
-        .where(F.col("_cid").isin(probe_ids))
+        df.select(F.col(id_col), v.alias("_v"), assign_cid(v, cents))
+        .where(F.col("cid").isin(probe))
         .select(
             F.col(id_col), F.round(cosine(F.col("_v"), qlit), 6).alias("score")
         )

@@ -44,9 +44,12 @@ from .ann import (
     _lit_vec,
     _resolve_dim,
     _xor_masks,
+    assign_cid,
     cosine,
     query_signature,
+    rank_centroids,
     rp_signature,
+    smallest_id_centroids,
 )
 
 META_FILE = "_meta.json"
@@ -195,41 +198,6 @@ def kmeans_centroids(
     return [[float(x) for x in c] for c in C]
 
 
-def smallest_id_centroids(
-    df: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Degenerate deterministic quantizer (oracle-reproducible in plain
-    SQL): the n smallest-id vectors.  Recall on clustered data is luck —
-    prefer kmeans_centroids anywhere a DuckDB oracle isn't required."""
-    return [
-        [float(x) for x in r[0]]
-        for r in df.select(vec_col, id_col)
-        .orderBy(F.asc(id_col))
-        .limit(n_centroids)
-        .collect()
-    ]
-
-
-def assign_cid(vec_col_expr, centroids: list[list[float]]):
-    """Nearest-centroid id as a Column expression (argmax over an array
-    of per-centroid cosine scores — see ann.ivf_topk for why not a
-    when-fold).  Zero-norm vectors park in list 0: with try_divide their
-    scores are all NULL, so array_max/array_position yield NULL (not 0)
-    — coalesce both NULL and 0 to position 1 so the parking actually
-    happens and no row lands in a NULL-cid (__HIVE_DEFAULT_PARTITION__)
-    directory."""
-    scores = F.array(
-        *[F.round(cosine(vec_col_expr, _lit_vec(c)), 9) for c in centroids]
-    )
-    pos = F.array_position(scores, F.array_max(scores)).cast("int")
-    return (
-        F.when(pos.isNull() | (pos == 0), F.lit(1)).otherwise(pos) - F.lit(1)
-    ).alias("cid")
-
-
 def write_ivf_index(
     df: DataFrame,
     path: str,
@@ -263,20 +231,6 @@ def write_ivf_index(
     }
     _write_meta(path, meta)
     return meta
-
-
-def rank_centroids(query_vec, centroids: list[list[float]]) -> list[int]:
-    """Centroid indexes by descending query cosine — driver-side numpy,
-    ties broken by index (matches the SQL oracle's ordering)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    scored = []
-    for i, c in enumerate(centroids):
-        cv = np.asarray(c, dtype=np.float64)
-        denom = np.linalg.norm(cv) * qn
-        s = float(cv @ q) / denom if denom > 0 else float("-inf")
-        scored.append((round(s, 9), i))
-    return [i for _, i in sorted(scored, key=lambda t: (-t[0], t[1]))]
 
 
 def ivf_topk_indexed(

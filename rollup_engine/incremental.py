@@ -45,20 +45,17 @@ from .hist_rollup import (
 from .transcripts import clean
 
 
-class IncrementalRollup:
-    """Maintains <work>/minute_v{S}/ + conv_state_v{S}/ + CHECKPOINT."""
+# the store's tiers, finest first: each cascades from the one before
+_TIERS = ("minute", "hour", "day")
 
-    def __init__(
-        self,
-        store: SnapshotStore,
-        workdir: str,
-        tier: str = "minute",
-        cascade_tiers: tuple[str, ...] = ("hour", "day"),
-    ):
+
+class IncrementalRollup:
+    """Maintains <work>/{minute,hour,day}_v{S}/ + conv_state_v{S}/ +
+    CHECKPOINT."""
+
+    def __init__(self, store: SnapshotStore, workdir: str):
         self.store = store
         self.workdir = workdir
-        self.tier = tier
-        self.cascade_tiers = cascade_tiers
         os.makedirs(workdir, exist_ok=True)
 
     # ------------------------------------------------------------ state
@@ -72,13 +69,13 @@ class IncrementalRollup:
         with open(self._ckpt_path()) as f:
             return json.load(f)
 
-    def rollup_path(self, version: int, tier: str | None = None) -> str:
-        return os.path.join(self.workdir, f"{tier or self.tier}_v{version:08d}")
+    def rollup_path(self, version: int, tier: str = "minute") -> str:
+        return os.path.join(self.workdir, f"{tier}_v{version:08d}")
 
     def state_path(self, version: int) -> str:
         return os.path.join(self.workdir, f"conv_state_v{version:08d}")
 
-    def read_rollup(self, spark: SparkSession, tier: str | None = None) -> DataFrame:
+    def read_rollup(self, spark: SparkSession, tier: str = "minute") -> DataFrame:
         """The committed tier, in the current tier columns."""
         ck = self.checkpoint()
         if ck["version"] == 0:
@@ -109,7 +106,7 @@ class IncrementalRollup:
             )
             turns = seeded_turns(turns, state)
 
-        new_rollup = hist_rollup(with_deltas(turns), self.tier)
+        new_rollup = hist_rollup(with_deltas(turns), "minute")
 
         # --- merge: only touched buckets re-merge
         old = self.read_rollup(spark) if ck["version"] > 0 else None
@@ -121,7 +118,7 @@ class IncrementalRollup:
             to_merge = old.join(F.broadcast(touched), "bucket_start").unionByName(
                 new_rollup
             )
-            merged = hist_cascade(to_merge, self.tier)  # same-tier merge
+            merged = hist_cascade(to_merge, "minute")  # same-tier merge
             result = untouched.select(merged.columns).unionByName(merged)
         else:
             result = new_rollup
@@ -132,8 +129,8 @@ class IncrementalRollup:
         # --- versioned writes, checkpoint pointer flipped last
         # each coarser tier cascades from the one just written below it
         # (tiny tier files, never raw data)
-        tiers = (self.tier, *self.cascade_tiers)
-        write_tiers(spark, result, {t: self.rollup_path(version, t) for t in tiers})
+        paths = {t: self.rollup_path(version, t) for t in _TIERS}
+        write_tiers(spark, result, paths)
         new_state.write.mode("overwrite").parquet(self.state_path(version))
         # Commit metrics from the just-written parquet FOOTERS (pyarrow
         # metadata read, no Spark job) — the write itself already
@@ -167,12 +164,7 @@ class IncrementalRollup:
             full = os.path.join(self.workdir, d)
             if not os.path.isdir(full):
                 continue
-            prefixes = (
-                f"{self.tier}_v",
-                "conv_state_v",
-                *[f"{t}_v" for t in self.cascade_tiers],
-            )
-            for prefix in prefixes:
+            for prefix in (*[f"{t}_v" for t in _TIERS], "conv_state_v"):
                 if d.startswith(prefix):
                     v = int(d[len(prefix) :])
                     if v < keep_version:

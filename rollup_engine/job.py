@@ -35,7 +35,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--transcripts", help="transcript parquet dir (engine mode)")
     p.add_argument("--snapshot-store", help="SnapshotStore root (incremental)")
     p.add_argument("--workdir", help="checkpoint/rollup workdir (incremental)")
-    p.add_argument("--tiers", default="minute,hour,day")
+    p.add_argument(
+        "--tiers",
+        default="minute,hour,day",
+        help="tiers to build (one-shot); incremental mode builds all three",
+    )
     p.add_argument("--out", help="output dir for rollup parquet (one-shot)")
     # reference-parity flags (/root/reference/src/args/mod.rs)
     p.add_argument("-t", dest="time_filter_minutes", type=int)
@@ -251,7 +255,15 @@ def run_engine(spark, args):
 
 
 def main(argv: list[str] | None = None) -> None:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if (
+        args.snapshot_store
+        and args.workdir
+        and args.tiers != parser.get_default("tiers")
+    ):
+        # the incremental store always cascades minute → hour → day
+        parser.error("--tiers is fixed at minute,hour,day in incremental mode")
     from .session import get_spark
 
     master = f"local[{args.cpus}]" if args.cpus else None

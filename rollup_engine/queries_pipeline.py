@@ -229,7 +229,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-mode burn-rate alerting == the batch ``burn_rate``
     gate (oracle reused verbatim): the stream materializes ONLY the
-    per-minute (cnt, err) counts (streaming.stream_minute_errors, same
+    per-minute (cnt, err) counts (tsops.minute_errors, same
     two-microbatch watermark choreography as q_stream_minute — a
     1-minute window starts at or before its event time, so every real
     window is ≤ max_ts and the sentinel's are 30 days out), then
@@ -277,7 +277,7 @@ def q_stream_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_predict_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-mode capacity trigger == the batch ``predict_linear``
     gate (oracle reused verbatim): the SAME materialized per-minute
-    feed the burn-rate twin streams (stream_minute_errors) drives
+    feed the burn-rate twin streams (tsops.minute_errors) drives
     tsops.trend_from_minutes — one stream materialization serves every
     trailing-window evaluator, which is the point of the feed."""
     from .streaming import run_burn_stream_once

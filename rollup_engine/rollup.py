@@ -96,6 +96,21 @@ def metric_aggs(delta_col: str = DELTA_COL) -> list[Column]:
     return [c.alias(name) for name, c in metric_agg_map(delta_col).items()]
 
 
+def _bucketed(
+    deltas: DataFrame, bucket: Column, tier: str, extra_keys: list[str] | None
+) -> DataFrame:
+    """One row per (bucket, extra keys) with the reference metrics,
+    labelled ``tier`` — the body ``rollup`` and ``rollup_interval``
+    share; they differ only in the bucket expression and the label."""
+    keys = [bucket.alias("bucket_start"), *[F.col(k) for k in extra_keys or []]]
+    out = deltas.groupBy(*keys).agg(*metric_aggs())
+    return out.withColumn("tier", F.lit(tier)).select(
+        "tier",
+        "bucket_start",
+        *[c for c in out.columns if c != "bucket_start"],
+    )
+
+
 def rollup(
     deltas: DataFrame,
     tier: str = "minute",
@@ -108,16 +123,8 @@ def rollup(
     1:1 with the DuckDB oracle's ``date_trunc`` — while compiling to the
     same hash-aggregate plan.
     """
-    t = TIERS[tier]
-    keys = [F.date_trunc(t.duckdb_trunc, F.col("ts")).alias("bucket_start")]
-    for k in extra_keys or []:
-        keys.append(F.col(k))
-    out = deltas.groupBy(*keys).agg(*metric_aggs())
-    return out.withColumn("tier", F.lit(tier)).select(
-        "tier",
-        "bucket_start",
-        *[c for c in out.columns if c != "bucket_start"],
-    )
+    bucket = F.date_trunc(TIERS[tier].duckdb_trunc, F.col("ts"))
+    return _bucketed(deltas, bucket, tier, extra_keys)
 
 
 def rollup_interval(
@@ -139,15 +146,7 @@ def rollup_interval(
     w_us = int(width_seconds) * 1_000_000
     e = F.unix_micros(F.col("ts").cast("timestamp"))
     bucket = F.timestamp_micros(e - F.pmod(e, F.lit(w_us)))
-    keys = [bucket.alias("bucket_start")]
-    for k in extra_keys or []:
-        keys.append(F.col(k))
-    out = deltas.groupBy(*keys).agg(*metric_aggs())
-    return out.withColumn("tier", F.lit(f"{int(width_seconds)}s")).select(
-        "tier",
-        "bucket_start",
-        *[c for c in out.columns if c != "bucket_start"],
-    )
+    return _bucketed(deltas, bucket, f"{int(width_seconds)}s", extra_keys)
 
 
 def global_rollup(deltas: DataFrame, delta_col: str = DELTA_COL) -> DataFrame:

@@ -6,6 +6,8 @@ Defaults chosen for the 100 TB target, not just local tests:
   per-row Python UDFs are banned by design — BASELINE.json input_hint).
 - shuffle partitions sized to the local core count; on a real cluster
   this is overridden by AQE's coalescing + ``--conf`` at submit time.
+- under spark-submit every setting here is a default: a ``--master``
+  or ``--conf`` given at submit time wins (``_submit_conf``).
 - the generated-code cache holds 1,000 classes, not Spark's default 100.
   The engine's steady state is append → incremental refresh → scrape.
   Under the default, every warm refresh recompiled 118-124 Janino
@@ -30,6 +32,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _submit_conf() -> dict[str, str] | None:
+    """The launch conf when spark-submit started this process, else
+    None.  spark-submit starts the JVM first and passes its gateway in
+    ``PYSPARK_GATEWAY_PORT``; its ``--master`` / ``--conf`` values are
+    that JVM's system properties, which ``SparkConf()`` reads only once
+    attached to it (before, it is a plain dict that holds nothing).  A
+    plain ``python`` start has no JVM yet: its driver options must
+    reach the JVM launch, so ``get_spark`` applies all of them."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app_name: str = "rollup_engine",
     master: str | None = None,
@@ -39,13 +57,15 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in the sandbox; on a real cluster pass ``None`` at spark-submit time
-    and let the submit config win.
+    for a plain ``python`` start; on a real cluster pass ``None`` at
+    spark-submit time and let the submit config win.  Under
+    spark-submit every setting here is a default that the submitted
+    ``--master`` / ``--conf`` override; explicit arguments override
+    both.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        # under spark-submit, --master arrives via system properties —
-        # never override a real cluster with local mode
+    launched = _submit_conf()
+    if master is None and launched is None:
         from pyspark import SparkConf
 
         master = (
@@ -53,48 +73,53 @@ def get_spark(
         )
     # the ACTUAL core count of this session's master (not the sandbox
     # env) drives both shuffle-partition and heap sizing
-    m = master or ""
+    m = master or (launched or {}).get("spark.master", "")
     if m.startswith("local[") and m[6:-1].isdigit():
         cores = int(m[6:-1])
     else:
         cores = cpus
-    if shuffle_partitions is None:
+
+    conf = {
+        "spark.app.name": app_name,
         # 4× the core count: balances stragglers/skew without tiny-task
         # overhead.  Sizing from env regardless of master gave local[1]
         # 128 shuffle partitions — per-task overhead paid serially
         # (measured: 8 partitions beat 128 by 17% even at local[4]).
-        shuffle_partitions = max(4 * cores, 8)
-
-    builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.shuffle.partitions": str(max(4 * cores, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Don't let AQE coalesce below the core count: a 64 MB advisory
         # target turns a ~400 MB shuffle into ~6 partitions and
         # serializes every window/sort stage (measured 2× slowdown).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # Keep scans reasonable on local FS; on a cluster this bounds
         # per-task input so partitions fit in executor memory.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.sql.files.maxPartitionBytes": "134217728",
         # Local mode runs every task inside the driver JVM.  8g is the
         # measured sweet spot on this VM even at local[32] (same job,
         # same window: 8g → 7.5 s, 24g → 8.8 s, 64g → 14-55 s erratic —
         # huge heaps trade work for GC/page-fault pauses here).  On a
         # real cluster executor memory is a submit-time concern.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
         # above the refresh + scrape working set (module docstring)
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        "spark.sql.codegen.cache.maxEntries": "1000",
         # codegen ids follow AQE's stage order (module docstring)
-        .config("spark.sql.codegen.useIdInClassName", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.codegen.useIdInClassName": "false",
+    }
+    if launched is not None:
+        # spark-submit's --master / --conf win over every default above
+        conf = {k: v for k, v in conf.items() if k not in launched}
+    if master is not None:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    builder = SparkSession.builder
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

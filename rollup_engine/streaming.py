@@ -14,7 +14,9 @@ Here the same contract runs as a real stream:
       alert operators share (the stream twin of ``deltas.py``)
     → watermark on ts (bounded lateness; late turns beyond it dropped,
       the streaming analog of the reference's trailing-window filter)
-    → tumbling-window aggregate (count/min/max/avg + GK percentiles)
+    → the batch operators over a window key: ``rollup.metric_aggs``
+      per minute, ``tsops.sliding_rollup`` per hopping window,
+      ``tsops.minute_errors`` for the burn-rate feed
     → append-mode sink (parquet/memory/foreachBatch merge into the
       rollup store)
 
@@ -34,9 +36,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .rollup import ERR4, ERR5, error_flag
+from .rollup import METRIC_COLS, metric_aggs
 from .schema import TRANSCRIPT_SCHEMA
 from .transcripts import VALID_TURN
+from .tsops import minute_errors, sliding_rollup
+
+# bounded lateness of every windowed stream: a window is final, and
+# appended, once the watermark (max event time − this) passes its end
+_LATENESS = "10 minutes"
 
 _DELTA_OUT = T.StructType(
     [
@@ -140,41 +147,19 @@ def stream_deltas(turns: DataFrame) -> DataFrame:
 
 
 def stream_minute_rollup(
-    deltas: DataFrame, watermark: str = "10 minutes"
+    deltas: DataFrame, watermark: str = _LATENESS
 ) -> DataFrame:
-    """Watermarked tumbling-minute aggregate over the delta stream."""
-    d = F.col("delta_ms")
+    """Watermarked tumbling-minute aggregate over the delta stream: the
+    batch rollup's ``metric_aggs`` over a ``window(ts, '1 minute')``
+    key (a stream needs a window key to finalize a bucket in append
+    mode).  ``lat_sum_ms`` is not emitted, so the optimizer drops it."""
     return (
         deltas.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(d).alias("turn_count"),
-            F.min(d).alias("lat_min_ms"),
-            F.max(d).alias("lat_max_ms"),
-            F.floor(F.avg(d)).cast("long").alias("lat_avg_ms"),
-            F.percentile_approx(d, F.lit(0.5), F.lit(10000))
-            .cast("long")
-            .alias("lat_p50_ms"),
-            F.percentile_approx(d, F.lit(0.9), F.lit(10000))
-            .cast("long")
-            .alias("lat_p90_ms"),
-            F.percentile_approx(d, F.lit(0.99), F.lit(10000))
-            .cast("long")
-            .alias("lat_p99_ms"),
-            F.round(F.avg(error_flag(ERR4)), 4).alias("err4xx_rate"),
-            F.round(F.avg(error_flag(ERR5)), 4).alias("err5xx_rate"),
-        )
+        .agg(*metric_aggs())
         .select(
             F.col("w.start").alias("bucket_start"),
-            "turn_count",
-            "lat_min_ms",
-            "lat_max_ms",
-            "lat_avg_ms",
-            "lat_p50_ms",
-            "lat_p90_ms",
-            "lat_p99_ms",
-            "err4xx_rate",
-            "err5xx_rate",
+            *[c for c in METRIC_COLS if c != "lat_sum_ms"],
         )
     )
 
@@ -312,39 +297,6 @@ def run_stream_once(
     _sink_once(spark, rollup, checkpoint_dir, out_dir)
 
 
-def stream_sliding_rollup(
-    deltas: DataFrame,
-    length: str = "5 minutes",
-    hop: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked HOPPING-window aggregate over the delta stream — the
-    streaming twin of ``tsops.sliding_rollup``, sharing the same
-    ``F.window(ts, length, hop)`` operator (the batch query really is
-    stream-portable verbatim: only the watermark line differs).  Each
-    delta lands in length/hop overlapping windows; append mode emits a
-    window once the watermark passes its end."""
-    d = F.col("delta_ms")
-    return (
-        deltas.withWatermark("ts", watermark)
-        .where(d.isNotNull())
-        .groupBy(F.window(F.col("ts"), length, hop).alias("_w"))
-        .agg(
-            F.count(d).alias("turn_count"),
-            F.min(d).alias("lat_min_ms"),
-            F.max(d).alias("lat_max_ms"),
-            F.floor(F.sum(d) / F.count(d)).cast("long").alias("lat_avg_ms"),
-        )
-        .select(
-            F.col("_w.start").alias("bucket_start"),
-            "turn_count",
-            "lat_min_ms",
-            "lat_max_ms",
-            "lat_avg_ms",
-        )
-    )
-
-
 def run_sliding_stream_once(
     spark: SparkSession,
     input_dir: str,
@@ -355,36 +307,13 @@ def run_sliding_stream_once(
     max_files: int = 64,
 ) -> None:
     """One availableNow pass of the hopping-window stream (same file
-    choreography as ``run_stream_once``)."""
+    choreography as ``run_stream_once``): the batch ``sliding_rollup``
+    over the watermarked delta stream.  Append mode emits a window once
+    the watermark passes its end."""
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
-    rollup = stream_sliding_rollup(stream_deltas(turns), length, hop)
+    deltas = stream_deltas(turns).withWatermark("ts", _LATENESS)
+    rollup = sliding_rollup(deltas, "delta_ms", length, hop)
     _sink_once(spark, rollup, checkpoint_dir, out_dir)
-
-
-def stream_minute_errors(
-    turns: DataFrame,
-    err_prefix: str = "error:5",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked per-minute (cnt, err) counts over the raw turn
-    stream — the continuous feed for the burn-rate evaluator
-    (tsops.burn_from_minutes): the stream materializes ONLY this tiny
-    relation; the trailing burn windows read it, never raw turns.
-    Same plan family as the batch pre-aggregate inside
-    tsops.burn_rate_alerts (one map-combinable count per minute)."""
-    return (
-        turns.withWatermark("ts", watermark)
-        .groupBy(F.window(F.col("ts"), "1 minute").alias("_w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(
-                F.when(
-                    F.col("tool").startswith(err_prefix), F.lit(1)
-                ).otherwise(F.lit(0))
-            ).alias("err"),
-        )
-        .select(F.col("_w.start").alias("bucket_start"), "cnt", "err")
-    )
 
 
 def run_burn_stream_once(
@@ -395,9 +324,13 @@ def run_burn_stream_once(
     max_files: int = 64,
 ) -> None:
     """One availableNow pass materializing the per-minute error counts
-    (same file choreography as ``run_stream_once``)."""
+    (same file choreography as ``run_stream_once``): the batch
+    ``minute_errors`` pre-aggregate over the watermarked raw turn
+    stream — the continuous feed for ``tsops.burn_from_minutes``, so
+    the trailing burn windows read this tiny relation, never raw
+    turns."""
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
-    counts = stream_minute_errors(turns)
+    counts = minute_errors(turns.withWatermark("ts", _LATENESS))
     _sink_once(spark, counts, checkpoint_dir, out_dir)
 
 

@@ -758,11 +758,12 @@ def sliding_rollup(
     rate, updated every minute").  Uses Spark's native
     ``F.window(ts, length, hop)`` (the same operator Structured
     Streaming uses for hopping aggregations, so this query is
-    stream-portable verbatim); the expansion is linear in length/hop
-    and the aggregation stays map-side combinable — at 100 TB the cost
-    is exactly (length/hop) × the tumbling tier, never a range join.
-    All metrics are exact integer folds; the avg is floor(sum/count)
-    like the rollup tiers.
+    stream-portable verbatim: ``streaming.run_sliding_stream_once``
+    runs it over the watermarked delta stream); the expansion is linear
+    in length/hop and the aggregation stays map-side combinable — at
+    100 TB the cost is exactly (length/hop) × the tumbling tier, never
+    a range join.  All metrics are exact integer folds; the avg is
+    floor(sum/count) like the rollup tiers.
     """
     v = F.col(value_col)
     return (
@@ -1451,16 +1452,30 @@ def burn_rate_alerts(
     the frame is keyed on the integer epoch-minute, so an empty minute
     simply contributes nothing.
     """
-    minute_us = 60_000_000
-    minutes = (
-        df.groupBy(
-            F.floor(
-                F.unix_micros(F.col(ts_col).cast("timestamp"))
-                / F.lit(minute_us)
-            )
-            .cast("long")
-            .alias("_m")
-        )
+    return burn_from_minutes(
+        minute_errors(df, err_prefix, ts_col),
+        slo_num=slo_num,
+        slo_den=slo_den,
+        long_minutes=long_minutes,
+        short_minutes=short_minutes,
+        long_factor=long_factor,
+        short_factor=short_factor,
+    )
+
+
+def minute_errors(
+    df: DataFrame, err_prefix: str = "error:5", ts_col: str = "ts"
+) -> DataFrame:
+    """Per-minute ``(bucket_start, cnt, err)`` counts: turns, and turns
+    whose tool starts with ``err_prefix``.  The one pre-aggregate both
+    burn-rate paths read: batch ``burn_rate_alerts`` over raw turns,
+    and the stream (``streaming.run_burn_stream_once``) over the
+    watermarked turn stream.  ``window(ts, '1 minute')`` keys it
+    because a stream needs a window key to finalize buckets in append
+    mode; it also drops NULL-``ts`` turns, which have no minute.
+    """
+    return (
+        df.groupBy(F.window(F.col(ts_col), "1 minute").alias("_w"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(
@@ -1469,22 +1484,7 @@ def burn_rate_alerts(
                 ).otherwise(F.lit(0))
             ).alias("err"),
         )
-        .select(
-            F.timestamp_micros(F.col("_m") * minute_us).alias(
-                "bucket_start"
-            ),
-            "cnt",
-            "err",
-        )
-    )
-    return burn_from_minutes(
-        minutes,
-        slo_num=slo_num,
-        slo_den=slo_den,
-        long_minutes=long_minutes,
-        short_minutes=short_minutes,
-        long_factor=long_factor,
-        short_factor=short_factor,
+        .select(F.col("_w.start").alias("bucket_start"), "cnt", "err")
     )
 
 
@@ -1499,14 +1499,14 @@ def burn_from_minutes(
 ) -> DataFrame:
     """Burn evaluation over an already-materialized per-minute
     (bucket_start, cnt, err) relation — the continuous-mode entry
-    point: a stream (streaming.stream_minute_errors) or the minute
-    tier feeds the SAME windows and thresholds the batch path uses."""
+    point: a stream (``minute_errors`` over the turn stream) or the
+    minute tier feeds the SAME windows and thresholds the batch path
+    uses."""
     minute_us = 60_000_000
+    # the cast admits TIMESTAMP_NTZ minutes (a no-op on TIMESTAMP)
+    start_us = F.unix_micros(F.col("bucket_start").cast("timestamp"))
     base = minutes.withColumn(
-        "_m",
-        F.floor(F.unix_micros(F.col("bucket_start")) / F.lit(minute_us)).cast(
-            "long"
-        ),
+        "_m", F.floor(start_us / F.lit(minute_us)).cast("long")
     )
     w_long = Window.orderBy("_m").rangeBetween(-(long_minutes - 1), 0)
     w_short = Window.orderBy("_m").rangeBetween(-(short_minutes - 1), 0)

@@ -485,96 +485,3 @@ def test_lateness_profile_measures_cross_batch_lateness(spark, data):
     assert prof[2].rows == 3 and prof[2].late_rows == 2
     assert prof[2].late_frac == round(2 / 3, 4)
     assert abs(prof[2].late_p50_sec - 3600.0) < 1.0
-
-
-def test_incremental_exporter_pushes_only_changed_buckets(spark, data):
-    """Exporter contract: first export pushes the whole tier once;
-    re-export with no refresh pushes nothing; after a refresh only the
-    touched buckets go out; a sink failure leaves the offset
-    uncommitted so the same diff replays (at-least-once to the sink,
-    idempotent end state)."""
-    from rollup_engine.exporter import IncrementalExporter
-    from rollup_engine.incremental import rollup_diff
-
-    _full, b1, b2, store, work = data
-    store.append(b1)
-    job = IncrementalRollup(store, work)
-    job.refresh(spark)
-
-    pushed = []
-    exp = IncrementalExporter(job, sink=lambda rows: pushed.append(rows))
-    r1 = exp.export_once(spark)
-    tier_v1 = spark.read.parquet(job.rollup_path(1))
-    assert r1["rows"] == tier_v1.count() and len(pushed) == 1
-
-    assert exp.export_once(spark)["rows"] == 0  # nothing new
-    assert len(pushed) == 1
-
-    tier_v1_rows = tier_v1.collect()  # BEFORE the refresh GCs the v1 dir
-    # restrict batch 2 to a few conversations: every conv owns its own
-    # minute bucket in this fixture, so an unrestricted b2 would touch
-    # EVERY bucket and the only-changed-buckets claim would be vacuous
-    b2_sub = b2.where("conv_id IN ('conv-3', 'conv-4', 'conv-5')")
-    store.append(b2_sub)
-    job.refresh(spark)
-    r2 = exp.export_once(spark)
-    tier_v2 = spark.read.parquet(job.rollup_path(2))
-    tier_v1 = spark.createDataFrame(tier_v1_rows, tier_v1.schema)
-    touched = rollup_diff(tier_v1, tier_v2).where(
-        "status IN ('added', 'changed')"
-    ).count()
-    assert r2["rows"] == touched and touched < tier_v2.count()
-    # every pushed bucket carries the NEW value
-    got = {r["bucket_start"]: r["turn_count"] for r in pushed[1]}
-    want = {
-        r["bucket_start"]: r["turn_count"]
-        for r in tier_v2.collect()
-        if r["bucket_start"] in got
-    }
-    assert got == want
-
-    # sink failure: offset must NOT commit; the diff replays next time
-    store.append(b2.limit(0))  # empty snapshot still bumps the version
-    job.refresh(spark)
-
-    def boom(rows):
-        raise RuntimeError("sink down")
-
-    exp_fail = IncrementalExporter(job, sink=boom)
-    # empty diff → no sink call → offset advances cleanly
-    r3 = exp_fail.export_once(spark)
-    assert r3["rows"] == 0
-
-    # crash replay: a non-empty diff + failing sink must leave the
-    # offset UNCOMMITTED, and the identical diff must replay on the
-    # next export (at-least-once to the sink, idempotent end state)
-    store.append(b2.where("conv_id = 'conv-6'"))
-    job.refresh(spark)
-    committed = exp_fail.exported_version()
-    with pytest.raises(RuntimeError, match="sink down"):
-        exp_fail.export_once(spark)
-    assert exp_fail.exported_version() == committed  # offset not advanced
-
-    exp_retry = IncrementalExporter(job, sink=lambda rows: pushed.append(rows))
-    r4 = exp_retry.export_once(spark)
-    cur = job.checkpoint()["version"]
-    tier_cur = spark.read.parquet(job.rollup_path(cur))
-    conv6_buckets = {
-        r["bucket_start"]
-        for r in with_deltas(clean(b2.where("conv_id = 'conv-6'")), keep_first_turn=True)
-        .selectExpr("date_trunc('minute', ts) AS bucket_start")
-        .distinct()
-        .collect()
-    }
-    assert r4["rows"] > 0
-    assert exp_retry.exported_version() == cur
-    # the replayed push carries the CURRENT tier values for exactly the
-    # buckets conv-6's new turns live in
-    got4 = {r["bucket_start"]: r["turn_count"] for r in pushed[-1]}
-    assert set(got4) <= conv6_buckets
-    want4 = {
-        r["bucket_start"]: r["turn_count"]
-        for r in tier_cur.collect()
-        if r["bucket_start"] in got4
-    }
-    assert got4 == want4

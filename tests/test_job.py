@@ -69,3 +69,24 @@ def test_day_without_hour_cascades_from_minute(spark, turns, tmp_path):
     assert sorted(os.listdir(out)) == ["day", "minute"]
     got = _rows(read_tier(spark, f"{out}/day"))
     assert got and got == _rows(hist_cascade(_lazy_minute(spark, turns), "day"))
+
+
+def test_incremental_mode_rejects_tiers(tmp_path, capsys):
+    """The incremental store always holds minute → hour → day, so a
+    ``--tiers`` other than that is a usage error, not silently
+    ignored."""
+    from rollup_engine.job import main
+
+    argv = [
+        "--snapshot-store",
+        str(tmp_path / "store"),
+        "--workdir",
+        str(tmp_path / "work"),
+        "--tiers",
+        "minute",
+        "-q",
+    ]
+    with pytest.raises(SystemExit) as exc:
+        main(argv)
+    assert exc.value.code == 2
+    assert "--tiers" in capsys.readouterr().err

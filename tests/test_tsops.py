@@ -1538,6 +1538,42 @@ def test_burn_rate_multiwindow_fires_and_resets(spark):
     assert not out[50].alert
 
 
+def test_burn_rate_drops_null_ts_turns(spark):
+    """NULL-ts turns have no minute.  Batch burn_rate_alerts reads the
+    same per-minute pre-aggregate as the stream twin (minute_errors),
+    so it drops them as the stream does: the same rows as
+    burn_from_minutes over minute_errors, and no NULL-minute row (an
+    all-error NULL minute would alert)."""
+    from rollup_engine.tsops import (
+        burn_from_minutes,
+        burn_rate_alerts,
+        minute_errors,
+    )
+
+    base = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = [
+        ("c", m * 4 + i, "user", "x", "error:500" if i == 0 else "ok",
+         base + dt.timedelta(minutes=m, seconds=i))
+        for m in range(10)
+        for i in range(4)
+    ]
+    rows += [("c", 100 + i, "user", "x", "error:500", None) for i in range(5)]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    got = burn_rate_alerts(df).collect()
+    assert all(r.bucket_start is not None for r in got)
+    assert set(got) == set(burn_from_minutes(minute_errors(df)).collect())
+    assert len(got) == 10
+    # 1 error in 4 turns per minute (25%) burns the long window (> 15%)
+    # but not the short one (≤ 30%); the NULL-ts errors add nothing
+    last = max(got, key=lambda r: r.bucket_start)
+    assert (last.cnt_long, last.err_long) == (40, 10)
+    assert not any(r.alert for r in got)
+
+
 def test_trend_from_minutes_exact_line(spark):
     """A perfectly linear series recovers its slope exactly and the
     extrapolation lands on the line; a constant series has slope 0 and
