@@ -36,6 +36,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .session import temp_conf
+
 
 class SnapshotExpiredError(RuntimeError):
     """A read requested snapshots whose data files were expired."""
@@ -60,17 +62,12 @@ class SnapshotStore:
         """
         sid = self.current_snapshot_id() + 1
         out_dir = os.path.join(self.root, "data", f"s{sid:08d}")
-        spark = df.sparkSession
-        key = "spark.sql.parquet.outputTimestampType"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "TIMESTAMP_MICROS")
-        try:
+        with temp_conf(
+            df.sparkSession,
+            "spark.sql.parquet.outputTimestampType",
+            "TIMESTAMP_MICROS",
+        ):
             df.write.mode("overwrite").parquet(out_dir)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         files = sorted(
             os.path.relpath(p, self.root)
             for p in glob.glob(os.path.join(out_dir, "*.parquet"))

@@ -17,7 +17,7 @@ from datetime import datetime
 from functools import reduce
 from operator import and_, or_
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Columns a term can match against: the transcript analog of testing both
@@ -76,6 +76,3 @@ def conditions(
         preds.append(trailing_window(now, latest_minutes))
     return reduce(and_, preds)
 
-
-def apply(df: DataFrame, **kwargs) -> DataFrame:
-    return df.where(conditions(**kwargs))

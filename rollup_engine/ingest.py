@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import temp_conf
+
 # Persisted 16-bit conversation hash on z-ordered tables.  The Morton
 # layout localizes conv-hash per file, but parquet footers only carry
 # stats for REAL columns — raw conv_id string min/max are useless under
@@ -142,11 +144,9 @@ def write_zorder_table(
     # Spark's legacy INT96 timestamp encoding writes NO min/max stats,
     # which silently disables the row-group pruning this whole layout
     # exists for — force the annotated int64 encoding for this write.
-    spark = df.sparkSession
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
+    with temp_conf(
+        df.sparkSession, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    ):
         (
             z.repartitionByRange(n_files, "_z")
             .sortWithinPartitions("_z")
@@ -154,11 +154,6 @@ def write_zorder_table(
             .write.mode(mode)
             .parquet(path)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def read_zorder_convs(

@@ -185,10 +185,3 @@ class InfluxDbSink:
         with urllib.request.urlopen(req, timeout=10) as resp:
             if not (200 <= resp.status < 300):
                 raise RuntimeError(f"InfluxDB POST failed: {resp.status}")
-
-
-def fan_out(result: RollupResult, renderers: list) -> None:
-    """S9: one computed result, every configured sink
-    (/root/reference/src/main.rs:39-77)."""
-    for r in renderers:
-        r(result)

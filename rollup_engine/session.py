@@ -8,6 +8,8 @@ Defaults chosen for the 100 TB target, not just local tests:
   this is overridden by AQE's coalescing + ``--conf`` at submit time.
 - under spark-submit every setting here is a default: a ``--master``
   or ``--conf`` given at submit time wins (``_submit_conf``).
+- a process that already has a session keeps its settings: a later
+  ``get_spark`` applies only its explicit arguments to it.
 - the generated-code cache holds 1,000 classes, not Spark's default 100.
   The engine's steady state is append → incremental refresh → scrape.
   Under the default, every warm refresh recompiled 118-124 Janino
@@ -28,6 +30,8 @@ Defaults chosen for the 100 TB target, not just local tests:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,8 +65,18 @@ def get_spark(
     spark-submit time and let the submit config win.  Under
     spark-submit every setting here is a default that the submitted
     ``--master`` / ``--conf`` override; explicit arguments override
-    both.
+    both.  On a live session ``getOrCreate`` would apply every builder
+    option to it, re-tuning the session its first caller sized, so only
+    ``shuffle_partitions`` / ``extra_conf`` reach it.
     """
+    from pyspark import SparkContext
+
+    explicit = {}
+    if shuffle_partitions is not None:
+        explicit["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    explicit.update(extra_conf or {})
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.config(map=explicit).getOrCreate()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     launched = _submit_conf()
     if master is None and launched is None:
@@ -116,10 +130,20 @@ def get_spark(
         conf = {k: v for k, v in conf.items() if k not in launched}
     if master is not None:
         conf["spark.master"] = master
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf.update(extra_conf or {})
-    builder = SparkSession.builder
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    conf.update(explicit)
+    return SparkSession.builder.config(map=conf).getOrCreate()
+
+
+@contextmanager
+def temp_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set the runtime SQL conf ``key`` for the block, then restore its
+    previous value (or unset it if it had none)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -17,8 +17,11 @@ Here the same contract runs as a real stream:
     → the batch operators over a window key: ``rollup.metric_aggs``
       per minute, ``tsops.sliding_rollup`` per hopping window,
       ``tsops.minute_errors`` for the burn-rate feed
-    → append-mode sink (parquet/memory/foreachBatch merge into the
-      rollup store)
+    → ``sink_once``: one availableNow pass into an append-mode parquet
+      sink.  A caller composes the pass it needs, e.g.
+      ``sink_once(spark, minute_errors(read_turn_stream(spark, d)
+      .withWatermark("ts", LATENESS)), ckpt, out)``; ``run_stream_once``
+      is the minute rollup composed this way.
 
 State survives restarts through the streaming checkpoint — the
 streaming twin of incremental.py's snapshot checkpoint (pinned by
@@ -38,12 +41,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .rollup import METRIC_COLS, metric_aggs
 from .schema import TRANSCRIPT_SCHEMA
+from .session import temp_conf
 from .transcripts import VALID_TURN
-from .tsops import minute_errors, sliding_rollup
 
 # bounded lateness of every windowed stream: a window is final, and
 # appended, once the watermark (max event time − this) passes its end
-_LATENESS = "10 minutes"
+LATENESS = "10 minutes"
 
 _DELTA_OUT = T.StructType(
     [
@@ -147,7 +150,7 @@ def stream_deltas(turns: DataFrame) -> DataFrame:
 
 
 def stream_minute_rollup(
-    deltas: DataFrame, watermark: str = _LATENESS
+    deltas: DataFrame, watermark: str = LATENESS
 ) -> DataFrame:
     """Watermarked tumbling-minute aggregate over the delta stream: the
     batch rollup's ``metric_aggs`` over a ``window(ts, '1 minute')``
@@ -215,7 +218,7 @@ def stream_session_stats(
     )
 
 
-def _sink_once(
+def sink_once(
     spark: SparkSession, df: DataFrame, checkpoint_dir: str, out_dir: str
 ) -> None:
     """Run ``df`` as one availableNow pass into an append-mode parquet
@@ -231,42 +234,23 @@ def _sink_once(
     5.9 s.  On a real cluster this is the executor-core count — the
     same submit-time knob; new checkpoints pick it up, existing ones
     keep their frozen count (Spark reads it back from the checkpoint).
+    Because it is frozen there, the session's own setting is restored
+    once the pass ends.
     """
-    spark.conf.set(
+    with temp_conf(
+        spark,
         "spark.sql.shuffle.partitions",
         str(spark.sparkContext.defaultParallelism),
-    )
-    (
-        df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_session_stream_once(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    schema: T.StructType,
-    gap_seconds: int = 1800,
-    by: tuple[str, ...] = ("user_id",),
-    max_files: int = 64,
-) -> None:
-    """One availableNow sessionization pass over a file-source event
-    stream; closed sessions append to the parquet sink, open-session
-    state survives in the checkpoint for the next pass."""
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_dir)
-    )
-    sessions = stream_session_stats(events, gap_seconds=gap_seconds, by=by)
-    _sink_once(spark, sessions, checkpoint_dir, out_dir)
+    ):
+        (
+            df.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def read_turn_stream(
@@ -294,44 +278,7 @@ def run_stream_once(
     letting a later file flush earlier windows in the same pass."""
     turns = read_turn_stream(spark, input_dir, max_files=max_files)
     rollup = stream_minute_rollup(stream_deltas(turns))
-    _sink_once(spark, rollup, checkpoint_dir, out_dir)
-
-
-def run_sliding_stream_once(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    length: str = "5 minutes",
-    hop: str = "1 minute",
-    max_files: int = 64,
-) -> None:
-    """One availableNow pass of the hopping-window stream (same file
-    choreography as ``run_stream_once``): the batch ``sliding_rollup``
-    over the watermarked delta stream.  Append mode emits a window once
-    the watermark passes its end."""
-    turns = read_turn_stream(spark, input_dir, max_files=max_files)
-    deltas = stream_deltas(turns).withWatermark("ts", _LATENESS)
-    rollup = sliding_rollup(deltas, "delta_ms", length, hop)
-    _sink_once(spark, rollup, checkpoint_dir, out_dir)
-
-
-def run_burn_stream_once(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    max_files: int = 64,
-) -> None:
-    """One availableNow pass materializing the per-minute error counts
-    (same file choreography as ``run_stream_once``): the batch
-    ``minute_errors`` pre-aggregate over the watermarked raw turn
-    stream — the continuous feed for ``tsops.burn_from_minutes``, so
-    the trailing burn windows read this tiny relation, never raw
-    turns."""
-    turns = read_turn_stream(spark, input_dir, max_files=max_files)
-    counts = minute_errors(turns.withWatermark("ts", _LATENESS))
-    _sink_once(spark, counts, checkpoint_dir, out_dir)
+    sink_once(spark, rollup, checkpoint_dir, out_dir)
 
 
 # ------------------------------------------------ stateful alerting
@@ -427,21 +374,3 @@ def stream_threshold_alerts(
             fn, _ALERT_OUT, _ALERT_STATE, "append", GroupStateTimeout.NoTimeout
         )
     )
-
-
-def run_alert_stream_once(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    enter: int,
-    exit: int,
-    max_files: int = 64,
-) -> None:
-    """One availableNow alerting pass over the transcript file stream;
-    transitions append to the parquet sink, per-conversation alert
-    state survives in the checkpoint for the next pass (no watermark:
-    transitions are final on arrival)."""
-    turns = read_turn_stream(spark, input_dir, max_files=max_files)
-    alerts = stream_threshold_alerts(turns, enter=enter, exit=exit)
-    _sink_once(spark, alerts, checkpoint_dir, out_dir)

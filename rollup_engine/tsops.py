@@ -758,8 +758,8 @@ def sliding_rollup(
     rate, updated every minute").  Uses Spark's native
     ``F.window(ts, length, hop)`` (the same operator Structured
     Streaming uses for hopping aggregations, so this query is
-    stream-portable verbatim: ``streaming.run_sliding_stream_once``
-    runs it over the watermarked delta stream); the expansion is linear
+    stream-portable verbatim: the ``stream_sliding`` gate passes it the
+    watermarked ``streaming.stream_deltas``); the expansion is linear
     in length/hop and the aggregation stays map-side combinable — at
     100 TB the cost is exactly (length/hop) × the tumbling tier, never
     a range join.  All metrics are exact integer folds; the avg is
@@ -1469,10 +1469,11 @@ def minute_errors(
     """Per-minute ``(bucket_start, cnt, err)`` counts: turns, and turns
     whose tool starts with ``err_prefix``.  The one pre-aggregate both
     burn-rate paths read: batch ``burn_rate_alerts`` over raw turns,
-    and the stream (``streaming.run_burn_stream_once``) over the
-    watermarked turn stream.  ``window(ts, '1 minute')`` keys it
-    because a stream needs a window key to finalize buckets in append
-    mode; it also drops NULL-``ts`` turns, which have no minute.
+    and the stream over the watermarked turn stream (the
+    ``stream_burn_rate`` gate runs it through ``streaming.sink_once``).
+    ``window(ts, '1 minute')`` keys it because a stream needs a window
+    key to finalize buckets in append mode; it also drops NULL-``ts``
+    turns, which have no minute.
     """
     return (
         df.groupBy(F.window(F.col(ts_col), "1 minute").alias("_w"))

@@ -90,3 +90,20 @@ def test_incremental_mode_rejects_tiers(tmp_path, capsys):
         main(argv)
     assert exc.value.code == 2
     assert "--tiers" in capsys.readouterr().err
+
+
+def test_get_spark_keeps_live_session_conf(spark):
+    """A second ``get_spark`` in one process (``job.main`` run in-process
+    makes one) returns the live session without re-applying the
+    defaults to it: the fixture's 4 shuffle partitions survive, and only
+    an explicit argument reaches the session."""
+    from rollup_engine.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    assert get_spark("x") is spark
+    assert spark.conf.get(key) == "4"
+    try:
+        get_spark("y", shuffle_partitions=6)
+        assert spark.conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, "4")

@@ -9,7 +9,12 @@ import datetime as dt
 import pytest
 
 from rollup_engine.schema import TRANSCRIPT_SCHEMA
-from rollup_engine.streaming import run_stream_once
+from rollup_engine.streaming import (
+    read_turn_stream,
+    run_stream_once,
+    sink_once,
+    stream_threshold_alerts,
+)
 
 
 def _write_batch(spark, path, rows):
@@ -76,13 +81,35 @@ def test_stream_rollup_and_restart_state(spark, tmp_path):
     # batch-1 results still present, not duplicated
     assert got2["2024-01-01T00:00:00"].turn_count == 3
 
+
+def test_stream_pass_restores_shuffle_partitions(spark, tmp_path):
+    """A stream pass runs with one shuffle partition per core (frozen
+    into its checkpoint) and then restores the session's own setting —
+    7 here, so a pass that leaves local[4]'s 4 behind is caught."""
+    import json
+
+    key = "spark.sql.shuffle.partitions"
+    inp, ckpt = str(tmp_path / "turns"), str(tmp_path / "ckpt")
+    _write_batch(spark, inp, _turns("a", "2024-01-01T00:00:00", [7]))
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        run_stream_once(spark, inp, ckpt, str(tmp_path / "out"))
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+    with open(f"{ckpt}/offsets/0") as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"][key] == str(spark.sparkContext.defaultParallelism)
+
+
 def test_stream_sessionize_restart_state(spark, tmp_path):
     """session_window state survives a restart: a session left OPEN at
     the end of pass 1 absorbs pass-2 events within the gap and emits
     once, merged, when the watermark finally closes it."""
     from pyspark.sql import types as T
 
-    from rollup_engine.streaming import run_session_stream_once
+    from rollup_engine.streaming import stream_session_stats
 
     schema = T.StructType(
         [
@@ -98,15 +125,9 @@ def test_stream_sessionize_restart_state(spark, tmp_path):
         ).parquet(str(tmp_path / "events"))
 
     def _run():
-        run_session_stream_once(
-            spark,
-            str(tmp_path / "events"),
-            str(tmp_path / "ckpt"),
-            str(tmp_path / "out"),
-            schema=schema,
-            gap_seconds=1800,
-            by=("user_id",),
-        )
+        events = spark.readStream.schema(schema).parquet(str(tmp_path / "events"))
+        sessions = stream_session_stats(events, gap_seconds=1800, by=("user_id",))
+        sink_once(spark, sessions, str(tmp_path / "ckpt"), str(tmp_path / "out"))
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     # pass 1: user 1 events at 00:00 and 00:10 — session still open
@@ -143,14 +164,13 @@ def test_stream_alerts_transitions_and_restart(spark, tmp_path):
     60 (hold).  Pass 2 RESTARTS and continues the conversation: the
     checkpointed alert bit + last ts must make delta 30 emit a single
     'clearing' transition — and re-delivered turns must not re-fire."""
-    from rollup_engine.streaming import run_alert_stream_once
-
     inp = str(tmp_path / "turns")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
     _write_batch(spark, inp, _turns("a", "2024-01-01T00:00:00", [10, 150, 60]))
-    run_alert_stream_once(spark, inp, ckpt, out, enter=100, exit=40)
+    alerts = stream_threshold_alerts(read_turn_stream(spark, inp), enter=100, exit=40)
+    sink_once(spark, alerts, ckpt, out)
     got1 = sorted(
         (r.turn_idx, r.delta_ms, r.state, r.direction)
         for r in spark.read.parquet(out).collect()
@@ -168,7 +188,8 @@ def test_stream_alerts_transitions_and_restart(spark, tmp_path):
         ("a", 5, "user", "x", "", t3 + dt.timedelta(milliseconds=230)),
     ]
     _write_batch(spark, inp, cont)
-    run_alert_stream_once(spark, inp, ckpt, out, enter=100, exit=40)
+    alerts = stream_threshold_alerts(read_turn_stream(spark, inp), enter=100, exit=40)
+    sink_once(spark, alerts, ckpt, out)
     got2 = sorted(
         (r.turn_idx, r.delta_ms, r.state, r.direction)
         for r in spark.read.parquet(out).collect()
@@ -184,13 +205,10 @@ def test_stream_alerts_first_observation_above(spark, tmp_path):
     """A conversation whose very first delta is above enter fires
     rising immediately (prev state defaults to 0), matching the batch
     operator's first-row contract."""
-    from rollup_engine.streaming import run_alert_stream_once
-
     inp = str(tmp_path / "turns")
     _write_batch(spark, inp, _turns("b", "2024-01-01T00:00:00", [500, 10]))
-    run_alert_stream_once(
-        spark, inp, str(tmp_path / "c"), str(tmp_path / "o"), enter=100, exit=40
-    )
+    alerts = stream_threshold_alerts(read_turn_stream(spark, inp), enter=100, exit=40)
+    sink_once(spark, alerts, str(tmp_path / "c"), str(tmp_path / "o"))
     got = sorted(
         (r.turn_idx, r.state, r.direction)
         for r in spark.read.parquet(str(tmp_path / "o")).collect()
@@ -247,8 +265,6 @@ def test_stream_null_turn_idx_does_not_fail_the_stream(spark, tmp_path):
     """A turn with NULL turn_idx is dropped by both stateful stream
     operators (the delta rollup and the alert stream) instead of
     failing every pass on the same unprocessed file."""
-    from rollup_engine.streaming import run_alert_stream_once
-
     rows = _conv_with_bad_turn(
         ("a", None, "user", "x", "", dt.datetime(2024, 1, 1, 0, 0, 0, 20_000))
     )
@@ -260,9 +276,8 @@ def test_stream_null_turn_idx_does_not_fail_the_stream(spark, tmp_path):
     assert _minute_bucket(spark, out) == (2, 7, 23)
 
     alerts = str(tmp_path / "alerts")
-    run_alert_stream_once(
-        spark, inp, str(tmp_path / "ackpt"), alerts, enter=20, exit=10
-    )
+    stream = stream_threshold_alerts(read_turn_stream(spark, inp), enter=20, exit=10)
+    sink_once(spark, stream, str(tmp_path / "ackpt"), alerts)
     got = sorted(
         (r.conv_id, r.turn_idx, r.delta_ms, r.direction)
         for r in spark.read.parquet(alerts).collect()
